@@ -25,8 +25,8 @@ parity-full-scale:    ## oracle parity at bench scale (sf0.1) — catches SF-dep
 parity-adversarial:   ## parity at hostile parallelism (3 cpus / 5 partitions) — partition-independence sweep
 	$(TEE) SPARK_GRAFT_TEST_CPUS=3 SPARK_GRAFT_TEST_PARTITIONS=5 python -m pytest tests/test_parity.py -q 2>&1 | tee $(LOGDIR)/parity-adversarial.log
 
-vacuity:         ## DuckDB-only: every oracle non-empty at every SF (seconds, no Spark)
-	$(TEE) python -m pytest tests/test_vacuity.py -q 2>&1 | tee $(LOGDIR)/vacuity.log
+vacuity:         ## DuckDB-only: every oracle non-empty at every SF, sf0.1 included (minutes, no Spark)
+	$(TEE) python -m pytest tests/test_vacuity.py -q -m "" 2>&1 | tee $(LOGDIR)/vacuity.log
 
 preflight: test-full parity-driver-scale parity-adversarial vacuity  ## the end-of-round gate battery (full suite, not the fast tier)
 

@@ -1,45 +1,18 @@
 """Continuous near-duplicate detection (EXT; the streaming twin of
 queries/llm.py's q_dedup_fuzzy MinHash-LSH batch path).
 
-A production corpus is not deduplicated once — documents keep arriving,
-and each new document must be checked against EVERYTHING already
-ingested without rescanning the corpus. This module maintains the
-MinHash-LSH index incrementally: per micro-batch, new documents are
-signed and banded with the SAME helpers the batch query uses
-(minhash_signatures / lsh_bands — one implementation, so incremental ≡
-one-shot holds by construction), probed against the accumulated band
-index for candidates, estimate-pruned on signatures, exact-verified on
-shingle sets, and the surviving pairs land in a keyed StateTable.
-
-Scale shape per micro-batch (corpus N, batch n, N >> n):
-  * sign+band the batch: O(n) map work, no shuffle of the corpus;
-  * candidate probe: batch bands (8n narrow rows) hash-join the band
-    index. With ``band_buckets`` set (the EXECUTED point-lookup swap —
-    VERDICT r7 #3, measured on the binary twin in docs/architecture.md
-    §round-8) the band index is stored in value-derived buckets
-    (hash of the (band, bucket) probe key) and the probe reads ONLY
-    the ≤ min(8n, band_buckets) bucket dirs the batch's band keys map
-    to — probe IO ∝ batch, not corpus. Unset, the probe scans the
-    whole index (one narrow 3-column pass — fine while the index fits
-    a scan budget);
-  * estimate + verify: candidate-pair-sized joins back to the signature
-    state (256 B/doc; bucket-pruned to the candidates' ids when
-    ``bucket_col`` is set) and, for est-survivors only, the shingle
-    sets. Changed-content detection likewise prunes to the BATCH's
-    doc_ids when ``bucket_col`` is set.
-The corpus-sized tables (signatures+shingles, band index) are written
-incrementally via idempotent MERGE keyed on doc_id — replaying a batch
-after a crash converges (same winners, same pairs upserted).
-
-State growing with the corpus is intrinsic to dedup (the index IS the
-memory of what was seen); what stays bounded is the per-batch work.
+The MinHash-LSH definition of the shared banded pair index
+(streaming/banded.py): documents are signed and banded with the SAME
+helpers the batch query uses (minhash_signatures / lsh_bands — one
+implementation, so incremental ≡ one-shot holds by construction),
+probed against the accumulated band index (8n narrow rows per batch),
+estimate-pruned on signatures (256 B/doc) and exact-verified on the
+stored shingle sets (lsh_estimate_verify).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.llm import (
@@ -47,10 +20,10 @@ from ..queries.llm import (
     lsh_estimate_verify,
     minhash_signatures,
 )
-from .cdc import StateTable, changed_ids, retract_pairs
+from .banded import BandedPairIndex, run_pair_index_stream
 
 
-class NearDupIndex:
+class NearDupIndex(BandedPairIndex):
     """Incrementally-maintained MinHash-LSH near-dup index.
 
     Three state tables under ``base_dir``:
@@ -60,270 +33,37 @@ class NearDupIndex:
       * ``pairs`` — (doc_a, doc_b, jaccard): every detected near-dup
                     pair (doc_a < doc_b), exact-verified at ≥
                     JACCARD_OUT.
-    """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_dir: str,
-        bucket_col: F.Column | None = None,
-        n_buckets: int = 16,
-        band_buckets: int | None = None,
-    ):
-        """bucket_col (a bigint expression over doc_id) switches the
-        signature table to BucketedStateTable so a merge rewrites only
-        the batch's buckets instead of O(corpus) parquet per batch — at
-        a real corpus size this is mandatory, and with monotone doc ids
-        a RANGE bucket (floor(doc_id/width)) makes each ingest a
-        one-bucket rewrite (the BucketedStateTable regime notes apply)
-        — and lets the changed-detection and estimate/verify reads
-        prune to the ids they touch.
+    Constructor options (bucket_col over doc_id, n_buckets,
+    band_buckets): see BandedPairIndex."""
 
-        band_buckets switches the BAND index to value-derived buckets
-        (storage bucket = hash of the (band, bucket) probe key): the
-        candidate probe then reads only the batch's band-key buckets —
-        probe IO ∝ batch, not corpus. Trade-offs, sizing rule
-        (band_buckets ≳ 2·bands·batch) and the measured curve are in
-        docs/architecture.md §round-8 (shared with the binary twin,
-        streaming/simdup.py). Cleanup/delete band rows are re-derived
-        from the stored signatures so each tombstone carries the exact
-        old (band, bucket) value and routes to the dir holding the old
-        row. The pairs table stays flat: it is near-dup-count-sized,
-        not corpus-sized."""
-        from .cdc import BucketedStateTable
+    id_col = "doc_id"
+    pair_cols = ("doc_a", "doc_b", "jaccard")
+    value_type = "double"
 
-        self.spark = spark
+    def _sign(self, batch: DataFrame) -> DataFrame:
+        return minhash_signatures(batch.select("doc_id", "text"))
 
-        if bucket_col is None:
-            self.sigs = StateTable(
-                spark, os.path.join(base_dir, "sigs"), ["doc_id"], "seq"
-            )
-        else:
-            self.sigs = BucketedStateTable(
-                spark,
-                os.path.join(base_dir, "sigs"),
-                ["doc_id"],
-                "seq",
-                n_buckets=n_buckets,
-                bucket_col=bucket_col,
-            )
-        if band_buckets is not None:
-            self.bands = BucketedStateTable(
-                spark,
-                os.path.join(base_dir, "bands"),
-                ["doc_id", "band"],
-                "seq",
-                n_buckets=band_buckets,
-                bucket_col=F.pmod(F.xxhash64("band", "bucket"), F.lit(band_buckets)),
-            )
-        elif bucket_col is not None:
-            self.bands = BucketedStateTable(
-                spark,
-                os.path.join(base_dir, "bands"),
-                ["doc_id", "band"],
-                "seq",
-                n_buckets=n_buckets,
-                bucket_col=bucket_col,
-            )
-        else:
-            self.bands = StateTable(
-                spark, os.path.join(base_dir, "bands"), ["doc_id", "band"], "seq"
-            )
-        self._sig_pruned = bucket_col is not None
-        self._band_pruned = band_buckets is not None
-        self.pairs = StateTable(
-            spark, os.path.join(base_dir, "pairs"), ["doc_a", "doc_b"], "seq"
-        )
+    def _band_rows(self, sig: DataFrame) -> DataFrame:
+        return lsh_bands(sig)
 
-    def ingest_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """Sign, index, and near-dup-check one micro-batch of
-        (doc_id, text) rows. Idempotent: replaying a batch merges the
-        same state rows and upserts the same pairs.
-
-        Re-ingesting a doc_id with CHANGED text first RETRACTS every
-        pair the old content produced and DELETES its old band rows
-        (else a doc shrunk below shingling keeps GHOST bands forever),
-        then re-indexes under the new signature (review r7).
-
-        Seq phases (seq = 4·batch_id + phase): 0 = retractions/cleanup,
-        1 = upserts, 2 = compliance deletion (delete_docs) — within a
-        batch a re-detected pair beats its own retraction, and a
-        same-batch-id compliance delete beats the ingest's upserts
-        (the delete-wins contract the state layer documents)."""
-        seq_rm = F.lit(4 * int(batch_id)).cast("bigint")
-        seq = F.lit(4 * int(batch_id) + 1).cast("bigint")
-        sig = minhash_signatures(batch.select("doc_id", "text")).localCheckpoint(
-            eager=True
-        )
-        if not sig.head(1):
-            # empty micro-batch (a heartbeat trigger with no files):
-            # nothing to index, and on a FRESH index the probe below
-            # would read a state table that does not exist yet.
-            return
-        # changed-detection only ever compares the BATCH's ids — with a
-        # bucketed signature table, read just the buckets they map to
-        stored = (
-            self.sigs.read(buckets=self.sigs.buckets_for(sig.select("doc_id")))
-            if self._sig_pruned
-            else self.sigs.read()
-        )
+    def _change_key(self) -> Column:
         # changed content is detected on the SHINGLE SET, not the
         # minhash signature (review r9): this index's pairs carry exact
         # Jaccard over the stored sets, and an edit whose added/removed
         # shingles win none of the k seeded minima leaves the signature
         # identical — a sig-only compare would skip retraction while
-        # the upsert below overwrites 's', leaving pairs whose stored
-        # jaccard no longer matches the stored sets (contrast simdup,
-        # whose pair truth IS a pure function of its signature).
-        # Compared via a 64-bit fingerprint of the sorted set so the
-        # exchange moves 8 bytes per doc instead of whole shingle sets.
-        def _fp(df: DataFrame) -> DataFrame:
-            return df.withColumn("__s_fp", F.xxhash64(F.sort_array(F.col("s"))))
+        # the upsert overwrites 's', leaving pairs whose stored jaccard
+        # no longer matches the stored sets (contrast simdup, whose
+        # pair truth IS a pure function of its signature). Compared via
+        # a 64-bit fingerprint of the sorted set so the exchange moves
+        # 8 bytes per doc instead of whole shingle sets.
+        return F.when(F.size("s") > 0, F.xxhash64(F.sort_array(F.col("s"))))
 
-        changed = changed_ids(
-            _fp(sig),
-            _fp(stored) if stored is not None else None,
-            "doc_id",
-            "__s_fp",
-        )
-        if changed is not None:
-            retract_pairs(
-                self.pairs, changed, "doc_a", "doc_b", "jaccard",
-                4 * int(batch_id),
-            )
-            # clear ALL of the changed docs' OLD band rows, re-derived
-            # from the stored signatures: the new bands upsert below
-            # only covers buckets the NEW text hashes to, a doc shrunk
-            # below shingling emits no bands at all (its stored sig is
-            # null — lsh_bands emits nothing, and it HAD no band rows),
-            # and under value-bucketed band storage the tombstone must
-            # carry the exact old (band, bucket) value to land in the
-            # dir holding the old row
-            old_bands = lsh_bands(
-                stored.join(changed, "doc_id", "left_semi").select("doc_id", "sig")
-            )
-            self.bands.merge_batch(
-                old_bands.withColumn("seq", seq_rm).withColumn("op", F.lit("delete"))
-            )
-        # merge FIRST, then probe the post-merge index: batch-internal
-        # pairs fall out of the same probe join (no separate self-join),
-        # and a replayed batch probes an index it is already in — the
-        # a < b canonicalization keeps each pair single.
-        self.sigs.merge_batch(
-            sig.withColumn("seq", seq).withColumn("op", F.lit("upsert"))
-        )
-        new_bands = lsh_bands(sig).localCheckpoint(eager=True)
-        self.bands.merge_batch(
-            new_bands.withColumn("seq", seq).withColumn("op", F.lit("upsert"))
-        )
-        # the probe: with value-bucketed band storage, read ONLY the
-        # bucket dirs the batch's band keys map to — IO ∝ batch
-        band_state = (
-            self.bands.read(buckets=self.bands.buckets_for(new_bands))
-            if self._band_pruned
-            else self.bands.read()
-        )
-        if band_state is None:
-            # every doc in the first batch was too short to shingle
-            # (lsh_bands drops null signatures), so no band state exists
-            # yet and there is nothing to probe
-            return
-        index = band_state.select("doc_id", "band", "bucket")
-        cand = (
-            new_bands.alias("n")
-            .join(
-                index.alias("i"),
-                (F.col("n.band") == F.col("i.band"))
-                & (F.col("n.bucket") == F.col("i.bucket"))
-                & (F.col("n.doc_id") != F.col("i.doc_id")),
-            )
-            .select(
-                F.least(F.col("n.doc_id"), F.col("i.doc_id")).alias("doc_a"),
-                F.greatest(F.col("n.doc_id"), F.col("i.doc_id")).alias("doc_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        if self._sig_pruned:
-            # estimate/verify touches only the candidates' ids: prune
-            # the signature read to their buckets (candidates
-            # checkpointed first so buckets_for and the verify joins
-            # don't each re-run the probe join)
-            cand = cand.localCheckpoint(eager=True)
-            cand_ids = cand.select(F.col("doc_a").alias("doc_id")).unionByName(
-                cand.select(F.col("doc_b").alias("doc_id"))
-            )
-            sig_state = self.sigs.read(buckets=self.sigs.buckets_for(cand_ids))
-            if sig_state is None:
-                return
-        else:
-            sig_state = self.sigs.read()
+    def _verify(self, cand: DataFrame, sig_state: DataFrame) -> DataFrame:
         # estimate + exact verify: the SAME two-stage helper the batch
         # query uses (one implementation — stream≡batch by construction)
-        detected = (
-            lsh_estimate_verify(cand, sig_state)
-            .withColumn("seq", seq)
-            .withColumn("op", F.lit("upsert"))
-        )
-        self.pairs.merge_batch(detected)
-
-    def delete_docs(self, doc_ids: DataFrame, batch_id: int) -> None:
-        """Compliance deletion (the dedup-index mirror of the retrieval
-        index's delete_from_index): remove the documents' signatures,
-        shingles and band rows — the index must not retain content
-        derived from deleted text — and RETRACT every detected pair
-        that references a deleted doc. Idempotent (seq-keyed delete
-        winners); a later re-ingest of the same doc_id re-detects its
-        pairs. doc_ids: a 1-column (doc_id) frame.
-
-        Band tombstones are re-derived from the ids' STORED signatures
-        (bucket-pruned when the signature table is bucketed) so they
-        route correctly under value-bucketed band storage; bands merge
-        BEFORE sigs, so a crash between them replays with the
-        signatures still present and re-derives the same (idempotent)
-        tombstones."""
-        seq = F.lit(4 * int(batch_id) + 2).cast("bigint")
-        ids = doc_ids.select("doc_id").distinct().localCheckpoint(eager=True)
-        stored = (
-            self.sigs.read(buckets=self.sigs.buckets_for(ids))
-            if self._sig_pruned
-            else self.sigs.read()
-        )
-        if stored is not None:
-            old_bands = lsh_bands(
-                stored.join(ids, "doc_id", "left_semi").select("doc_id", "sig")
-            )
-            self.bands.merge_batch(
-                old_bands.withColumn("seq", seq).withColumn("op", F.lit("delete"))
-            )
-        self.sigs.merge_batch(
-            ids.withColumn("seq", seq).withColumn("op", F.lit("delete"))
-        )
-        retract_pairs(
-            self.pairs, ids, "doc_a", "doc_b", "jaccard", 4 * int(batch_id) + 2
-        )
-
-    def pairs_df(self) -> DataFrame:
-        """All near-dup pairs detected so far (doc_a, doc_b, jaccard)."""
-        cur = self.pairs.read()
-        if cur is None:
-            return self.spark.createDataFrame(
-                [], "doc_a bigint, doc_b bigint, jaccard double"
-            )
-        return cur.select("doc_a", "doc_b", "jaccard")
+        return lsh_estimate_verify(cand, sig_state)
 
 
-def run_neardup_stream(
-    stream: DataFrame, index: NearDupIndex, checkpoint_dir: str
-) -> None:
-    """Wire a (doc_id, text) document stream into the index via
-    foreachBatch; blocks until available data is processed. At-least-
-    once redelivery converges because ingest_batch is idempotent."""
-    (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: index.ingest_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+run_neardup_stream = run_pair_index_stream

@@ -38,18 +38,17 @@ the same discipline as the siblings.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.llm import _dot, assign_cells
-from .cdc import StateTable, changed_ids, retract_pairs
+from .banded import BandedPairIndex, stamp, run_pair_index_stream
+from .cdc import changed_ids
 
 COS_THRESHOLD = 0.8  # q_dedup_embedding's anchor threshold
 
 
-class SemanticDedupIndex:
+class SemanticDedupIndex(BandedPairIndex):
     """Incrementally-maintained cosine near-dup index over embeddings.
 
     State under ``base_dir``:
@@ -62,7 +61,15 @@ class SemanticDedupIndex:
     ``centroids`` is the frozen (centroid_id, cv) frame the index was
     opened with; reopening with different centroids is a re-train and
     warrants a rebuild (append ≡ rebuild only under fixed centroids).
+
+    The delete/retract/pairs half is BandedPairIndex's, with
+    ``members`` as its band index and ``vectors`` (cell_buckets only)
+    as its signature table; the probe and verify are this module's.
     """
+
+    id_col = "vec_id"
+    pair_cols = ("vec_a", "vec_b", "cos")
+    value_type = "double"
 
     def __init__(
         self,
@@ -70,7 +77,7 @@ class SemanticDedupIndex:
         base_dir: str,
         centroids: DataFrame,
         cell_buckets: bool = False,
-        bucket_col: F.Column | None = None,
+        bucket_col: Column | None = None,
         n_buckets: int = 16,
     ):
         """cell_buckets=True switches to the scale layout (see module
@@ -80,47 +87,25 @@ class SemanticDedupIndex:
         bucketed when ``bucket_col`` (a bigint expression over vec_id)
         is given. The flat layout keeps the original two-table state —
         existing state dirs stay readable."""
-        from .cdc import BucketedStateTable
-
         self.spark = spark
         self.centroids = centroids.select("centroid_id", "cv").localCheckpoint(
             eager=True
         )
         self.cell_buckets = cell_buckets
-        self._vec_pruned = bucket_col is not None
+        self._sig_pruned = bucket_col is not None
+        members = ["vec_id", "centroid_id"]
         if cell_buckets:
-            self.members = BucketedStateTable(
-                spark,
-                os.path.join(base_dir, "members"),
-                ["vec_id", "centroid_id"],
-                "seq",
-                n_buckets=self.centroids.count(),
-                bucket_col=F.col("centroid_id").cast("bigint"),
+            self.members = self._table(
+                base_dir, "members", members, self.centroids.count(),
+                F.col("centroid_id").cast("bigint"),
             )
-            if bucket_col is not None:
-                self.vectors = BucketedStateTable(
-                    spark,
-                    os.path.join(base_dir, "vectors"),
-                    ["vec_id"],
-                    "seq",
-                    n_buckets=n_buckets,
-                    bucket_col=bucket_col,
-                )
-            else:
-                self.vectors = StateTable(
-                    spark, os.path.join(base_dir, "vectors"), ["vec_id"], "seq"
-                )
+            self.sigs = self._table(base_dir, "vectors", ["vec_id"], n_buckets, bucket_col)
         else:
-            self.members = StateTable(
-                spark,
-                os.path.join(base_dir, "members"),
-                ["vec_id", "centroid_id"],
-                "seq",
-            )
-            self.vectors = None
-        self.pairs = StateTable(
-            spark, os.path.join(base_dir, "pairs"), ["vec_a", "vec_b"], "seq"
-        )
+            self.members = self._table(base_dir, "members", members)
+            self.sigs = None
+        self.bands = self.members
+        self.vectors = self.sigs
+        self.pairs = self._table(base_dir, "pairs", ["vec_a", "vec_b"])
 
     def _assign(self, vecs: DataFrame) -> DataFrame:
         """(vec_id, v) → top-2 cells per vector against the frozen
@@ -136,6 +121,21 @@ class SemanticDedupIndex:
             "vec_id", "v", "centroid_id"
         )
 
+    def _band_rows(self, stored: DataFrame) -> DataFrame:
+        # the frozen-centroid invariant makes re-assignment exact: the
+        # old cells of a stored vector, routed to the dirs holding them
+        return self._assign(stored.select("vec_id", "v"))
+
+    def _stored(self, ids: DataFrame) -> DataFrame | None:
+        # the flat layout has no vectors table: members carry v
+        return super()._stored(ids) if self.cell_buckets else self.members.read()
+
+    def _old_bands(self, ids: DataFrame, stored: DataFrame | None) -> DataFrame | None:
+        if self.cell_buckets:
+            return super()._old_bands(ids, stored)
+        # flat members are not stored by cell value: tombstone every cell
+        return ids.crossJoin(self.centroids.select("centroid_id"))
+
     def ingest_batch(self, batch: DataFrame, batch_id: int) -> None:
         """Assign, index, and near-dup-check one micro-batch of
         (vec_id, v) rows. Idempotent under replay (seq-keyed merges,
@@ -148,63 +148,20 @@ class SemanticDedupIndex:
         its old cells, where later vectors could mint pairs against a
         retracted embedding at winning seqs (review r7, second pass).
 
-        Seq phases (seq = 4·batch_id + phase): 0 = retractions/cleanup,
-        1 = upserts, 2 = compliance deletion (delete_vecs) — a changed
-        vector that still pairs with the same partner beats its own
-        retraction, and a same-batch-id compliance delete beats the
-        ingest's upserts (the delete-wins contract)."""
-        seq_rm = F.lit(4 * int(batch_id)).cast("bigint")
-        seq = F.lit(4 * int(batch_id) + 1).cast("bigint")
+        Seq phases as in BandedPairIndex."""
+        seq_rm, seq = 4 * int(batch_id), 4 * int(batch_id) + 1
         vecs = batch.select("vec_id", "v").localCheckpoint(eager=True)
         assigned = self._assign(vecs).localCheckpoint(eager=True)
         if not assigned.head(1):
             return
-        if self.cell_buckets:
-            # changed-detection against the vec_id-keyed vectors table,
-            # pruned to the batch's ids when it is bucketed
-            stored = (
-                self.vectors.read(
-                    buckets=self.vectors.buckets_for(vecs.select("vec_id"))
-                )
-                if self._vec_pruned
-                else self.vectors.read()
-            )
-            changed = changed_ids(vecs, stored, "vec_id", "v")
-        else:
-            stored = None
-            changed = changed_ids(assigned, self.members.read(), "vec_id", "v")
+        # changed-detection pruned to the batch's ids when bucketed
+        stored = self._stored(vecs.select("vec_id"))
+        changed = changed_ids(vecs, stored, "vec_id", "v")
         if changed is not None:
-            retract_pairs(
-                self.pairs, changed, "vec_a", "vec_b", "cos",
-                4 * int(batch_id),
-            )
-            if self.cell_buckets:
-                # old member rows re-derived by re-assigning the STORED
-                # vector against the frozen centroids — exact old cells,
-                # routed to the dirs holding the old rows; members
-                # cleanup BEFORE the vectors upsert (crash replays into
-                # a still-detectable changed state)
-                old_members = self._assign(
-                    stored.join(changed, "vec_id", "left_semi").select("vec_id", "v")
-                )
-                self.members.merge_batch(
-                    old_members.withColumn("seq", seq_rm).withColumn(
-                        "op", F.lit("delete")
-                    )
-                )
-            else:
-                self.members.merge_batch(
-                    changed.crossJoin(self.centroids.select("centroid_id"))
-                    .withColumn("seq", seq_rm)
-                    .withColumn("op", F.lit("delete"))
-                )
-        if self.cell_buckets:
-            self.vectors.merge_batch(
-                vecs.withColumn("seq", seq).withColumn("op", F.lit("upsert"))
-            )
-        self.members.merge_batch(
-            assigned.withColumn("seq", seq).withColumn("op", F.lit("upsert"))
-        )
+            self._retire(changed, stored, seq_rm)
+        if self.vectors is not None:
+            self.vectors.merge_batch(stamp(vecs, seq, "upsert"))
+        self.members.merge_batch(stamp(assigned, seq, "upsert"))
         # the probe: with cell-bucketed members, read ONLY the cells the
         # batch's vectors were assigned to — IO ∝ touched cells
         state = (
@@ -243,74 +200,12 @@ class SemanticDedupIndex:
             .dropDuplicates(["vec_a", "vec_b"])
             .filter(F.col("c") >= COS_THRESHOLD)
             .select("vec_a", "vec_b", F.round("c", 4).alias("cos"))
-            .withColumn("seq", seq)
-            .withColumn("op", F.lit("upsert"))
         )
-        self.pairs.merge_batch(detected)
+        self._merge_pairs(detected, seq)
 
-    def delete_vecs(self, vec_ids: DataFrame, batch_id: int) -> None:
-        """Compliance deletion — mirrors NearDupIndex.delete_docs: the
-        vectors leave the member state (both their cells) and every
-        pair referencing them retracts; idempotent, and a later
-        re-ingest re-detects. vec_ids: a 1-column (vec_id) frame.
-
-        Under cell_buckets the member tombstones are re-derived by
-        re-assigning the ids' STORED vectors (exact old cells, routed
-        correctly); members merge before vectors, so a crash between
-        them replays with the vectors still present and re-derives the
-        same tombstones."""
-        seq = F.lit(4 * int(batch_id) + 2).cast("bigint")
-        ids = vec_ids.select("vec_id").distinct().localCheckpoint(eager=True)
-        if self.cell_buckets:
-            stored = (
-                self.vectors.read(buckets=self.vectors.buckets_for(ids))
-                if self._vec_pruned
-                else self.vectors.read()
-            )
-            if stored is not None:
-                old_members = self._assign(
-                    stored.join(ids, "vec_id", "left_semi").select("vec_id", "v")
-                )
-                self.members.merge_batch(
-                    old_members.withColumn("seq", seq).withColumn(
-                        "op", F.lit("delete")
-                    )
-                )
-            self.vectors.merge_batch(
-                ids.withColumn("seq", seq).withColumn("op", F.lit("delete"))
-            )
-        else:
-            self.members.merge_batch(
-                ids.crossJoin(self.centroids.select("centroid_id"))
-                .withColumn("seq", seq)
-                .withColumn("op", F.lit("delete"))
-            )
-        retract_pairs(
-            self.pairs, ids, "vec_a", "vec_b", "cos", 4 * int(batch_id) + 2
-        )
-
-    def pairs_df(self) -> DataFrame:
-        cur = self.pairs.read()
-        if cur is None:
-            return self.spark.createDataFrame(
-                [], "vec_a bigint, vec_b bigint, cos double"
-            )
-        return cur.select("vec_a", "vec_b", "cos")
+    # compliance deletion: both cells leave members, the vector leaves
+    # vectors, every pair referencing it retracts (BandedPairIndex)
+    delete_vecs = BandedPairIndex.delete_docs
 
 
-def run_semdedup_stream(
-    stream: DataFrame, index: SemanticDedupIndex, checkpoint_dir: str
-) -> None:
-    """Wire a (vec_id, v) embedding stream into the index via
-    foreachBatch; blocks until available data is processed. At-least-
-    once redelivery converges because ingest_batch is idempotent —
-    the same contract as run_neardup_stream/run_simdup_stream."""
-    (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: index.ingest_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+run_semdedup_stream = run_pair_index_stream

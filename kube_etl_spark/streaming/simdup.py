@@ -3,36 +3,14 @@ of queries/mediaq.py's q_media_neardup byte-shingle SimHash screen —
 and the fourth incremental dedup index, beside the MinHash-LSH, the
 semantic, and the substring indexes).
 
-A media corpus is not screened once — payloads keep arriving (re-crawls,
-re-encodes), and each new payload must be checked against EVERYTHING
-already ingested without rescanning the corpus. This module maintains
-the SimHash band index incrementally with the SAME signature and
-band-key code the batch query uses (media.simhash_signatures /
-media.SIMHASH_BAND_SQL — one implementation, so incremental ≡ one-shot
-holds by construction; the signature width/banding/threshold constants
-are the measured choices in docs/architecture.md §round-7b).
-
-Scale shape per micro-batch (corpus N, batch n, N >> n):
-  * sign the batch: O(n) map work over the payload bytes — the corpus
-    is never rescanned and the payloads never shuffle;
-  * candidate probe: batch band rows (4n narrow rows) hash-join the
-    band index. With ``band_buckets`` set (VERDICT r7 #3 — the
-    point-lookup swap, now EXECUTED code), the band index is stored in
-    value-derived buckets (hash of the (band, bucket) probe key) and
-    the probe reads ONLY the ≤ min(4n, band_buckets) bucket dirs the
-    batch's band keys map to — probe IO ∝ batch, not corpus (measured:
-    docs/architecture.md §round-8). Unset, the probe reads the whole
-    index (fine for test-scale corpora; the flat read is the only
-    corpus-sized pass);
-  * verdict: candidate-pair-sized join back to the signature state
-    (8 B/payload, bucket-pruned to the candidates' ids when
-    ``bucket_col`` is set), Hamming via one bit_count(xor) per pair;
-  * changed-content detection: bucket-pruned to the BATCH's media_ids
-    when ``bucket_col`` is set (only the batch's ids can have changed).
-All state is written via idempotent MERGE keyed on media_id (winner by
-seq), so at-least-once redelivery converges — replaying a batch probes
-an index it is already in, and a < b canonicalization keeps each pair
-single.
+The SimHash definition of the shared banded pair index
+(streaming/banded.py), with the SAME signature and band-key code the
+batch query uses (media.simhash_signatures / media.SIMHASH_BAND_SQL —
+one implementation, so incremental ≡ one-shot holds by construction;
+the signature width/banding/threshold constants are the measured
+choices in docs/architecture.md §round-7b). Per batch: 4n narrow band
+rows probe the index, and the verdict is one bit_count(xor) per
+candidate pair against the 8-byte stored signatures.
 
 Unlike the text NearDupIndex (which retains shingle sets for its
 exact-verify tier), this index retains NOTHING content-derived beyond
@@ -45,14 +23,14 @@ candidate-pair-sized cost (measured: docs/architecture.md §round-7c).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..media import SIMHASH_BAND_SQL, simhash_signatures
-from .cdc import StateTable, changed_ids, retract_pairs
+from .banded import BandedPairIndex, run_pair_index_stream
 
 
-class SimDupIndex:
+class SimDupIndex(BandedPairIndex):
     """Incrementally-maintained binary SimHash near-dup index.
 
     Three state tables under ``base_dir``:
@@ -62,81 +40,31 @@ class SimDupIndex:
                     (lo/hi/even/odd 16-bit views);
       * ``pairs`` — (media_a, media_b, hamming): every detected pair
                     (media_a < media_b) at Hamming ≤ ``hamming_max``.
-    """
+
+    Other constructor options (bucket_col over media_id, n_buckets,
+    band_buckets): see BandedPairIndex."""
+
+    id_col = "media_id"
+    pair_cols = ("media_a", "media_b", "hamming")
+    value_type = "bigint"
 
     def __init__(
         self,
         spark: SparkSession,
         base_dir: str,
         hamming_max: int = 4,
-        bucket_col: F.Column | None = None,
+        bucket_col: Column | None = None,
         n_buckets: int = 16,
         band_buckets: int | None = None,
     ):
-        """bucket_col (a bigint expression over media_id) switches the
-        signature table to BucketedStateTable so a merge rewrites only
-        the batch's buckets instead of O(corpus) parquet per batch —
-        with monotone media ids a RANGE bucket (floor(media_id/width))
-        makes each ingest a one-bucket rewrite (the measured
-        BucketedStateTable regime notes apply) — and lets the
-        changed-detection and verdict reads prune to the ids they
-        touch.
-
-        band_buckets switches the BAND index to value-derived buckets:
-        storage bucket = hash of the (band, bucket) PROBE key, so the
-        candidate probe reads only the batch's band-key buckets
-        (BucketedStateTable.read(buckets=...)) — probe IO ∝ batch, not
-        corpus. The write-side trade: a batch's band rows scatter
-        across ≤ min(4n, band_buckets) dirs instead of the media-id
-        bucketing's locality, so per-batch merge+probe IO is
-        ~2·(4n/band_buckets)·corpus — a net win over the flat layout's
-        O(corpus) probe whenever band_buckets ≳ 8·batch (size it from
-        the trickle rate; docs/architecture.md §round-8 has the
-        measured curve). Cleanup/delete rows are derived from the
-        STORED signatures so they carry the exact old (band, bucket)
-        value and route to the dirs holding the old rows; band cleanup
-        merges BEFORE signature tombstones, so a crash between them
-        replays into a still-detectable changed state (no ghost-row
-        window). The pairs table stays flat: near-dup-count-sized, not
-        corpus-sized."""
-        from .cdc import BucketedStateTable
-
-        self.spark = spark
+        super().__init__(spark, base_dir, bucket_col, n_buckets, band_buckets)
         self.hamming_max = hamming_max
-        base = base_dir.rstrip("/")
-        if bucket_col is not None:
-            self.sigs = BucketedStateTable(
-                spark, f"{base}/sigs", ["media_id"], "seq", n_buckets, bucket_col
-            )
-        else:
-            self.sigs = StateTable(spark, f"{base}/sigs", ["media_id"], "seq")
-        if band_buckets is not None:
-            self.bands = BucketedStateTable(
-                spark,
-                f"{base}/bands",
-                ["media_id", "band"],
-                "seq",
-                band_buckets,
-                F.pmod(F.xxhash64("band", "bucket"), F.lit(band_buckets)),
-            )
-        elif bucket_col is not None:
-            self.bands = BucketedStateTable(
-                spark,
-                f"{base}/bands",
-                ["media_id", "band"],
-                "seq",
-                n_buckets,
-                bucket_col,
-            )
-        else:
-            self.bands = StateTable(
-                spark, f"{base}/bands", ["media_id", "band"], "seq"
-            )
-        self._band_pruned = band_buckets is not None
-        self._sig_pruned = bucket_col is not None
-        self.pairs = StateTable(
-            spark, f"{base}/pairs", ["media_a", "media_b"], "seq"
-        )
+
+    def _sign(self, batch: DataFrame) -> DataFrame:
+        # payloads under one shingle have no signature: keep their ids
+        # with a NULL sig so a re-crawl to an error page leaves the index
+        sig = simhash_signatures(batch.select("media_id", "payload"))
+        return batch.select("media_id").distinct().join(sig, "media_id", "left")
 
     def _band_rows(self, sig: DataFrame) -> DataFrame:
         rows = None
@@ -149,133 +77,13 @@ class SimDupIndex:
             rows = r if rows is None else rows.unionByName(r)
         return rows
 
-    def ingest_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """Sign, index, and near-dup-check one micro-batch of
-        (media_id, payload) rows. Idempotent: replaying a batch merges
-        the same state rows and upserts the same pairs.
+    def _change_key(self) -> Column:
+        # the pair truth IS a pure function of the signature
+        return F.col("sig")
 
-        Re-ingesting an id with CHANGED bytes (the re-crawl/re-encode
-        case) first RETRACTS the pairs its old content produced and
-        DELETES all its old index rows, then re-indexes under the new
-        signature — without this, stale pairs and ghost band rows
-        survive a re-crawl forever (review r7). A payload re-crawled to
-        under one shingle (no signature at all) is treated as leaving
-        the index: its signature, band rows, and pairs go too. The old
-        band rows are RE-DERIVED from the stored signatures (not
-        enumerated by band id), so each delete carries the exact old
-        (band, bucket) value — under value-bucketed band storage the
-        tombstone must land in the dir holding the old row — and band
-        cleanup merges BEFORE the signature tombstone: a crash between
-        the two replays into a state where the change is still
-        detectable, so the cleanup re-runs instead of ghosting.
-
-        Seq phases (seq = 4·batch_id + phase): 0 = retractions/cleanup,
-        1 = upserts, 2 = compliance deletion (delete_docs). Within a
-        batch, re-detected pairs must beat their own retraction (state
-        merges break same-seq ties toward delete); ACROSS the same
-        batch id, a compliance delete must beat the ingest's upserts —
-        the delete-wins contract the state layer documents."""
-        seq_rm = F.lit(4 * int(batch_id)).cast("bigint")
-        seq_up = F.lit(4 * int(batch_id) + 1).cast("bigint")
-        sig = simhash_signatures(batch.select("media_id", "payload")).localCheckpoint(
-            eager=True
-        )
-        # changed-detection only ever compares the BATCH's ids — with a
-        # bucketed signature table, read just the buckets they map to
-        stored = (
-            self.sigs.read(buckets=self.sigs.buckets_for(batch.select("media_id")))
-            if self._sig_pruned
-            else self.sigs.read()
-        )
-        if stored is None and not sig.head(1):
-            # fresh index (or no stored rows for these ids) and nothing
-            # signable: nothing to do
-            return
-        if stored is not None:
-            # ids whose signature changed, plus ids in the batch with
-            # NO signature anymore (payload shrank under one shingle —
-            # absent from `sig`, so a plain join would miss them)
-            shrunk = (
-                batch.select("media_id")
-                .distinct()
-                .join(sig.select("media_id"), "media_id", "left_anti")
-                .join(stored.select("media_id"), "media_id", "left_semi")
-            )
-            ch = changed_ids(sig, stored, "media_id", "sig")
-            dead = (
-                shrunk if ch is None else ch.unionByName(shrunk)
-            ).distinct().localCheckpoint(eager=True)
-            if dead.head(1):
-                retract_pairs(
-                    self.pairs, dead, "media_a", "media_b", "hamming",
-                    4 * int(batch_id),
-                )
-                # old band rows re-derived from the stored signatures:
-                # exact (band, bucket) routing; bands BEFORE sigs (see
-                # docstring's crash-window argument)
-                old_bands = self._band_rows(
-                    stored.join(dead, "media_id", "left_semi").select(
-                        "media_id", "sig"
-                    )
-                )
-                self.bands.merge_batch(
-                    old_bands.withColumn("seq", seq_rm).withColumn(
-                        "op", F.lit("delete")
-                    )
-                )
-                self.sigs.merge_batch(
-                    dead.withColumn("seq", seq_rm).withColumn("op", F.lit("delete"))
-                )
-        if not sig.head(1):
-            return
-        # merge FIRST, then probe the post-merge index: batch-internal
-        # pairs fall out of the same probe join (no separate self-join),
-        # and a replayed batch probes an index it is already in — the
-        # a < b canonicalization keeps each pair single
-        self.sigs.merge_batch(
-            sig.withColumn("seq", seq_up).withColumn("op", F.lit("upsert"))
-        )
-        new_bands = self._band_rows(sig).localCheckpoint(eager=True)
-        self.bands.merge_batch(
-            new_bands.withColumn("seq", seq_up).withColumn("op", F.lit("upsert"))
-        )
-        # the probe: with value-bucketed band storage, read ONLY the
-        # bucket dirs the batch's band keys map to — IO ∝ batch
-        index = (
-            self.bands.read(buckets=self.bands.buckets_for(new_bands))
-            if self._band_pruned
-            else self.bands.read()
-        ).select("media_id", "band", "bucket")
-        cand = (
-            new_bands.alias("n")
-            .join(
-                index.alias("i"),
-                (F.col("n.band") == F.col("i.band"))
-                & (F.col("n.bucket") == F.col("i.bucket"))
-                & (F.col("n.media_id") != F.col("i.media_id")),
-            )
-            .select(
-                F.least(F.col("n.media_id"), F.col("i.media_id")).alias("media_a"),
-                F.greatest(F.col("n.media_id"), F.col("i.media_id")).alias("media_b"),
-            )
-            .dropDuplicates(["media_a", "media_b"])
-        )
-        if self._sig_pruned:
-            # the verdict join touches only the candidates' ids: prune
-            # the signature read to their buckets (candidates are
-            # checkpointed first — buckets_for and both verdict joins
-            # would otherwise each re-run the probe join)
-            cand = cand.localCheckpoint(eager=True)
-            cand_ids = cand.select(
-                F.col("media_a").alias("media_id")
-            ).unionByName(cand.select(F.col("media_b").alias("media_id")))
-            sigs = self.sigs.read(buckets=self.sigs.buckets_for(cand_ids))
-            if sigs is None:
-                return
-            sigs = sigs.select("media_id", "sig")
-        else:
-            sigs = self.sigs.read().select("media_id", "sig")
-        detected = (
+    def _verify(self, cand: DataFrame, sig_state: DataFrame) -> DataFrame:
+        sigs = sig_state.select("media_id", "sig")
+        return (
             cand.join(
                 sigs.select(
                     F.col("media_id").alias("media_a"), F.col("sig").alias("sa")
@@ -291,80 +99,7 @@ class SimDupIndex:
             .withColumn("hamming", F.expr("CAST(bit_count(sa ^ sb) AS BIGINT)"))
             .filter(F.col("hamming") <= self.hamming_max)
             .select("media_a", "media_b", "hamming")
-            .withColumn("seq", seq_up)
-            .withColumn("op", F.lit("upsert"))
-        )
-        self.pairs.merge_batch(detected)
-
-    def delete_docs(self, media_ids: DataFrame, batch_id: int) -> None:
-        """Compliance deletion: remove the payloads' signatures and band
-        rows — the index must not retain content-derived state for
-        deleted media — and RETRACT every detected pair referencing a
-        deleted id. Idempotent (seq-keyed delete winners), and stamped
-        at phase 2 of the same batch id so a delete in the SAME
-        micro-batch as an ingest of the id wins (the delete-wins
-        contract); a later re-ingest of the same media_id (higher batch
-        id) re-detects its pairs. media_ids: a 1-column (media_id)
-        frame.
-
-        The band tombstones are derived from the ids' STORED signatures
-        (bucket-pruned when the signature table is bucketed), so they
-        carry the exact (band, bucket) value and route correctly under
-        value-bucketed band storage. Order: bands first, then sigs,
-        then pairs — a crash after the band merge replays with the
-        signatures still present, re-deriving the same (idempotent)
-        tombstones; a crash after the sig merge replays with the band
-        rows already gone (consistent) and still retracts the pairs."""
-        seq = F.lit(4 * int(batch_id) + 2).cast("bigint")
-        ids = media_ids.select("media_id").distinct().localCheckpoint(eager=True)
-        stored = (
-            self.sigs.read(buckets=self.sigs.buckets_for(ids))
-            if self._sig_pruned
-            else self.sigs.read()
-        )
-        if stored is not None:
-            old_bands = self._band_rows(
-                stored.join(ids, "media_id", "left_semi").select("media_id", "sig")
-            )
-            self.bands.merge_batch(
-                old_bands.withColumn("seq", seq).withColumn("op", F.lit("delete"))
-            )
-        self.sigs.merge_batch(
-            ids.withColumn("seq", seq).withColumn("op", F.lit("delete"))
-        )
-        retract_pairs(
-            self.pairs, ids, "media_a", "media_b", "hamming",
-            4 * int(batch_id) + 2,
-        )
-
-    def pairs_df(self) -> DataFrame:
-        """All detected pairs so far (media_a, media_b, hamming) — the
-        same columns q_media_neardup's batch screen emits."""
-        cur = self.pairs.read()
-        if cur is None:
-            return self.spark.createDataFrame(
-                [], "media_a bigint, media_b bigint, hamming bigint"
-            )
-        # cast normalizes LEGACY state dirs whose hamming was written
-        # as double by earlier builds (merge unions widen new bigint
-        # rows back to double there); fresh state is bigint end-to-end
-        return cur.select(
-            "media_a", "media_b", F.col("hamming").cast("bigint").alias("hamming")
         )
 
 
-def run_simdup_stream(
-    stream: DataFrame, index: SimDupIndex, checkpoint_dir: str
-) -> None:
-    """Wire a (media_id, payload) stream into the index via
-    foreachBatch; blocks until available data is processed. At-least-
-    once redelivery converges because ingest_batch is idempotent."""
-    (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: index.ingest_batch(batch, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+run_simdup_stream = run_pair_index_stream

@@ -368,14 +368,17 @@ def sync_to_destinations(
     continues with the next rule (:479-484, 535-537).
 
     Returns (written, skipped): destination per synced syncer_name, and
-    skip reason per unroutable one. The compiled changes are persisted
-    for the duration of the fan-out so the broadcast join + projection
-    compute once, not once per destination."""
+    skip reason per unroutable one. Each destination takes ONE merge
+    of all its syncers' changes (pull syncers share the local one, and
+    a merge rewrites the destination's state). The compiled changes
+    are persisted for the duration of the fan-out so the broadcast
+    join + projection compute once, not once per destination."""
     routes = syncer_routes(rules)
     changes = changes.persist()
     try:
         written: dict[str, object] = {}
         skipped: dict[str, str] = {}
+        by_dest: dict[int, tuple[object, list[str]]] = {}
         for row in changes.select("syncer_name").distinct().collect():
             name = row["syncer_name"]
             mode, ns, secret = routes[name]
@@ -394,6 +397,9 @@ def sync_to_destinations(
                     continue
             else:
                 dest = local_dest
+            by_dest.setdefault(id(dest), (dest, []))[1].append(name)
+            written[name] = dest
+        for dest, names in by_dest.values():
             # a manager-aware destination (StateTable(manager_col=
             # "syncer_name") — the managedFields analog, r12) consumes
             # the syncer identity as the field MANAGER instead of
@@ -403,9 +409,8 @@ def sync_to_destinations(
             keep_mgr = getattr(dest, "manager_col", None)
             drops = [c for c in ("syncer_name", "mode") if c != keep_mgr]
             dest.merge_batch(
-                changes.filter(F.col("syncer_name") == name).drop(*drops)
+                changes.filter(F.col("syncer_name").isin(names)).drop(*drops)
             )
-            written[name] = dest
         return written, skipped
     finally:
         changes.unpersist()

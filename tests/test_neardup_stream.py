@@ -2,9 +2,13 @@
 MinHash-LSH index (streaming/neardup.py) must converge to EXACTLY the
 batch q_dedup_fuzzy pair set when the same corpus arrives as a stream —
 incremental ≡ one-shot, the dedup analog of the MaterializedJoin
-convergence tests — and replaying a micro-batch must be a no-op."""
+convergence tests — and replaying a micro-batch must be a no-op. The
+behaviour the MinHash and SimHash indexes share (streaming/banded.py)
+is tested once per index through the ``kind`` fixture."""
 
 from __future__ import annotations
+
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +16,7 @@ from pyspark.sql import functions as F
 from kube_etl_spark.queries.llm import _neardup_corpus
 from kube_etl_spark.registry import all_specs
 from kube_etl_spark.streaming.neardup import NearDupIndex, run_neardup_stream
+from kube_etl_spark.streaming.simdup import SimDupIndex
 from kube_etl_spark.streaming.sources import chunked_file_stream
 
 from .conftest import SMOKE_SF
@@ -45,27 +50,192 @@ def test_streamed_corpus_matches_batch_lsh(spark, tmp_path):
     assert streamed == batch
 
 
-def test_replayed_batch_is_noop(spark, tmp_path):
+# -- shared behaviour of the banded pair indexes (streaming/banded.py):
+# every test below runs once per index definition
+
+
+def _simdup_truth(spark):
+    return {
+        (r["media_a"], r["media_b"]): r["hamming"]
+        for r in all_specs()["q_media_neardup"].fn(spark, SMOKE_SF).collect()
+    }
+
+
+def _simdup_row(spark, media_id, text):
+    return spark.createDataFrame(
+        [(media_id, text)], "media_id long, t string"
+    ).select("media_id", F.encode("t", "utf-8").alias("payload"))
+
+
+_KINDS = {
+    # index class, corpus, id column, first id of the planted copies,
+    # one-item frame from text, the one-shot batch pair truth
+    "neardup": (
+        NearDupIndex,
+        lambda spark: _neardup_corpus(spark, SMOKE_SF, limit=10**9),
+        "doc_id",
+        200000,
+        lambda spark, i, text: spark.createDataFrame(
+            [(i, text)], "doc_id long, text string"
+        ),
+        _batch_pairs,
+    ),
+    "simdup": (
+        SimDupIndex,
+        lambda spark: _simdup_corpus(spark),
+        "media_id",
+        100000,
+        _simdup_row,
+        _simdup_truth,
+    ),
+}
+
+
+@pytest.fixture(params=sorted(_KINDS))
+def kind(request, spark, tmp_path):
+    cls, corpus, id_col, copies_from, row, truth = _KINDS[request.param]
+    return SimpleNamespace(
+        name=request.param,
+        make=lambda name="state": cls(spark, str(tmp_path / name)),
+        corpus=corpus(spark).localCheckpoint(eager=True),
+        id=id_col,
+        copies_from=copies_from,
+        row=lambda i, text: row(spark, i, text),
+        truth=lambda: truth(spark),
+    )
+
+
+def _pairs(index) -> dict:
+    return {(r[0], r[1]): r[2] for r in index.pairs_df().collect()}
+
+
+def _ids(table, id_col) -> set:
+    return {r[0] for r in table.read().select(id_col).collect()}
+
+
+def test_replayed_batch_is_noop(kind):
     """At-least-once delivery: ingesting the same micro-batch twice
-    leaves every state table (pairs included) unchanged."""
-    corpus = _neardup_corpus(spark, SMOKE_SF, limit=10**9)
-    first = corpus.filter(F.col("doc_id") < 60)
-    second = corpus.filter(F.col("doc_id") >= 60)
-    index = NearDupIndex(spark, str(tmp_path / "state"))
+    leaves every state table (pairs included) unchanged, and the
+    converged pair set equals the one-shot batch result."""
+    first = kind.corpus.filter(F.col(kind.id) < kind.copies_from)
+    second = kind.corpus.filter(F.col(kind.id) >= kind.copies_from)
+    index = kind.make()
     index.ingest_batch(first, 0)
     index.ingest_batch(second, 1)
-    pairs_before = sorted(
-        (r["doc_a"], r["doc_b"], r["jaccard"]) for r in index.pairs_df().collect()
-    )
-    n_sigs = index.sigs.read().count()
+    pairs_before = _pairs(index)
+    n_sigs, n_bands = index.sigs.read().count(), index.bands.read().count()
     index.ingest_batch(second, 1)  # redelivery of the last batch
-    pairs_after = sorted(
-        (r["doc_a"], r["doc_b"], r["jaccard"]) for r in index.pairs_df().collect()
-    )
-    assert pairs_after == pairs_before
+    assert _pairs(index) == pairs_before == kind.truth()
     assert index.sigs.read().count() == n_sigs
-    # and the converged pair set still equals the one-shot batch result
-    assert {(a, b): j for a, b, j in pairs_after} == _batch_pairs(spark)
+    assert index.bands.read().count() == n_bands
+
+
+def test_empty_batch_is_harmless(kind):
+    """An empty micro-batch (heartbeat trigger with no files) must be a
+    no-op on a fresh index AND between real batches — not a crash on
+    the missing state table or a pointless full-state rewrite."""
+    empty = kind.corpus.filter(F.lit(False))
+    index = kind.make()
+    index.ingest_batch(empty, 0)  # fresh index: must not crash
+    assert index.sigs.read() is None
+    index.ingest_batch(kind.corpus, 1)
+    before = _pairs(index)
+    index.ingest_batch(empty, 2)
+    assert _pairs(index) == before == kind.truth()
+
+
+def test_changed_content_retracts_stale_pairs(kind):
+    """Re-ingesting an id with unrelated content (an edit, a re-crawl)
+    must retract the pairs its OLD content produced; re-ingesting
+    UNCHANGED content must remain a pure no-op (review r7: without
+    retraction, stale pairs survive forever and the index diverges
+    from the batch result)."""
+    index = kind.make()
+    index.ingest_batch(kind.corpus, 1)
+    pairs0 = set(_pairs(index))
+    assert pairs0
+    victim = max(b for _, b in pairs0)
+    changed = kind.row(victim, "totally unrelated replacement text " * 12)
+    index.ingest_batch(changed, 2)
+    after = set(_pairs(index))
+    assert after == {p for p in pairs0 if victim not in p}
+    assert victim in _ids(index.sigs, kind.id)
+    index.ingest_batch(changed, 3)  # unchanged re-ingest: no-op
+    assert set(_pairs(index)) == after
+
+
+def test_same_batch_id_delete_beats_ingest(kind):
+    """The delete-wins contract across the phase-split seqs: a
+    compliance delete stamped with the SAME batch id as an ingest of
+    the id must win regardless of call order (review r7 second pass —
+    the first phase-split put upserts ABOVE deletes and silently
+    reversed it)."""
+    index = kind.make()
+    index.ingest_batch(kind.corpus, 1)
+    pairs_at_1 = _pairs(index)
+    victim = max(b for _, b in pairs_at_1)
+    again = kind.corpus.filter(F.col(kind.id) == victim)
+    # ingest FIRST, delete SECOND — and the delete must still win
+    index.ingest_batch(again, 2)
+    index.delete_docs(again.select(kind.id), 2)
+    assert victim not in _ids(index.sigs, kind.id)
+    assert victim not in _ids(index.bands, kind.id)
+    assert all(victim not in p for p in _pairs(index))
+    # a LATER re-ingest (higher batch id) revives the id and its pairs
+    index.ingest_batch(again, 3)
+    assert _pairs(index) == pairs_at_1
+
+
+def test_shrunk_below_one_shingle_leaves_index(kind):
+    """Content re-ingested below one shingle (an error page) has no
+    signature — the id must LEAVE the index entirely: signature and
+    band rows deleted, pairs retracted (review r7 second pass: a plain
+    changed-join misses ids absent from the new signature frame). A
+    replay stays a no-op and the original content revives the pairs."""
+    index = kind.make()
+    index.ingest_batch(kind.corpus, 1)
+    pairs0 = set(_pairs(index))
+    victim = max(b for _, b in pairs0)
+    tiny = kind.row(victim, "err")
+    for batch_id in (2, 2):  # second pass: replay
+        index.ingest_batch(tiny, batch_id)
+        assert victim not in _ids(index.sigs, kind.id)
+        assert victim not in _ids(index.bands, kind.id)
+        assert set(_pairs(index)) == {p for p in pairs0 if victim not in p}
+    index.ingest_batch(kind.corpus.filter(F.col(kind.id) == victim), 3)
+    assert set(_pairs(index)) == pairs0
+
+
+# the state layout as written by earlier builds: a change here strands
+# every deployed index's state dirs
+_STATE_SCHEMA = {
+    "neardup": {
+        "sigs": "doc_id bigint, s array<string>, sig array<bigint>",
+        "bands": "doc_id bigint, band int, bucket bigint",
+        "pairs": "doc_a bigint, doc_b bigint, jaccard double",
+    },
+    "simdup": {
+        "sigs": "media_id bigint, sig bigint",
+        "bands": "media_id bigint, band int, bucket bigint",
+        "pairs": "media_a bigint, media_b bigint, hamming bigint",
+    },
+}
+
+
+def test_state_schema_is_stable(kind, spark):
+    """Each state table's on-disk columns and types (payload, seq, and
+    the tombstone marker) stay exactly what earlier builds wrote, so an
+    index opened on existing state keeps loading it."""
+    index = kind.make()
+    index.ingest_batch(kind.corpus, 1)
+    want = _STATE_SCHEMA[kind.name]
+    for name, cols in want.items():
+        on_disk = spark.read.parquet(getattr(index, name).path).dtypes
+        expect = [tuple(c.split(" ")) for c in cols.split(", ")]
+        assert on_disk == [*expect, ("seq", "bigint"), ("__op", "string")], name
+    assert index.pairs_df().dtypes == [
+        tuple(c.split(" ")) for c in want["pairs"].split(", ")
+    ]
 
 
 @pytest.mark.slow
@@ -174,24 +344,6 @@ def test_neardup_band_pruned_mode_matches_flat(spark, tmp_path):
         tuple(r) for r in pruned.bands.read().select(*cols).collect()
     }
     assert band_reads and all(b is not None for b in band_reads)
-
-
-def test_empty_batch_is_harmless(spark, tmp_path):
-    """An empty micro-batch (heartbeat trigger with no files) must be a
-    no-op on a fresh index AND between real batches — not a crash on
-    the missing state table or a pointless full-state rewrite."""
-    corpus = _neardup_corpus(spark, SMOKE_SF, limit=10**9)
-    empty = corpus.filter(F.lit(False))
-    index = NearDupIndex(spark, str(tmp_path / "state"))
-    index.ingest_batch(empty, 0)  # fresh index: must not crash
-    assert index.sigs.read() is None
-    index.ingest_batch(corpus, 1)
-    n = index.pairs_df().count()
-    index.ingest_batch(empty, 2)
-    assert index.pairs_df().count() == n
-    assert {
-        (r["doc_a"], r["doc_b"]) for r in index.pairs_df().collect()
-    } == set(_batch_pairs(spark))
 
 
 def test_compliance_deletion_retracts_pairs(spark, tmp_path):
@@ -748,44 +900,6 @@ def test_simdup_crash_window_converges(spark, tmp_path):
     }
 
 
-def test_simdup_changed_content_retracts_stale_pairs(spark, tmp_path):
-    """Re-ingesting a media_id with DIFFERENT bytes (re-crawl /
-    re-encode — the module's advertised workload) must retract the
-    pairs its OLD content produced and re-detect under the new
-    signature; re-ingesting UNCHANGED bytes must remain a pure no-op
-    (review r7: without retraction, stale pairs survive forever and
-    the index diverges from the batch screen)."""
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.media import simhash_screen
-    from kube_etl_spark.streaming.simdup import SimDupIndex
-
-    corpus = _simdup_corpus(spark).localCheckpoint(eager=True)
-    index = SimDupIndex(spark, str(tmp_path / "state"))
-    index.ingest_batch(corpus, 1)
-    pairs0 = {tuple(r) for r in index.pairs_df().collect()}
-    assert pairs0
-    # pick a planted variant participating in a pair, replace its bytes
-    # with unrelated content
-    victim = max(b for _, b, _ in pairs0)
-    changed = spark.createDataFrame(
-        [(victim, "completely different bytes " * 8)], "media_id long, t string"
-    ).select("media_id", F.encode("t", "utf-8").alias("payload"))
-    index.ingest_batch(changed, 2)
-    after = {tuple(r) for r in index.pairs_df().collect()}
-    assert all(victim not in (a, b) for a, b, _ in after)
-    # the index now equals the batch screen over the UPDATED corpus
-    updated = corpus.filter(F.col("media_id") != victim).unionByName(changed)
-    want = {
-        (r["media_a"], r["media_b"], r["hamming"])
-        for r in simhash_screen(updated, hamming_max=4).collect()
-    }
-    assert after == want
-    # unchanged re-ingest: still a no-op
-    index.ingest_batch(changed, 3)
-    assert {tuple(r) for r in index.pairs_df().collect()} == after
-
-
 def test_bucketed_state_pruned_read(spark, tmp_path):
     """BucketedStateTable.read(buckets=...) returns exactly the named
     live buckets' rows (tombstones still hidden), buckets_for maps a
@@ -925,29 +1039,6 @@ def test_simdup_bucket_pruned_mode_matches_flat(spark, tmp_path):
     # fewer dirs than exist
     assert band_reads and all(b is not None for b in band_reads)
     assert any(len(b) < 32 for b in band_reads)
-
-
-def test_neardup_changed_content_retracts_stale_pairs(spark, tmp_path):
-    """The text index mirror of the simdup changed-content case: a doc
-    re-ingested with unrelated text loses its old pairs; unchanged
-    re-ingest stays a no-op."""
-    corpus = _neardup_corpus(spark, SMOKE_SF, limit=10**9).localCheckpoint(eager=True)
-    index = NearDupIndex(spark, str(tmp_path / "state"))
-    index.ingest_batch(corpus, 1)
-    pairs0 = {(r["doc_a"], r["doc_b"]) for r in index.pairs_df().collect()}
-    assert pairs0
-    victim = max(b for _, b in pairs0)
-    changed = spark.createDataFrame(
-        [(victim, "totally unrelated replacement text " * 12)],
-        "doc_id long, text string",
-    )
-    index.ingest_batch(changed, 2)
-    after = {(r["doc_a"], r["doc_b"]) for r in index.pairs_df().collect()}
-    assert all(victim not in p for p in after)
-    assert after == {p for p in pairs0 if victim not in p}
-    # unchanged re-ingest: no-op
-    index.ingest_batch(changed, 3)
-    assert {(r["doc_a"], r["doc_b"]) for r in index.pairs_df().collect()} == after
 
 
 def test_neardup_detects_change_behind_identical_signature(
@@ -1120,62 +1211,6 @@ def test_semdedup_cell_bucketed_mode_matches_flat(spark, tmp_path):
     assert member_reads and all(b is not None for b in member_reads)
     # probes touched at most the batch's 2·n cells, not all 4
     assert any(len(b) < 4 for b in member_reads)
-
-
-def test_simdup_shrunk_payload_leaves_index(spark, tmp_path):
-    """A payload re-crawled to under one shingle (an error page) has no
-    signature — it must LEAVE the index entirely: signature and band
-    rows deleted, pairs retracted (review r7 second pass: a plain
-    changed-join misses ids absent from the new signature frame)."""
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.streaming.simdup import SimDupIndex
-
-    corpus = _simdup_corpus(spark).localCheckpoint(eager=True)
-    index = SimDupIndex(spark, str(tmp_path / "state"))
-    index.ingest_batch(corpus, 1)
-    pairs0 = {tuple(r) for r in index.pairs_df().collect()}
-    victim = max(b for _, b, _ in pairs0)
-    tiny = spark.createDataFrame([(victim, "err")], "media_id long, t string").select(
-        "media_id", F.encode("t", "utf-8").alias("payload")
-    )
-    index.ingest_batch(tiny, 2)
-    assert index.sigs.read().filter(F.col("media_id") == victim).count() == 0
-    assert index.bands.read().filter(F.col("media_id") == victim).count() == 0
-    after = {tuple(r) for r in index.pairs_df().collect()}
-    assert all(victim not in (a, b) for a, b, _ in after)
-
-
-def test_same_batch_id_delete_beats_ingest(spark, tmp_path):
-    """The delete-wins contract across the phase-split seqs: a
-    compliance delete stamped with the SAME batch id as an ingest of
-    the id must win regardless of call order (review r7 second pass —
-    the first phase-split put upserts ABOVE deletes and silently
-    reversed it)."""
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.streaming.simdup import SimDupIndex
-
-    corpus = _simdup_corpus(spark).localCheckpoint(eager=True)
-    index = SimDupIndex(spark, str(tmp_path / "state"))
-    pairs_at_1 = None
-    victim = None
-    # batch 1 establishes pairs; batch 2 both re-ingests and deletes
-    index.ingest_batch(corpus, 1)
-    pairs_at_1 = {tuple(r) for r in index.pairs_df().collect()}
-    victim = max(b for _, b, _ in pairs_at_1)
-    ids = spark.createDataFrame([(victim,)], "media_id long")
-    # ingest FIRST, delete SECOND — and the delete must still win
-    index.ingest_batch(corpus.filter(F.col("media_id") == victim), 2)
-    index.delete_docs(ids, 2)
-    assert index.sigs.read().filter(F.col("media_id") == victim).count() == 0
-    assert all(
-        victim not in (a, b) for a, b, _ in
-        {tuple(r) for r in index.pairs_df().collect()}
-    )
-    # a LATER re-ingest (higher batch id) revives the id and its pairs
-    index.ingest_batch(corpus.filter(F.col("media_id") == victim), 3)
-    assert {tuple(r) for r in index.pairs_df().collect()} == pairs_at_1
 
 
 def test_semdedup_changed_vector_clears_ghost_cells(spark, tmp_path):
