@@ -12,9 +12,6 @@ Extras beyond the contract keys:
   * "warm_steady": non-binding 5th-run wall for the checkpoint-heavy
     headliners (_WARM_STEADY) — adjudicates cold-start-dominated
     ledger trips from the JSON alone (VERDICT r11 #2).
-  * "vs_r01": per-query ratio against BENCH_r01.json's parsed numbers —
-    the like-for-like regression gate (VERDICT r1 #5); only queries
-    measured in r01 appear.
   * "skew": the hot-key demonstration (VERDICT r1 #9) — a synthetic
     lineitem variant with ~50% of rows collapsed onto ONE order key,
     joined plain vs salted with AQE skew-join splitting disabled (the
@@ -36,14 +33,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-_R01 = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r01.json")
-
 # First-measured sf0.1 baselines for the NON-QUERY bench objects
 # (BASELINE.md §2: skew first measured r2; udf/index/ivm/neardup first
 # measured r3) — emitted as "vs_baseline" ratios so the 2× regression
-# band covers the incremental/skew/udf layers the same way vs_r01
-# covers the headline queries. Counters (e.g. neardup.pairs_detected)
-# are not timings and are excluded.
+# band covers the incremental/skew/udf layers the same way
+# vs_baseline_queries covers the headline queries. Counters (e.g.
+# neardup.pairs_detected) are not timings and are excluded.
 _OBJECT_BASELINE: dict[str, dict[str, float]] = {
     "skew": {"plain": 9.529, "salted": 7.2147, "plain_aqe_skewjoin": 9.1122},
     "udf": {
@@ -65,10 +60,8 @@ _OBJECT_BASELINE: dict[str, dict[str, float]] = {
 }
 
 # First-measured sf0.1 baselines for headliner QUERIES added after r1
-# (BASELINE.md §2 r3/r4/r5 tables; r1 queries are covered by vs_r01) —
-# emitted as "vs_baseline_queries" so every headliner carries a
-# mechanical ratio against its own first measurement, not just the
-# r1-era subset.
+# (BASELINE.md §2 r3/r4/r5 tables) — emitted as "vs_baseline_queries",
+# a mechanical ratio against each query's own first measurement.
 _QUERY_BASELINE: dict[str, float] = {
     "q_bm25_topk": 0.87,
     "q_dedup_fuzzy": 1.45,
@@ -84,12 +77,12 @@ _QUERY_BASELINE: dict[str, float] = {
     "q_attribution_linear": 1.1,
     "q_gapfill_interpolate": 3.55,
     "q_knn_quantized": 1.02,
-    # r10 first measurements (idle r10 VM, vm_factor 0.858): the r9
+    # r10 first measurements (idle r10 VM): the r9
     # global-order widening trio promoted to headliners (VERDICT r9 #4)
     "q_interval_merge": 1.34,
     "q_skyline_orders": 1.65,
     "q_ks_drift": 0.98,
-    # r7 first measurement (idle r7 VM, vm_factor 0.666): the
+    # r7 first measurement (idle r7 VM): the
     # 32-bit/4-band binary SimHash screen. Baselined from the IN-BENCH
     # median — unlike the other headliners this query is
     # context-sensitive (its eager signature checkpoint lands in
@@ -105,30 +98,14 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# Queries whose implementation has been UNCHANGED since round 1 —
-# co-measured every run as a VM-speed sentinel (ADVICE r6 #2): instead
-# of re-writing absolute baselines when a round's VM is slow/fast, the
-# median of these queries' vs_r01 ratios estimates the VM factor, and
-# "vs_baseline_queries_vmadj" divides it out so the 2× band measures
-# CODE on every VM. A regression in one sentinel can't skew the factor
-# (median of five); a regression in ALL five is a real shared-helper
-# regression and shows up in vs_r01 directly.
-_SENTINELS = (
-    "q_join_inner",
-    "q_dedup_exact",
-    "q_stream_tumbling",
-    "q_text_stats",
-    "q_tpch_q3_shipping_priority",
-)
-
 # The driver records only the LAST 2,000 characters of stdout and
 # json.loads the final line (BENCH_r05/r06 were `parsed: null` —
 # first a progress-bar race, then the full payload line itself
 # outgrowing the tail capture, VERDICT r6 #1). The final line is
 # therefore a COMPACT payload holding exactly the contract keys plus
 # the headline regression ratios, hard-capped well under the capture;
-# everything else (skew/udf/index/ivm/neardup objects, vs_r01,
-# vm_factor) goes to bench_full.json and a NON-final stdout line.
+# everything else (skew/udf/index/ivm/neardup objects) goes to
+# bench_full.json and a NON-final stdout line.
 _FINAL_LINE_MAX = 1500
 _FULL_OUT = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "bench_full.json"
@@ -591,16 +568,6 @@ def main() -> None:
                 lambda: _materialize(spec.fn(spark, sf_dir))
             )
 
-    vs_r01: dict[str, float] = {}
-    try:
-        with open(_R01) as f:
-            r01 = json.load(f)["parsed"]["queries"]
-        vs_r01 = {
-            n: round(t / r01[n], 3) for n, t in timings.items() if n in r01 and r01[n]
-        }
-    except (OSError, KeyError, json.JSONDecodeError):
-        pass
-
     skew = _skew_bench(spark, sf_dir)
     udf = _udf_bench(spark, sf_dir)
     index = _index_bench(spark, sf_dir)
@@ -631,18 +598,6 @@ def main() -> None:
                 if measured[obj].get(k)
             }
 
-    # VM-speed sentinel (ADVICE r6 #2): median vs_r01 ratio of the five
-    # unchanged-since-r1 sentinel queries estimates how fast THIS VM is
-    # relative to the r1 baseline VM; vmadj divides it out so re-basing
-    # absolute baselines on VM-variance grounds is never needed again.
-    sent = [vs_r01[n] for n in _SENTINELS if n in vs_r01]
-    vm_factor = round(statistics.median(sent), 3) if sent else None
-    vs_vmadj = (
-        {n: round(r / vm_factor, 3) for n, r in vs_baseline_queries.items()}
-        if vm_factor
-        else {}
-    )
-
     total = round(sum(timings.values()), 4)
     full = json.dumps(
         {
@@ -651,11 +606,8 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "sf": sf,
-            "vs_r01": vs_r01,
-            "vm_factor": vm_factor,
             "vs_baseline": vs_baseline,
             "vs_baseline_queries": vs_baseline_queries,
-            "vs_baseline_queries_vmadj": vs_vmadj,
             "warm_steady": warm_steady,
             "skew": skew,
             "udf": udf,

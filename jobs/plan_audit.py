@@ -11,10 +11,12 @@ by shuffle count, so the optimization checklist starts from data
 instead of guesses.
 
 Usage:
-    python jobs/plan_audit.py [--sf DIR] [--out FILE] [--dump NAME ...]
+    python jobs/plan_audit.py [--sf DIR] [--out FILE]
+                              [--dump NAME ... --dump-dir DIR]
 
 --dump writes the full `formatted` plan of the named queries to
-plans/r12/<name>_<suffix>.txt (suffix from --suffix, default "before").
+<dump-dir>/<name>_<suffix>.txt (suffix from --suffix, default "before");
+--dump-dir is required with --dump.
 """
 
 from __future__ import annotations
@@ -63,9 +65,12 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--out", default="/tmp/plan_audit.tsv")
     ap.add_argument("--dump", nargs="*", default=[])
+    ap.add_argument("--dump-dir", default=None)
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--only", nargs="*", default=[])
     args = ap.parse_args(argv)
+    if args.dump and not args.dump_dir:
+        ap.error("--dump needs --dump-dir")
 
     from kube_etl_spark.registry import all_specs
     from kube_etl_spark.session import get_spark
@@ -73,10 +78,8 @@ def main(argv: list[str] | None = None) -> None:
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    dump_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12"
-    )
-    os.makedirs(dump_dir, exist_ok=True)
+    if args.dump:
+        os.makedirs(args.dump_dir, exist_ok=True)
 
     rows = []
     failures = []
@@ -98,7 +101,8 @@ def main(argv: list[str] | None = None) -> None:
         counts["bench"] = int(bool(getattr(spec, "bench", False)))
         rows.append((name, counts))
         if name in args.dump:
-            with open(os.path.join(dump_dir, f"{name}_{args.suffix}.txt"), "w") as f:
+            dump_path = os.path.join(args.dump_dir, f"{name}_{args.suffix}.txt")
+            with open(dump_path, "w") as f:
                 f.write(plan_str(spark, df, "formatted"))
 
     keys = list(NODE_PATTERNS) + ["plan_chars", "bench"]

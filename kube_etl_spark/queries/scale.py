@@ -526,18 +526,25 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 CHECKPOINT_RANGE_LAYOUT = True
 
 
-_RANGE_PART_BYTES = int(
-    os.environ.get("SPARK_GRAFT_RANGE_PART_BYTES", str(64 * 1024 * 1024))
-)
+_RANGE_PART_BYTES = 64 * 1024 * 1024
 
 # skyline_2d's worst-case guard (VERDICT r12 #5): above this estimated
 # size of the per-value frame, the global strict-prefix pass uses the
 # fenced global_cummax instead of a plain (single-task) window. 64 MB
 # = one healthy task's window input (same scale as the fence's
-# per-partition target); env-tunable, tests override the module attr.
-_SKYLINE_PLAIN_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SKYLINE_PLAIN_MAX_BYTES", str(64 * 1024 * 1024))
-)
+# per-partition target); tests override the module attr.
+_SKYLINE_PLAIN_MAX_BYTES = 64 * 1024 * 1024
+
+
+def _size_estimate(df: DataFrame) -> int | None:
+    """The optimizer's sizeInBytes estimate for ``df``, or None when it
+    cannot be read. Reads the optimized plan's stats through a private
+    JVM API, tested on Spark 4.1.2; callers map None to their safe
+    fallback."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
 
 
 def _adaptive_range_parts(spark, df: DataFrame) -> int:
@@ -560,18 +567,15 @@ def _adaptive_range_parts(spark, df: DataFrame) -> int:
     branch only ever shrinks genuinely small local frames. Partition
     count never affects the helpers' OUTPUT (offset + local rank is
     layout-independent — the adversarial-parallelism parity sweep pins
-    it); env knob SPARK_GRAFT_RANGE_PART_BYTES tunes the target. The
-    floor is 2, not 1: a 1-partition repartitionByRange compiles to
-    Exchange SinglePartition, which is textually indistinguishable
-    from the lost-fence regression the plan pins exist to catch — two
-    partitions keep the distributed rangepartitioning shape visible in
-    every plan for the cost of one near-empty task."""
+    it). The floor is 2, not 1: a 1-partition repartitionByRange
+    compiles to Exchange SinglePartition, which is textually
+    indistinguishable from the lost-fence regression the plan pins
+    exist to catch — two partitions keep the distributed
+    rangepartitioning shape visible in every plan for the cost of one
+    near-empty task."""
     cap = spark.sparkContext.defaultParallelism
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return cap
-    if est <= 0:
+    est = _size_estimate(df)
+    if est is None or est <= 0:
         return cap
     return max(2, min(cap, -(-est // _RANGE_PART_BYTES)))
 
@@ -1443,11 +1447,8 @@ def skyline_2d(df: DataFrame, min_col: str, max_col: str) -> DataFrame:
     # fenced strict-prefix cummax on cand (its ~0.8 s fixed costs are
     # noise against data-sized work at that scale). Inflated/unknown
     # estimates fail toward the fence — the safe direction.
-    try:
-        g_est = int(g._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        g_est = _SKYLINE_PLAIN_MAX_BYTES + 1
-    if g_est > _SKYLINE_PLAIN_MAX_BYTES:
+    g_est = _size_estimate(g)
+    if g_est is None or g_est > _SKYLINE_PLAIN_MAX_BYTES:
         scored = global_cummax(
             cand, ["__sk_p"], "__sk_gmax", "__sk_prev", inclusive=False
         )

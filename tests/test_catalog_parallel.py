@@ -1,15 +1,16 @@
-"""Scan-parallelism floor (catalog._read_parquet, optimization r12).
+"""Scan-parallelism floor (catalog._read_parquet).
 
 The fixture parquet is written as ONE row group per file, so a scan —
 and with it everything below the first exchange — runs as one task no
 matter the core count. Callers whose first stage does heavy per-row
 work opt in via load_table(..., parallel=True); catalog appends a
-round-robin repartition when the atomic split count is below the
-session's parallelism and the file clears a size floor. These tests pin
+hash repartition on the table's leading (key) column when the atomic
+split count is below the session's parallelism and the file clears a
+size floor. These tests pin
 the behaviors the change must keep: (a) opt-in only — the default read
 is untouched, (b) the floor fires only above the byte threshold,
 (c) the floored read is row-identical to the raw read, (d) the split
-probe is metadata-only and cached (no Spark job, one footer read)."""
+probe is metadata-only and cached per (path, target)."""
 
 from __future__ import annotations
 
@@ -22,19 +23,14 @@ from .conftest import SMOKE_SF
 
 @pytest.fixture
 def fresh_caches():
-    """Isolate the module-level caches; restore tunables after."""
-    saved = (
-        dict(cat._SPLITS_CACHE),
-        cat._PARALLEL_READ,
-        cat._PARALLEL_READ_MIN_BYTES,
-    )
+    """Isolate the module-level caches; restore the threshold after."""
+    saved = (dict(cat._SPLITS_CACHE), cat._PARALLEL_READ_MIN_BYTES)
     cat._SPLITS_CACHE.clear()
     cat._DF_CACHE.clear()
     yield
     cat._SPLITS_CACHE.clear()
     cat._SPLITS_CACHE.update(saved[0])
-    cat._PARALLEL_READ = saved[1]
-    cat._PARALLEL_READ_MIN_BYTES = saved[2]
+    cat._PARALLEL_READ_MIN_BYTES = saved[1]
     cat._DF_CACHE.clear()
 
 
@@ -56,13 +52,6 @@ def test_floor_respects_threshold(spark, fresh_caches):
     assert df.rdd.getNumPartitions() == 1
 
 
-def test_kill_switch_disables_floor(spark, fresh_caches):
-    cat._PARALLEL_READ = False
-    cat._PARALLEL_READ_MIN_BYTES = 0
-    df = cat.load_table(spark, SMOKE_SF, "lineitem", parallel=True)
-    assert df.rdd.getNumPartitions() == 1
-
-
 def test_floored_read_is_row_identical(spark, fresh_caches):
     cat._PARALLEL_READ_MIN_BYTES = 0
     base = cat.load_table(spark, SMOKE_SF, "orders")
@@ -72,38 +61,52 @@ def test_floored_read_is_row_identical(spark, fresh_caches):
 
 
 def test_keyed_floor_hash_partitions_without_presort(spark, fresh_caches):
-    """parallel=<column> must floor via a HASH repartition on that
+    """The floor must be a HASH repartition on the table's leading key
     column (deterministic without round-robin's partition-local
-    pre-sort — the large-table form), stay row-identical to the raw
-    read, and cache under its own key so bool and keyed floors of the
-    same table do not collide."""
+    pre-sort) and stay row-identical to the raw read."""
     cat._PARALLEL_READ_MIN_BYTES = 0
-    df = cat.load_table(spark, SMOKE_SF, "lineitem", parallel="l_extendedprice")
-    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    df = cat.load_table(spark, SMOKE_SF, "lineitem", parallel=True)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
-    assert "hashpartitioning(l_extendedprice" in plan
+    assert "hashpartitioning(l_orderkey" in plan
     assert "RoundRobinPartitioning" not in plan
     base = cat.load_table(spark, SMOKE_SF, "lineitem")
     assert df.schema == base.schema
     assert sorted(map(tuple, df.collect())) == sorted(map(tuple, base.collect()))
-    rr = cat.load_table(spark, SMOKE_SF, "lineitem", parallel=True)
-    assert rr is not df  # distinct cache entries per floor form
 
 
-def test_split_probe_is_cached_metadata(spark, fresh_caches):
+def test_split_probe_is_cached_metadata(fresh_caches, tmp_path, monkeypatch):
+    """A directory of 3 files x 2 row groups: a target at or below the
+    file count answers from the listing alone (no footer opened); a
+    larger target on the same path reads the footers and returns the
+    true row-group count; each (path, target) is probed once."""
     import os
 
-    path = os.path.join(SMOKE_SF, "lineitem.parquet")
-    first = cat._atomic_splits(path, 8)
-    assert first[0] >= 1 and first[1] == os.path.getsize(path)
-    # cached: a second call must not re-read the footer
-    cat._SPLITS_CACHE[path] = (999, 999, False)
-    assert cat._atomic_splits(path, 8) == (999, 999)
-    # an early-exited (lower-bound) entry is reused only while the
-    # target stays within the bound; a LARGER target must recompute
-    # (ADVICE r12: the bound depends on the first caller's target)
-    cat._SPLITS_CACHE[path] = (4, 999, True)
-    assert cat._atomic_splits(path, 4) == (4, 999)  # bound covers target
-    assert cat._atomic_splits(path, 8) == first  # recomputed for real
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    os.makedirs(path)
+    for i in range(3):
+        table = pa.table({"x": list(range(i * 10, i * 10 + 10))})
+        part = os.path.join(path, f"part-{i}.parquet")
+        pq.write_table(table, part, row_group_size=5)
+    size = sum(os.path.getsize(os.path.join(path, f)) for f in os.listdir(path))
+
+    opened = []
+    real = pq.ParquetFile
+
+    def spy(f, *a, **kw):
+        opened.append(f)
+        return real(f, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", spy)
+
+    assert cat._atomic_splits(path, 3) == (3, size)
+    assert cat._atomic_splits(path, 2) == (3, size)
+    assert opened == []  # early exit: file count alone reaches the target
+    assert cat._atomic_splits(path, 16) == (6, size)
+    assert len(opened) == 3  # one footer per file
+    assert cat._atomic_splits(path, 16) == (6, size)
+    assert len(opened) == 3  # cached per (path, target)

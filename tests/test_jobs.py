@@ -2033,3 +2033,17 @@ def test_kube_etl_dispatch_and_errors(spark, tmp_path, capsys):
 
     kube_etl.main(["--help"])
     assert "subcommands" in capsys.readouterr().out
+
+
+def test_plan_audit_dump_needs_dump_dir(capsys):
+    """`plan_audit --dump` takes its directory from --dump-dir and
+    refuses to run without one, before a Spark session starts."""
+    import os
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs"))
+    import plan_audit
+
+    with pytest.raises(SystemExit) as exc:
+        plan_audit.main(["--dump", "q_agg_groupby"])
+    assert exc.value.code == 2
+    assert "--dump needs --dump-dir" in capsys.readouterr().err
