@@ -11,9 +11,9 @@ table clustered by the Morton value of two key columns so parquet
 min/max stats prune 2-d predicates; gc purges a StateTable's delete
 tombstones below a seq horizon (the compaction valve for the dedup
 indexes' sigs/bands/pairs tables, whose tombstones otherwise grow with
-every re-crawl and compliance delete). The layout is auto-detected —
-a symlink is the flat StateTable publish, a directory of bucket-*
-symlinks is BucketedStateTable (only tombstone-bearing buckets are
+every re-crawl and compliance delete). StateTable.open_for_purge
+detects the layout — a symlink is the flat publish, a directory of
+bucket-* symlinks the bucketed one (only tombstone-bearing buckets are
 rewritten). Choose the horizon from the stream checkpoint's committed
 batch id (seq = 4·batch_id + phase): purging below a seq that a replay
 could still carry re-opens the resurrection window merge_batch closes.
@@ -71,8 +71,6 @@ def main(argv: list[str]) -> None:
         print(json.dumps({"cmd": args.cmd, "deleted_files": n}))
         return
 
-    import os
-
     from pyspark.sql import SparkSession
 
     from kube_etl_spark.plans.layout import compact, zorder_write
@@ -83,7 +81,7 @@ def main(argv: list[str]) -> None:
         SparkSession.builder.appName("kube-etl-maintenance").getOrCreate()
     )
     if args.cmd == "gc":
-        from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+        from kube_etl_spark.streaming.cdc import StateTable
 
         # normalize: islink('dir/') is False for a symlink (the slash
         # forces traversal), so a trailing slash would bounce a valid
@@ -107,21 +105,12 @@ def main(argv: list[str]) -> None:
                     "rewrite would race its merges)"
                 )
         try:
-            if os.path.islink(args.state):
+            try:
                 table = StateTable.open_for_purge(
                     spark, args.state, seq_col=args.seq_col, lease=lease
                 )
-            elif os.path.isdir(args.state) and any(
-                d.startswith("bucket-") for d in os.listdir(args.state)
-            ):
-                table = BucketedStateTable.open_for_purge(
-                    spark, args.state, seq_col=args.seq_col, lease=lease
-                )
-            else:
-                raise SystemExit(
-                    f"{args.state} is neither a flat StateTable symlink nor a "
-                    "bucketed state directory"
-                )
+            except ValueError as e:  # neither layout at --state
+                raise SystemExit(str(e)) from None
             table.purge_tombstones(args.before_seq)
             live = table.read()
             out = {

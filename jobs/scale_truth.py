@@ -874,7 +874,7 @@ def snapdiff_skew_experiment(spark, sf_dir: str, replicas: int) -> dict:
     from pyspark.sql import functions as F
 
     from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+    from kube_etl_spark.streaming.cdc import StateTable
     from kube_etl_spark.streaming.snapdiff import snapshot_delta
 
     base = load_table(spark, sf_dir, "orders").select(
@@ -897,7 +897,7 @@ def snapdiff_skew_experiment(spark, sf_dir: str, replicas: int) -> dict:
     root = tempfile.mkdtemp(prefix="snapdiff-skew-")
     try:
         flat = StateTable(spark, f"{root}/flat", ["k"], "seq")
-        bucketed = BucketedStateTable(
+        bucketed = StateTable(
             spark,
             f"{root}/bucketed",
             ["k"],
@@ -1098,7 +1098,7 @@ def simprobe_experiment(
     from pyspark.sql import functions as F
 
     from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
     from kube_etl_spark.streaming.simdup import SimDupIndex
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1145,7 +1145,7 @@ def simprobe_experiment(
     index_rows = flat.bands.read().count()
 
     probe_log: list = []
-    orig_read = BucketedStateTable.read
+    orig_read = StateTable.read
 
     def spy(self, buckets=None):
         if self.path.endswith("pruned/bands") and buckets is not None:
@@ -1154,7 +1154,7 @@ def simprobe_experiment(
 
     rows = []
     try:
-        BucketedStateTable.read = spy
+        StateTable.read = spy
         for i, ids in enumerate(batches):
             b = payloads.filter(F.col("media_id").isin(ids))
             t0 = time.time()
@@ -1180,7 +1180,7 @@ def simprobe_experiment(
                 }
             )
     finally:
-        BucketedStateTable.read = orig_read
+        StateTable.read = orig_read
 
     pairs_equal = {tuple(r) for r in flat.pairs_df().collect()} == {
         tuple(r) for r in pruned.pairs_df().collect()
@@ -1225,7 +1225,7 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
 
     from kube_etl_spark.catalog import load_table
     from kube_etl_spark.queries.llm import _dot, _kmeans_centroids
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
     from kube_etl_spark.streaming.semdedup import SemanticDedupIndex
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1294,7 +1294,7 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
 
     member_log: list = []
     vec_log: list = []
-    orig_read = BucketedStateTable.read
+    orig_read = StateTable.read
 
     def spy(self, buckets=None):
         if buckets is not None and self.path.startswith(f"{root}/pruned"):
@@ -1305,7 +1305,7 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
 
     rows = []
     try:
-        BucketedStateTable.read = spy
+        StateTable.read = spy
         for i, ids in enumerate(batches):
             b = corpus.filter(F.col("vec_id").isin(ids))
             t0 = time.time()
@@ -1338,7 +1338,7 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
                 }
             )
     finally:
-        BucketedStateTable.read = orig_read
+        StateTable.read = orig_read
 
     pairs_equal = {tuple(r) for r in flat.pairs_df().collect()} == {
         tuple(r) for r in pruned.pairs_df().collect()
@@ -2066,8 +2066,8 @@ def bridge_experiment(spark, sf_dir: str, replicas: int) -> dict:
 
 
 def _fieldmerge_oplog(spark, sf_dir: str, replicas: int):
-    """The contended two-writer op-log both field-merge experiments
-    share: even seqs assert ONLY spec, odd seqs ONLY status over an
+    """The contended two-writer op-log of the field-merge experiment:
+    even seqs assert ONLY spec, odd seqs ONLY status over an
     ODD key modulus (so every key's stream alternates classes), ~11%
     interleaved deletes. Eagerly checkpointed — chunk filters re-read
     it."""
@@ -2109,69 +2109,6 @@ def _fieldmerge_oplog(spark, sf_dir: str, replicas: int):
         )
         .localCheckpoint(eager=True)
     )
-
-
-def _field_merge_winners_fetchjoin(
-    tagged, key_cols, seq_col, field_merge, op_col="op", delete_value="delete"
-):
-    """Variant C as a FULL drop-in for cdc.field_merge_winners (same
-    output schema incl. persisted __seq_<f> and __op): hash-agg long
-    winner ordinals (seq*2+__del — deletes win ties, same contest), then
-    fetch the winning rows back by ordinal equality. dropDuplicates
-    guards replayed (key, seq) twins, which would otherwise fan the
-    fetch join out (max_by picks one arbitrarily; here both rows are
-    byte-equal so the pick is immaterial)."""
-    from pyspark.sql import functions as F
-
-    seq = F.col(seq_col)
-    is_del = F.col(op_col) == delete_value
-    base_cols = [
-        c
-        for c in tagged.columns
-        if c not in (*key_cols, *field_merge, "__del")
-        and not c.startswith("__seq_")
-    ]
-    work = tagged
-    aggs = [F.max(seq * 2 + F.col("__del")).alias("__rw")]
-    for f in field_merge:
-        prev = (
-            F.col(f"__seq_{f}")
-            if f"__seq_{f}" in tagged.columns
-            else F.lit(None).cast("long")
-        )
-        asserting = F.col(f).isNotNull() | is_del
-        work = work.withColumn(
-            f"__fs_{f}", F.coalesce(prev, F.when(asserting, seq))
-        )
-        aggs.append(
-            F.max(F.col(f"__fs_{f}") * 2 + F.col("__del")).alias(f"__fw_{f}")
-        )
-    ag = work.groupBy(*key_cols).agg(*aggs)
-    out = (
-        work.join(ag.select(*key_cols, "__rw"), key_cols)
-        .filter(seq * 2 + F.col("__del") == F.col("__rw"))
-        .dropDuplicates(key_cols)
-        .select(
-            *key_cols,
-            *[c for c in base_cols if c != op_col],
-            F.when(F.col(op_col) == delete_value, F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias("__op"),
-        )
-    )
-    for f in field_merge:
-        fv = (
-            work.join(ag.select(*key_cols, f"__fw_{f}"), key_cols)
-            .filter(F.col(f"__fs_{f}") * 2 + F.col("__del") == F.col(f"__fw_{f}"))
-            .dropDuplicates(key_cols)
-            .select(
-                *key_cols,
-                F.when(~is_del, F.col(f)).alias(f),
-                F.col(f"__fs_{f}").alias(f"__seq_{f}"),
-            )
-        )
-        out = out.join(fv, key_cols, "left")
-    return out
 
 
 def _ownership_oplog(spark, sf_dir: str, replicas: int):
@@ -2416,230 +2353,6 @@ def ownership_experiment(spark, sf_dir: str, replicas: int) -> dict:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def fieldmerge_encoding_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """VERDICT r11 #4: can a different ENCODING make the field-merge
-    aggregate hash-agg eligible and recover the measured 1.68× over
-    row-LWW (whose bulk is field_merge_winners' SortAggregate — max_by
-    with a struct buffer can't hash-aggregate)?
-
-    Three formulations of the SAME compaction (full contended op-log →
-    per-key field-merged winners), outputs asserted identical:
-
-      A. max_by(struct, struct) — the shipped cdc.field_merge_winners;
-      B. max(binary) — (seq, del, payload-as-json) packed into ONE
-         big-endian-sortable binary, decoded after the aggregate (the
-         verdict's suggested encoding);
-      C. hash-agg long winner-seqs (max(seq*2+del) — the ONLY
-         buffer family HashAggregateExec accepts) + fetch-joins to
-         pull the winning rows' payloads back by (key, seq).
-
-    Pre-measured eligibility probe (this file's commit): max over
-    BINARY and STRING buffers ALSO SortAggregates — Spark's hash
-    aggregate accepts only mutable primitive buffers (long/double/
-    decimal/…), so B cannot change the plan family, only the buffer
-    compare/copy cost; C is the one genuinely hash-agg-eligible
-    formulation and pays join fan-back instead. Whatever wins, the
-    result is recorded in docs/architecture.md §r12 and the shipped
-    implementation only changes if a variant is faster with
-    bit-identical output."""
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.streaming.cdc import field_merge_winners
-
-    key_cols = ["group", "version", "kind", "namespace", "name"]
-    oplog = _fieldmerge_oplog(spark, sf_dir, replicas)
-    tagged = oplog.withColumn("__del", (F.col("op") == "delete").cast("int"))
-    is_del = F.col("op") == "delete"
-
-    def canon(df):
-        return df.select(
-            *key_cols, "seq", "origin",
-            F.col("spec.foo").alias("foo"),
-            F.col("status.bar").alias("bar"),
-            "__op",
-        )
-
-    def variant_a():
-        return canon(
-            field_merge_winners(tagged, key_cols, "seq", ["spec", "status"])
-        )
-
-    seqbin = F.expr("unhex(lpad(hex(seq), 16, '0'))")
-    delb = F.expr("unhex(if(op = 'delete', '01', '00'))")
-
-    def _decode(col, what):
-        body = F.expr(f"decode(substring({col}, 10, 134217728), 'UTF-8')")
-        seq_of = F.expr(f"cast(conv(hex(substring({col}, 1, 8)), 16, 10) as bigint)")
-        return body, seq_of
-
-    def variant_b():
-        base_enc = F.concat(
-            seqbin, delb,
-            F.encode(F.to_json(F.struct("seq", "op", "origin")), "utf-8"),
-        )
-        f_enc = {}
-        for f in ("spec", "status"):
-            asserts = F.col(f).isNotNull() | is_del
-            f_enc[f] = F.when(
-                asserts,
-                F.concat(
-                    seqbin, delb,
-                    F.encode(F.coalesce(F.to_json(F.col(f)), F.lit("")), "utf-8"),
-                ),
-            )
-        won = tagged.groupBy(*key_cols).agg(
-            F.max(base_enc).alias("__bw"),
-            F.max(f_enc["spec"]).alias("__sw"),
-            F.max(f_enc["status"]).alias("__tw"),
-        )
-        base_json, _ = _decode("__bw", "base")
-        sp_json, _ = _decode("__sw", "spec")
-        st_json, _ = _decode("__tw", "status")
-        base = F.from_json(base_json, "seq long, op string, origin string")
-        return won.select(
-            *key_cols,
-            base["seq"].alias("seq"),
-            base["origin"].alias("origin"),
-            F.from_json(sp_json, "foo string")["foo"].alias("foo"),
-            F.from_json(st_json, "bar string")["bar"].alias("bar"),
-            F.when(base["op"] == "delete", F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias("__op"),
-        )
-
-    def variant_c():
-        asserts = {
-            f: F.col(f).isNotNull() | is_del for f in ("spec", "status")
-        }
-        ag = tagged.groupBy(*key_cols).agg(
-            F.max(F.col("seq") * 2 + F.col("__del")).alias("__rw"),
-            F.max(F.when(asserts["spec"], F.col("seq"))).alias("__ws"),
-            F.max(F.when(asserts["status"], F.col("seq"))).alias("__wt"),
-        )
-        base = (
-            tagged.join(ag.select(*key_cols, "__rw"), key_cols)
-            .filter(F.col("seq") * 2 + F.col("__del") == F.col("__rw"))
-            .select(
-                *key_cols, "seq", "origin",
-                F.when(is_del, F.lit("delete")).otherwise(F.lit("upsert")).alias("__op"),
-            )
-        )
-        fetched = {}
-        for f, win in (("spec", "__ws"), ("status", "__wt")):
-            fetched[f] = (
-                tagged.join(ag.select(*key_cols, win), key_cols)
-                .filter(F.col("seq") == F.col(win))
-                .select(*key_cols, F.when(~is_del, F.col(f)).alias(f))
-            )
-        return (
-            base.join(fetched["spec"], key_cols, "left")
-            .join(fetched["status"], key_cols, "left")
-            .select(
-                *key_cols, "seq", "origin",
-                F.col("spec.foo").alias("foo"),
-                F.col("status.bar").alias("bar"),
-                "__op",
-            )
-        )
-
-    variants = {"a_maxby_struct": variant_a, "b_binary_max": variant_b,
-                "c_hashagg_fetchjoin": variant_c}
-    out: dict = {"oplog_rows": oplog.count()}
-    frames = {}
-    for name, build in variants.items():
-        walls = []
-        for _ in range(3):
-            t0 = time.time()
-            build().write.format("noop").mode("overwrite").save()
-            walls.append(time.time() - t0)
-        walls.sort()
-        out[f"wall_{name}_s"] = round(walls[1], 2)  # median of 3
-        df = build()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        out[f"agg_nodes_{name}"] = sorted(
-            {
-                re.sub(r"^[^A-Za-z]*", "", line).split("(")[0]
-                for line in plan.splitlines()
-                if "Aggregate(" in line
-            }
-        )
-        frames[name] = df
-    a = frames["a_maxby_struct"].localCheckpoint(eager=True)
-    out["live_rows"] = a.filter(F.col("__op") != "delete").count()
-    assert out["live_rows"] > 0, "vacuous: no live winners"
-    assert a.filter(
-        (F.col("foo").isNull() & F.col("bar").isNotNull())
-        | (F.col("foo").isNotNull() & F.col("bar").isNull())
-    ).count() > 0, "vacuous: no single-field keys — contention missing"
-    for name in ("b_binary_max", "c_hashagg_fetchjoin"):
-        d = frames[name]
-        out[f"{name}_identical"] = (
-            a.exceptAll(d).count() == 0 and d.exceptAll(a).count() == 0
-        )
-    base_w = out["wall_a_maxby_struct_s"]
-    for name in ("b_binary_max", "c_hashagg_fetchjoin"):
-        out[f"{name}_over_a"] = round(out[f"wall_{name}_s"] / base_w, 3)
-
-    # MERGE-REGIME leg: the compaction wall above is one full-log pass;
-    # the SHIPPED cost is StateTable.merge_batch's chunked regime
-    # (old state ∪ batch per merge), where C's fetch-joins RE-SCAN the
-    # input once per field + once for the base row — the scan
-    # multiplicity a single-pass SortAggregate never pays. Same four
-    # out-of-order chunks as fieldmerge_experiment, real state tables,
-    # final live state asserted identical.
-    import shutil
-    import tempfile
-
-    from kube_etl_spark.streaming.cdc import StateTable
-
-    class _FetchJoinStateTable(StateTable):
-        def _field_merge_winners(self, tagged, op_col, delete_value):
-            return _field_merge_winners_fetchjoin(
-                tagged, self.key_cols, self.seq_cols[0], self.field_merge,
-                op_col, delete_value,
-            )
-
-    n_rows = out["oplog_rows"]
-    bounds = [(i * n_rows) // 4 for i in range(5)]
-    chunks = [
-        oplog.filter((F.col("seq") > bounds[i]) & (F.col("seq") <= bounds[i + 1]))
-        for i in range(4)
-    ]
-    order = [2, 0, 3, 1]
-    root = tempfile.mkdtemp(prefix="fieldmerge-enc-")
-    try:
-        walls = {}
-        tables = {}
-        for name, cls in (("a", StateTable), ("c", _FetchJoinStateTable)):
-            st = cls(
-                spark, os.path.join(root, name), key_cols, "seq",
-                field_merge=["spec", "status"],
-            )
-            t0 = time.time()
-            for i in order:
-                st.merge_batch(chunks[i])
-            walls[name] = time.time() - t0
-            tables[name] = st
-        out["merge_wall_a_s"] = round(walls["a"], 2)
-        out["merge_wall_c_s"] = round(walls["c"], 2)
-        out["merge_c_over_a"] = round(walls["c"] / walls["a"], 3)
-        ga = tables["a"].read().select(
-            *key_cols, "seq", "origin",
-            F.col("spec.foo").alias("foo"), F.col("status.bar").alias("bar"),
-        ).localCheckpoint(eager=True)
-        gc_ = tables["c"].read().select(
-            *key_cols, "seq", "origin",
-            F.col("spec.foo").alias("foo"), F.col("status.bar").alias("bar"),
-        )
-        out["merge_c_state_identical"] = (
-            ga.exceptAll(gc_).count() == 0 and gc_.exceptAll(ga).count() == 0
-        )
-        assert ga.count() > 0, "vacuous: empty merged state"
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
 def fieldmerge_experiment(spark, sf_dir: str, replicas: int) -> dict:
     """Scale-truth for the per-field SSA merge (VERDICT r10 missing #3,
     SURVEY §15.6): the golden/hypothesis suite pins the semantics at
@@ -2679,7 +2392,7 @@ def fieldmerge_experiment(spark, sf_dir: str, replicas: int) -> dict:
     from pyspark.sql.window import Window
 
     from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     key_cols = ["group", "version", "kind", "namespace", "name"]
     n_events = load_table(spark, sf_dir, "events").count()
@@ -2688,7 +2401,7 @@ def fieldmerge_experiment(spark, sf_dir: str, replicas: int) -> dict:
     oplog = _fieldmerge_oplog(spark, sf_dir, replicas)
 
     def ssa_oracle(frame):
-        # deliberately a DIFFERENT mechanism from _field_merge_winners'
+        # deliberately a DIFFERENT mechanism from field_merge_winners'
         # max_by aggregate: row_number windows + joins, so the oracle
         # cannot share a bug with the implementation
         tagged = frame.withColumn("__d", (F.col("op") == "delete").cast("int"))
@@ -2735,7 +2448,7 @@ def fieldmerge_experiment(spark, sf_dir: str, replicas: int) -> dict:
             field_merge=["spec", "status"],
         )
         st_row = StateTable(spark, os.path.join(root, "row"), key_cols, "seq")
-        st_bucketed = BucketedStateTable(
+        st_bucketed = StateTable(
             spark, os.path.join(root, "bucketed"), key_cols, "seq",
             n_buckets=32, field_merge=["spec", "status"],
         )
@@ -2807,7 +2520,6 @@ def main(argv: list[str]) -> None:
     ap.add_argument("--syncer", action="store_true")
     ap.add_argument("--bridge", action="store_true")
     ap.add_argument("--fieldmerge", action="store_true")
-    ap.add_argument("--fieldmerge-encoding", action="store_true")
     ap.add_argument("--ownership", action="store_true")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--replicas", type=int, default=10)
@@ -2847,10 +2559,6 @@ def main(argv: list[str]) -> None:
         out["bridge"] = bridge_experiment(spark, args.sf_dir, args.replicas)
     if args.fieldmerge:
         out["fieldmerge"] = fieldmerge_experiment(spark, args.sf_dir, args.replicas)
-    if args.fieldmerge_encoding:
-        out["fieldmerge_encoding"] = fieldmerge_encoding_experiment(
-            spark, args.sf_dir, args.replicas
-        )
     if args.ownership:
         out["ownership"] = ownership_experiment(spark, args.sf_dir, args.replicas)
     line = json.dumps(out)

@@ -12,11 +12,14 @@ Spark loops get wrong are handled explicitly:
     copies of the base subtree and PLANNING took 4.5× longer than
     execution (measured at sf0.01: 9.8 s build vs 2.2 s run).
     Ranks are therefore localCheckpoint'ed EVERY round, NON-eagerly:
-    lazy checkpoints truncate the downstream plan just the same but
-    materialize inside the final action, avoiding a job submission
-    per round (measured: eager per-round checkpoints cost ~2.8 s/round
-    of scheduling overhead at sf0.01; lazy ones ~0.2 s/round). Plan
-    size stays at one round's algebra for any iteration count.
+    the checkpoint truncates the downstream plan either way (measured:
+    eager per-round checkpoints cost ~2.8 s/round of scheduling
+    overhead at sf0.01; non-eager ones ~0.2 s/round). Under AQE the
+    non-eager form is not fully lazy: the call still runs the round's
+    upstream shuffle stages as jobs at the call site (a probe counted
+    1 job at the call with AQE on, 0 with it off); it skips only the
+    extra materializing job. Plan size stays at one round's algebra
+    for any iteration count.
   * **dangling mass**: nodes with no out-edges leak rank; their mass is
     redistributed uniformly each round so Σrank stays 1 (asserted in
     tests), matching the canonical formulation.

@@ -662,9 +662,13 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's ReuseExchange cannot dedupe them (each consumer projects
     different columns below the exchange, so the canonical plans
     differ) and without truncation the expensive basket self-join
-    re-executed ~5× — measured 4.7 s → 1.x s at sf0.01. Lazy
-    checkpoints keep the materialization inside the caller's single
-    action (the pagerank lesson, plans/graph.py).
+    re-executed ~5× — measured 4.7 s → 1.x s at sf0.01. Under AQE
+    (the engine's setting) a "lazy" checkpoint is not deferred: the
+    localCheckpoint(eager=False) call still runs its upstream shuffle
+    stages as jobs at the call site, inside this builder, not inside
+    the caller's action (a probe counted 1 job at the call with AQE
+    on, 0 with it off). What the non-eager form saves is only the
+    final materializing job an eager checkpoint adds.
 
     Optimization r12: the degree ORDER is only an orientation
     comparator — the triangle set (and so every per-node count) is

@@ -1558,7 +1558,7 @@ def q_relist_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bookmark is a 1-row broadcast scalar, never a collect; no window,
     no self-join, no full-outer reconciliation — the per-key frame
     collapses straight into the GVK-sized rollup. This is the same
-    single-shuffle shape as the engine twin (cdc._field_merge_winners'
+    single-shuffle shape as the engine twin (cdc.field_merge_winners'
     aggregate) and of q_oplog_compaction_ratio, whose key lattice
     (mod 97 names) it mirrors so ~1/11 deletes land in the gap window
     at every SF. (First cut compacted each side with its own
@@ -1718,7 +1718,7 @@ def q_field_merge_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE op-log scan and ONE key-partitioned hash
     aggregate compute all three contests together, exactly like the
-    engine twin (cdc._field_merge_winners): the row winner is
+    engine twin (cdc.field_merge_winners): the row winner is
     max_by((op, spec, status), seq); each per-field winner is
     max_by(value-or-null-on-delete, seq | the row asserts the field) —
     max_by skips null orderings, which scopes each field's contest to

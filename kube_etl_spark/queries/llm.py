@@ -3703,10 +3703,12 @@ def incremental_screen(
     # ixz is consumed twice (postings explode + the final verdict
     # left-join) below DIFFERENT exchanges, so ReuseExchange cannot
     # dedupe the scan+tokenize+shingle subtree — the triangle/pagerank
-    # re-execution pitfall. Lazy localCheckpoint: the second consumer
-    # (the verdict join) only runs after `best`, which depends on the
-    # postings, so the first stage materializes and the second reuses
-    # without an extra job submission.
+    # re-execution pitfall. localCheckpoint(eager=False): the second
+    # consumer (the verdict join) reuses the checkpointed rows. Under
+    # AQE this is not deferred to the action — the call itself runs
+    # any upstream shuffle stages as jobs (a probe counted 1 job at
+    # the call with AQE on, 0 off); it saves only the materializing
+    # job an eager checkpoint adds.
     ixz = ix.select("iid", "s", F.size("s").alias("na")).localCheckpoint(eager=False)
     post_i, post_c = screen_postings(cs, ixz, df_cap)
     cand = (

@@ -37,7 +37,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cdc import BucketedStateTable, StateTable, changed_ids, retract_pairs
+from .cdc import StateTable, changed_ids, retract_pairs
 
 
 def stamp(df: DataFrame, seq: int, op: str) -> DataFrame:
@@ -78,14 +78,14 @@ class BandedPairIndex:
         band_buckets: int | None = None,
     ):
         """bucket_col (a bigint expression over the id) switches the
-        signature table to BucketedStateTable so a merge rewrites only
-        the batch's buckets instead of O(corpus) parquet per batch — at
-        a real corpus size this is mandatory, and with monotone ids a
-        RANGE bucket (floor(id/width)) makes each ingest a one-bucket
-        rewrite (the BucketedStateTable regime notes apply) — and lets
-        the changed-detection and verify reads prune to the ids they
-        touch. Without band_buckets the band index shares that
-        bucketing.
+        signature table to the bucketed StateTable layout so a merge
+        rewrites only the batch's buckets, in one write job, instead of
+        O(corpus) parquet per batch — at a real corpus size this is
+        mandatory, and with monotone ids a RANGE bucket (floor(id/width))
+        makes each ingest a one-bucket rewrite (StateTable's regime
+        notes apply) — and lets the changed-detection and verify reads
+        prune to the ids they touch. Without band_buckets the band
+        index shares that bucketing.
 
         band_buckets switches the BAND index to value-derived buckets
         (storage bucket = hash of the (band, bucket) probe key): the
@@ -116,11 +116,10 @@ class BandedPairIndex:
 
     def _table(self, base_dir, name, keys, n_buckets=16, bucket_col=None):
         """A seq-keyed state table: flat, or bucketed by ``bucket_col``."""
-        path = os.path.join(base_dir, name)
-        if bucket_col is None:
-            return StateTable(self.spark, path, keys, "seq")
-        return BucketedStateTable(
-            self.spark, path, keys, "seq", n_buckets=n_buckets, bucket_col=bucket_col
+        return StateTable(
+            self.spark, os.path.join(base_dir, name), keys, "seq",
+            n_buckets=None if bucket_col is None else n_buckets,
+            bucket_col=bucket_col,
         )
 
     # -- the per-detector definition ------------------------------------

@@ -4,7 +4,7 @@ the state layer's one-writer-per-table contract.
 The reference's syncer runs as a manager process with leader election
 (a Kubernetes Lease object guarantees one active controller per
 destination; /root/reference/syncer/main.go manager bootstrap). This
-engine's StateTable/BucketedStateTable declare the same single-writer
+engine's StateTable (flat or bucketed) declares the same single-writer
 model but, until this module, trusted the operator to enforce it. A
 ``WriterLease`` makes it enforced: a would-be writer must hold the
 lease before merging, a crashed writer's lease expires and can be taken

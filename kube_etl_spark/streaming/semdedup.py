@@ -22,7 +22,7 @@ bucket-pruned layout EXECUTED in the band-index siblings
 (streaming/neardup.py / simdup.py, measured in docs/architecture.md
 §round-8) applies here too — ``cell_buckets=True`` — with one
 structural difference: the probe key is centroid_id, so members
-bucket BY CELL (BucketedStateTable.read(buckets=touched cells)) — the
+bucket BY CELL (StateTable.read(buckets=touched cells)) — the
 file-state analog of plans/retrieval_index.py's
 partitionBy(centroid_id) disk pruning — while changed-detection runs
 against a second, vec_id-keyed ``vectors`` table (optionally

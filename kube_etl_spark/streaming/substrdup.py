@@ -34,7 +34,7 @@ reason.
 Scale notes: positions and counts are corpus-gram-sized (the index IS
 the memory); the probes by fingerprint / by doc are state scans here.
 The bucket-pruned swap is EXECUTED code in the band-index siblings
-(streaming/neardup.py / simdup.py: BucketedStateTable.read(buckets=…)
+(streaming/neardup.py / simdup.py: StateTable.read(buckets=…)
 keyed on the probe value, measured in docs/architecture.md §round-8);
 this index's fingerprint probe is the same shape (value-keyed GET) and
 takes the identical layout — bucket positions/counts by

@@ -7,6 +7,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SMOKE_SF = "/root/testdata/sf0.001"
 CORRECTNESS_SF = "/root/testdata/sf0.01"
+# the jobs/ scripts of THIS checkout (they import as top-level modules)
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
 
 
 @pytest.fixture(scope="session")

@@ -8,11 +8,11 @@ import sys
 
 import pytest
 
-from .conftest import SMOKE_SF
+from .conftest import JOBS_DIR, SMOKE_SF
 
 
 def test_run_export_cli(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_export
 
     out = str(tmp_path / "exp")
@@ -23,7 +23,7 @@ def test_run_export_cli(spark, tmp_path, capsys):
 
 
 def test_run_syncer_cli_once(spark, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_syncer
 
     rules = [
@@ -100,7 +100,7 @@ def test_run_syncer_status_publish_skipped_on_unreadable_prev(spark, tmp_path, c
     publishes with the carry intact."""
     import os
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_syncer
 
     rules = [{
@@ -193,7 +193,7 @@ def test_run_syncer_hot_rule_reload(spark, tmp_path, capsys):
     VERDICT r7 #6: the per-syncer status table is re-published every
     micro-batch (condition reflects the new rule generation; an idle or
     newly-suspended syncer keeps its last_sync_seq high-water mark)."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_syncer
 
     def rule(name, mode, suspend=False, secret=None):
@@ -273,7 +273,7 @@ def test_run_syncer_hot_rule_reload(spark, tmp_path, capsys):
 
 
 def test_run_export_cli_yaml(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import yaml
 
     import run_export
@@ -295,7 +295,7 @@ def test_run_export_cli_zip(spark, tmp_path, capsys):
     payloads as contents (kube-etl export --output output.zip)."""
     import zipfile
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_export
 
     out = str(tmp_path / "exp")
@@ -313,7 +313,7 @@ def test_run_export_cli_zip(spark, tmp_path, capsys):
 
 
 def test_run_pretraining_cli(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_pretraining
 
     out = str(tmp_path / "corpus")
@@ -416,7 +416,7 @@ def test_retrieval_index_build_and_probe(spark, tmp_path):
 
 
 def test_run_retrieval_index_cli(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_retrieval_index
 
     idx = str(tmp_path / "idx2")
@@ -609,7 +609,7 @@ def test_layout_zorder_prunes_second_dimension(spark, tmp_path):
 
 
 def test_run_maintenance_cli(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_maintenance
 
     from kube_etl_spark.catalog import load_table
@@ -695,12 +695,12 @@ def test_run_maintenance_gc_cli(spark, tmp_path, capsys):
     refuses a path that is neither."""
     import pytest
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_maintenance
 
     from pyspark.sql import functions as F  # noqa: F401
 
-    from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     def seed(table):
         table.merge_batch(
@@ -732,7 +732,7 @@ def test_run_maintenance_gc_cli(spark, tmp_path, capsys):
     # k=1 (seq 2 < 5) purged; k=2 (seq 9 >= 5) kept as a tombstone
     assert tombs(str(tmp_path / "flat")) == {(2, 9)}
 
-    buck = BucketedStateTable(spark, str(tmp_path / "buck"), ["k"], "seq", 4)
+    buck = StateTable(spark, str(tmp_path / "buck"), ["k"], "seq", n_buckets=4)
     seed(buck)
     run_maintenance.main(
         ["gc", "--state", str(tmp_path / "buck"), "--before-seq", "5"]
@@ -752,7 +752,7 @@ def test_run_index_stream_cli(spark, tmp_path, capsys):
     the watch dir, run --once, and the index must contain them. A
     second --once run with no new files must append nothing (the
     checkpoint already consumed them) — idempotent restart."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_index_stream
 
     from pyspark.sql import functions as F
@@ -1002,7 +1002,7 @@ def test_run_audit_cli(spark, tmp_path, capsys):
     uniform money FAILING Benford (high deviation — the alarm working),
     row counts present for every table, and the parquet report
     readable for run-over-run diffing."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_audit
 
     out = str(tmp_path / "audit")
@@ -1257,7 +1257,7 @@ def test_run_neardup_cli(spark, tmp_path, capsys):
     detection), run --once twice, and the accumulated pair set must
     equal the one-shot batch q_dedup_fuzzy result; a third run with
     nothing new is a checkpointed no-op."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_neardup
 
     from pyspark.sql import functions as F
@@ -1351,7 +1351,7 @@ def test_run_substrdup_cli(spark, tmp_path, capsys):
     drop 2 (cross-batch retroactive spans), two --once runs; the
     accumulated span set must equal the one-shot batch query and a
     third run with nothing new is a checkpointed no-op."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_substrdup
 
     from pyspark.sql import functions as F
@@ -1461,7 +1461,7 @@ def test_run_freq_cli(spark, tmp_path, capsys):
     deletion drop across --once runs; the served matrix must equal a
     fresh batch build over (all events − deleted user's events), and
     --compact folds history without changing it."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_freq
 
     from pyspark.sql import functions as F
@@ -1570,7 +1570,7 @@ def test_run_attribution_cli(spark, tmp_path, capsys):
     state across runs through the stream checkpoint; the final pairs
     table must equal the batch twin (q_stream_stream_join semantics)
     exactly, and rerunning over the same data must not duplicate."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_attribution
 
     from pyspark.sql import functions as F
@@ -1749,7 +1749,7 @@ def test_run_neardup_media_cli(spark, tmp_path, capsys):
     equal the one-shot q_media_neardup screen."""
     import base64
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_neardup
 
     from pyspark.sql import functions as F
@@ -1817,7 +1817,7 @@ def test_run_neardup_semantic_cli(spark, tmp_path, capsys):
     twice, and the accumulated pairs must equal the one-shot batch
     query q_dedup_semantic — through the CLI, the frozen-centroid
     parquet handoff, checkpoint restart, and bucket-pruned probes."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_neardup
 
     import pytest
@@ -1905,7 +1905,7 @@ def test_snapshot_sync_numbering_reset_fails_loudly(spark, tmp_path):
     single late straggler still skips quietly."""
     import pytest
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_snapshot_sync
     from pyspark.sql import functions as F  # noqa: F401
 
@@ -1946,7 +1946,7 @@ def test_snapshot_sync_slow_drip_reset_fails_loudly(spark, tmp_path):
     processes. A successful apply in between resets the counter."""
     import pytest
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_snapshot_sync
 
     watch = tmp_path / "watch"
@@ -1993,7 +1993,7 @@ def test_kube_etl_front_door_covers_every_job():
     import glob
     import os
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import kube_etl
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -2013,7 +2013,7 @@ def test_kube_etl_dispatch_and_errors(spark, tmp_path, capsys):
     """`kube-etl export --output ...` must behave exactly like
     run_export.main (argv forwards verbatim); an unknown subcommand and
     a bare invocation must exit 2 with the usage text; --help exits 0."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import kube_etl
 
     out = str(tmp_path / "exp")
@@ -2038,9 +2038,7 @@ def test_kube_etl_dispatch_and_errors(spark, tmp_path, capsys):
 def test_plan_audit_dump_needs_dump_dir(capsys):
     """`plan_audit --dump` takes its directory from --dump-dir and
     refuses to run without one, before a Spark session starts."""
-    import os
-
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs"))
+    sys.path.insert(0, JOBS_DIR)
     import plan_audit
 
     with pytest.raises(SystemExit) as exc:

@@ -21,6 +21,8 @@ from kube_etl_spark.streaming.kubeapi import (
     watch_to_landing,
 )
 
+from .conftest import JOBS_DIR
+
 TOKEN = "sha256~fake-token"
 
 
@@ -298,7 +300,7 @@ def test_watch_to_landing_feeds_run_syncer(client, spark, tmp_path):
     live state, obj-9's LATEST edit wins)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_syncer
 
     landing = tmp_path / "oplog"
@@ -360,7 +362,7 @@ def test_run_cluster_export_cli(client, api_server, spark, tmp_path, capsys):
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import kube_etl
 
     kubeconfig = f"""
@@ -403,7 +405,7 @@ def test_watch_bridge_bookmark_and_410_relist(client, api_server, spark, tmp_pat
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_snapshot_sync
     import run_watch_bridge
 
@@ -558,7 +560,7 @@ def test_bridge_tolerates_failing_target_and_persists_per_target(
     whole pass's bookmarks)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_watch_bridge
 
     kubeconfig = f"""
@@ -606,7 +608,7 @@ def test_410_relist_with_syncer_state_converges_deletes(
     twin via its watch events; both must be gone after the relist."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_syncer
     import run_watch_bridge
 
@@ -696,7 +698,7 @@ def test_live_smoke_harness_against_fake_server(
     for a real cluster; absence of KUBECONFIG degrades to exit 0."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import live_smoke
 
     monkeypatch.delenv("KUBECONFIG", raising=False)
@@ -833,7 +835,7 @@ def test_prune_committed_landing(spark, tmp_path):
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_maintenance
     import run_syncer
 
@@ -901,7 +903,7 @@ def test_bridge_survives_spark_side_relist_failure(
     the loop alive for the other targets."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_watch_bridge
 
     kubeconfig = f"""

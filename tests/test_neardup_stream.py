@@ -244,7 +244,7 @@ def test_bucketed_index_equals_flat(spark, tmp_path):
     rewrites for the corpus tables) must detect the identical pair set,
     and a second-batch ingest must leave the first batch's untouched
     low-id sig bucket on its original version directory (the
-    BucketedStateTable untouched-bucket guarantee, exercised through
+    bucketed StateTable's untouched-bucket guarantee, exercised through
     the index)."""
     import os
 
@@ -278,7 +278,7 @@ def test_neardup_band_pruned_mode_matches_flat(spark, tmp_path):
     shrunk-below-shingling re-ingest, replay, compliance delete,
     revival — produces exactly the flat index's pair set at every
     step, and every probe read during the lifecycle is bucket-pruned."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     corpus = _neardup_corpus(spark, SMOKE_SF, limit=10**9).localCheckpoint(eager=True)
     b1 = corpus.filter(F.col("doc_id") < 200000)
@@ -294,14 +294,14 @@ def test_neardup_band_pruned_mode_matches_flat(spark, tmp_path):
     )
 
     band_reads: list = []
-    orig_read = BucketedStateTable.read
+    orig_read = StateTable.read
 
     def spy_read(self, buckets=None):
-        if self.path.endswith("bands"):
+        if self.bucketed and self.path.endswith("bands"):
             band_reads.append(buckets)
         return orig_read(self, buckets)
 
-    BucketedStateTable.read = spy_read
+    StateTable.read = spy_read
     try:
         victim = None
         for step, act in enumerate(
@@ -337,7 +337,7 @@ def test_neardup_band_pruned_mode_matches_flat(spark, tmp_path):
                 assert fp, "no pairs after both batches"
                 victim = max(b for _, b, _ in fp)
     finally:
-        BucketedStateTable.read = orig_read
+        StateTable.read = orig_read
 
     cols = ["doc_id", "band", "bucket"]
     assert {tuple(r) for r in flat.bands.read().select(*cols).collect()} == {
@@ -512,13 +512,13 @@ def test_delete_wins_same_seq_tie(spark, tmp_path):
     (one micro-batch inserting and GDPR-deleting a doc, delete stamped
     with the batch id) must resolve to the delete — a lost delete is a
     silent compliance failure; a lost same-seq upsert is re-ingestable."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     for name, table in [
         ("flat", StateTable(spark, str(tmp_path / "flat"), ["k"], "seq")),
         (
             "bucketed",
-            BucketedStateTable(
+            StateTable(
                 spark, str(tmp_path / "bucketed"), ["k"], "seq", n_buckets=4
             ),
         ),
@@ -614,13 +614,13 @@ def test_tombstone_blocks_replayed_earlier_upsert(spark, tmp_path):
     upsert (seq b < D) must keep the key deleted — the delete persists
     as a tombstone that outranks the stale upsert, instead of the
     filtered-out state leaving the replayed row uncontested."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     for name, table in [
         ("flat", StateTable(spark, str(tmp_path / "flat"), ["k"], "seq")),
         (
             "bucketed",
-            BucketedStateTable(
+            StateTable(
                 spark, str(tmp_path / "bucketed"), ["k"], "seq", n_buckets=4
             ),
         ),
@@ -754,9 +754,9 @@ def test_cms_real_stream_converges(spark, tmp_path):
 def test_bucketed_purge_tombstones(spark, tmp_path):
     """Per-bucket tombstone compaction honors the seq horizon and
     leaves live rows and newer tombstones protecting their keys."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
-    t = BucketedStateTable(spark, str(tmp_path / "b"), ["k"], "seq", n_buckets=4)
+    t = StateTable(spark, str(tmp_path / "b"), ["k"], "seq", n_buckets=4)
     t.merge_batch(
         spark.createDataFrame(
             [(i, 1, f"v{i}", "upsert") for i in range(8)],
@@ -901,14 +901,15 @@ def test_simdup_crash_window_converges(spark, tmp_path):
 
 
 def test_bucketed_state_pruned_read(spark, tmp_path):
-    """BucketedStateTable.read(buckets=...) returns exactly the named
+    """StateTable.read(buckets=...) returns exactly the named
     live buckets' rows (tombstones still hidden), buckets_for maps a
     frame to its storage buckets, and ids for empty/unknown buckets are
     skipped silently — the point-lookup contract (VERDICT r7 #3)."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
-    t = BucketedStateTable(
-        spark, str(tmp_path / "t"), ["k"], "seq", 4, F.pmod(F.col("k"), F.lit(4))
+    t = StateTable(
+        spark, str(tmp_path / "t"), ["k"], "seq", n_buckets=4,
+        bucket_col=F.pmod(F.col("k"), F.lit(4)),
     )
     rows = spark.createDataFrame(
         [(k, k * 10, 1, "upsert") for k in range(12)], "k long, v long, seq long, op string"
@@ -929,20 +930,20 @@ def test_bucketed_state_pruned_read(spark, tmp_path):
 
 
 def test_bucketed_open_of_flat_state_refuses(spark, tmp_path):
-    """Opening an existing FLAT StateTable path as a BucketedStateTable
+    """Opening an existing FLAT StateTable path as a bucketed StateTable
     must refuse loudly: the bucketed layout would write bucket dirs
     inside the flat table's current version dir and the established
     state would silently read as empty (review r8)."""
     import pytest
 
-    from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     t = StateTable(spark, str(tmp_path / "t"), ["k"], "seq")
     t.merge_batch(
         spark.createDataFrame([(1, 1, "upsert")], "k long, seq long, op string")
     )
     with pytest.raises(ValueError, match="flat StateTable layout"):
-        BucketedStateTable(spark, str(tmp_path / "t"), ["k"], "seq", 4)
+        StateTable(spark, str(tmp_path / "t"), ["k"], "seq", n_buckets=4)
 
 
 @pytest.mark.slow
@@ -956,7 +957,7 @@ def test_simdup_bucket_pruned_mode_matches_flat(spark, tmp_path):
     every post-warmup bands read is bucket-pruned and touches fewer
     dirs than exist)."""
     from kube_etl_spark.streaming import simdup as sd
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
     from kube_etl_spark.streaming.simdup import SimDupIndex
 
     corpus = _simdup_corpus(spark).localCheckpoint(eager=True)
@@ -974,14 +975,14 @@ def test_simdup_bucket_pruned_mode_matches_flat(spark, tmp_path):
     )
 
     band_reads: list = []
-    orig_read = BucketedStateTable.read
+    orig_read = StateTable.read
 
     def spy_read(self, buckets=None):
-        if self.path.endswith("/bands"):
+        if self.bucketed and self.path.endswith("/bands"):
             band_reads.append(buckets)
         return orig_read(self, buckets)
 
-    BucketedStateTable.read = spy_read
+    StateTable.read = spy_read
     try:
         victim = None
         for step, act in enumerate(
@@ -1023,7 +1024,7 @@ def test_simdup_bucket_pruned_mode_matches_flat(spark, tmp_path):
                 assert fp, "no pairs after the variants arrived"
                 victim = max(b for _, b, _ in fp)
     finally:
-        BucketedStateTable.read = orig_read
+        StateTable.read = orig_read
 
     # sig/band state converged too (ignoring seqs and layout)
     cols = ["media_id", "band", "bucket"]
@@ -1139,7 +1140,7 @@ def test_semdedup_cell_bucketed_mode_matches_flat(spark, tmp_path):
     set at every step, and every member-state probe names its cells."""
     from kube_etl_spark.catalog import load_table
     from kube_etl_spark.queries.llm import _dot, _kmeans_centroids
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
     from kube_etl_spark.streaming.semdedup import SemanticDedupIndex
 
     vecs = (
@@ -1168,17 +1169,17 @@ def test_semdedup_cell_bucketed_mode_matches_flat(spark, tmp_path):
     )
 
     member_reads: list = []
-    orig_read = BucketedStateTable.read
+    orig_read = StateTable.read
 
     def spy_read(self, buckets=None):
-        if self.path.endswith("members"):
+        if self.bucketed and self.path.endswith("members"):
             member_reads.append(buckets)
         return orig_read(self, buckets)
 
     changed = spark.createDataFrame(
         [(9001, [1.0] + [0.0] * (dim - 1))], "vec_id long, v array<float>"
     )
-    BucketedStateTable.read = spy_read
+    StateTable.read = spy_read
     try:
         for step, act in enumerate(
             [
@@ -1200,7 +1201,7 @@ def test_semdedup_cell_bucketed_mode_matches_flat(spark, tmp_path):
             if step == 1:
                 assert any(a == 3 and b == 9001 for a, b, _ in fp)
     finally:
-        BucketedStateTable.read = orig_read
+        StateTable.read = orig_read
 
     # member state converged (v compared via the pair outputs above;
     # here the cell routing itself)

@@ -1239,7 +1239,7 @@ def test_field_merge_divergence_single_aggregate(spark):
     """Same guarantee for the field-merge audit: the row winner and
     both per-field winners collapse into one per-key aggregate — no
     windows, no non-broadcast joins (the engine twin,
-    cdc._field_merge_winners, has the same shape)."""
+    cdc.field_merge_winners, has the same shape)."""
     plan = _plan(spark, "q_field_merge_divergence")
     assert "Window" not in plan
     for node in ("SortMergeJoin", "ShuffledHashJoin"):
@@ -1266,7 +1266,7 @@ def test_field_merge_winners_single_exchange(spark):
     map-side partial aggregate in front of it — the row-LWW-equal
     shuffle shape the 1M scale-truth (architecture.md §r11b) prices at
     a 1.68× constant factor. A refactor that reintroduced per-field
-    windows or joins would turn every StateTable/BucketedStateTable
+    windows or joins would turn every StateTable (flat or bucketed)
     merge into a multi-exchange plan; this pins the shape at the
     function boundary. (Simple mode: formatted mode lists each node
     twice — tree + details — so counting there is wrong, the r11

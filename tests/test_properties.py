@@ -16,6 +16,8 @@ defaults.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -1112,6 +1114,33 @@ def test_global_interval_merge_matches_window_form(spark, rows, nparts):
     assert set(got.values()) == set(range(1, max(got.values()) + 1))
 
 
+def _parquet_frame(spark, tmp_path_factory, rows):
+    """(id, p, d) rows as a file scan: it carries a real size estimate,
+    while a createDataFrame frame estimates Long.MaxValue and would
+    send skyline_2d down its fenced branch every time."""
+    path = str(tmp_path_factory.mktemp("skyline") / "t")
+    spark.createDataFrame(rows, "id long, p long, d long").write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@contextlib.contextmanager
+def _cummax_calls():
+    """Record skyline_2d's calls into the fenced global_cummax."""
+    import kube_etl_spark.queries.scale as sc
+
+    calls, real = [], sc.global_cummax
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    sc.global_cummax = spy
+    try:
+        yield calls
+    finally:
+        sc.global_cummax = real
+
+
 @PROPS
 @given(
     rows=st.lists(
@@ -1124,12 +1153,16 @@ def test_global_interval_merge_matches_window_form(spark, rows, nparts):
     ),
     nparts=st.integers(min_value=1, max_value=5),
 )
-def test_skyline_2d_matches_bruteforce_dominance(spark, rows, nparts):
+def test_skyline_2d_matches_bruteforce_dominance(
+    spark, tmp_path_factory, rows, nparts
+):
     """skyline_2d (scale.py) must equal BRUTE-FORCE pairwise dominance
     — an independent algorithm, not the window form it is built from —
     on dense tie-heavy inputs: row i is dominated iff some row j has
     p_j ≤ p_i and d_j ≥ d_i with at least one strict; full (p, d) ties
-    all survive."""
+    all survive. The frame is a file scan, so its small size estimate
+    selects the plain window (the fenced branch has its own property
+    below)."""
     from kube_etl_spark.queries.scale import skyline_2d
 
     expect = {
@@ -1141,12 +1174,13 @@ def test_skyline_2d_matches_bruteforce_dominance(spark, rows, nparts):
             if j != i
         )
     }
-    df = spark.createDataFrame(
-        [(i, p, d) for i, (p, d) in enumerate(rows)],
-        "id long, p long, d long",
+    df = _parquet_frame(
+        spark, tmp_path_factory, [(i, p, d) for i, (p, d) in enumerate(rows)]
     ).repartition(nparts)
-    got = {r["id"] for r in skyline_2d(df, "p", "d").collect()}
+    with _cummax_calls() as fenced:
+        got = {r["id"] for r in skyline_2d(df, "p", "d").collect()}
     assert got == expect
+    assert not fenced
 
 
 @PROPS
@@ -1155,7 +1189,7 @@ def test_skyline_2d_matches_bruteforce_dominance(spark, rows, nparts):
     nparts=st.integers(min_value=2, max_value=5),
 )
 def test_skyline_2d_fenced_fallback_on_adversarial_no_prune_layout(
-    spark, n, nparts
+    spark, tmp_path_factory, n, nparts
 ):
     """The worst-case guard (VERDICT r12 #5): when the per-value frame
     is estimated data-sized, skyline_2d's global strict-prefix pass
@@ -1168,10 +1202,9 @@ def test_skyline_2d_fenced_fallback_on_adversarial_no_prune_layout(
     import kube_etl_spark.queries.scale as sc
 
     rows = [(i, i, i) for i in range(n)]  # ascending on both dims
-    df = (
-        spark.createDataFrame(rows, "id long, p long, d long")
-        .repartitionByRange(nparts, "p")  # per-partition ascending runs
-    )
+    df = _parquet_frame(spark, tmp_path_factory, rows).repartitionByRange(
+        nparts, "p"
+    )  # per-partition ascending runs
     expect = {
         i
         for i, (pi, di) in enumerate([(p, d) for _, p, d in rows])
@@ -1184,13 +1217,15 @@ def test_skyline_2d_fenced_fallback_on_adversarial_no_prune_layout(
     saved = sc._SKYLINE_PLAIN_MAX_BYTES
     try:
         sc._SKYLINE_PLAIN_MAX_BYTES = 0  # force the fenced path
-        got = {r["id"] for r in sc.skyline_2d(df, "p", "d").collect()}
+        with _cummax_calls() as fenced:
+            got = {r["id"] for r in sc.skyline_2d(df, "p", "d").collect()}
     finally:
         sc._SKYLINE_PLAIN_MAX_BYTES = saved
-    assert got == expect
+    assert got == expect and fenced
     # and the plain path agrees on the same frame
-    got_plain = {r["id"] for r in sc.skyline_2d(df, "p", "d").collect()}
-    assert got_plain == expect
+    with _cummax_calls() as fenced:
+        got_plain = {r["id"] for r in sc.skyline_2d(df, "p", "d").collect()}
+    assert got_plain == expect and not fenced
 
 
 @PROPS
@@ -1311,9 +1346,10 @@ def test_field_merge_equals_sequential_ssa_model(spark, tmp_path_factory, data):
     order) — the chunking-independence theorem row-LWW already has,
     extended to per-field winners and their persisted __seq_<f>
     sidecars. The BUCKETED layout merges every chunk too (it shares
-    field_merge_winners, but its per-bucket slice/union path is its
-    own — a drift there would pass a flat-only property)."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+    field_merge_winners, but its bucket-keyed winners and one-job
+    partitioned write are its own — a drift there would pass a
+    flat-only property)."""
+    from kube_etl_spark.streaming.cdc import StateTable
 
     ops, chunk_of = data
     root = tmp_path_factory.mktemp("fm-prop")
@@ -1321,7 +1357,7 @@ def test_field_merge_equals_sequential_ssa_model(spark, tmp_path_factory, data):
         spark, str(root / "state"), ["key"], "seq",
         field_merge=["spec", "status"],
     )
-    bucketed = BucketedStateTable(
+    bucketed = StateTable(
         spark, str(root / "bucketed"), ["key"], "seq", n_buckets=2,
         field_merge=["spec", "status"],
     )

@@ -1422,20 +1422,20 @@ def test_drift_monitor_restart_recovery(spark, tmp_path):
 
 
 def test_bucketed_state_equals_flat_state(spark, tmp_path):
-    """BucketedStateTable is semantically identical to StateTable on
+    """A bucketed StateTable is semantically identical to a flat one on
     the same op-log chunks (winners, deletes, replay), while only
     rewriting the buckets a batch touches — untouched buckets keep
     their exact version directory across a merge."""
     import os as _os
 
-    from kube_etl_spark.streaming.cdc import BucketedStateTable, StateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     schema = "seq long, key long, op string, value double"
     ops1 = [(i, k, "upsert", float(k * 10 + i)) for i, k in enumerate(range(20))]
     ops2 = [(100, 3, "upsert", 999.0), (101, 7, "delete", None), (102, 50, "upsert", 1.5)]
 
     flat = StateTable(spark, str(tmp_path / "flat"), ["key"], "seq")
-    buck = BucketedStateTable(spark, str(tmp_path / "buck"), ["key"], "seq", n_buckets=8)
+    buck = StateTable(spark, str(tmp_path / "buck"), ["key"], "seq", n_buckets=8)
     for ops in (ops1, ops2):
         df = spark.createDataFrame(ops, schema)
         flat.merge_batch(df)
@@ -1483,10 +1483,10 @@ def test_bucketed_state_refuses_spec_drift(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     path = str(tmp_path / "state")
-    t = BucketedStateTable(spark, path, ["key"], "seq", n_buckets=8)
+    t = StateTable(spark, path, ["key"], "seq", n_buckets=8)
     t.merge_batch(
         spark.createDataFrame(
             [(1, k, "upsert", float(k)) for k in range(10)],
@@ -1494,27 +1494,27 @@ def test_bucketed_state_refuses_spec_drift(spark, tmp_path):
         )
     )
     # same spec reopens fine and sees the state
-    again = BucketedStateTable(spark, path, ["key"], "seq", n_buckets=8)
+    again = StateTable(spark, path, ["key"], "seq", n_buckets=8)
     assert again.read().count() == 10
 
     with pytest.raises(ValueError, match="different bucket spec"):
-        BucketedStateTable(spark, path, ["key"], "seq", n_buckets=16)
+        StateTable(spark, path, ["key"], "seq", n_buckets=16)
     with pytest.raises(ValueError, match="different bucket spec"):
-        BucketedStateTable(
+        StateTable(
             spark, path, ["key"], "seq", n_buckets=8,
             bucket_col=F.pmod(F.col("key"), F.lit(8)),
         )
     with pytest.raises(ValueError, match="different bucket spec"):
-        BucketedStateTable(spark, path, ["key", "extra"], "seq", n_buckets=8)
+        StateTable(spark, path, ["key", "extra"], "seq", n_buckets=8)
 
     # pre-sidecar grandfather: a state dir created before the sidecar
     # existed is stamped with the opener's spec on first open (cannot
     # validate that one open), and validates every open after it
-    _os.remove(_os.path.join(path, BucketedStateTable._SIDECAR))
-    BucketedStateTable(spark, path, ["key"], "seq", n_buckets=8)
-    assert _os.path.exists(_os.path.join(path, BucketedStateTable._SIDECAR))
+    _os.remove(_os.path.join(path, StateTable._SIDECAR))
+    StateTable(spark, path, ["key"], "seq", n_buckets=8)
+    assert _os.path.exists(_os.path.join(path, StateTable._SIDECAR))
     with pytest.raises(ValueError, match="different bucket spec"):
-        BucketedStateTable(spark, path, ["key"], "seq", n_buckets=4)
+        StateTable(spark, path, ["key"], "seq", n_buckets=4)
 
 
 def test_bucketed_state_purge_only_handle(spark, tmp_path):
@@ -1524,10 +1524,10 @@ def test_bucketed_state_purge_only_handle(spark, tmp_path):
     raises instead of silently misrouting under the placeholder."""
     import pytest
 
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     path = str(tmp_path / "state")
-    real = BucketedStateTable(spark, path, ["key"], "seq", n_buckets=4)
+    real = StateTable(spark, path, ["key"], "seq", n_buckets=4)
     real.merge_batch(
         spark.createDataFrame(
             [(1, k, "upsert", float(k)) for k in range(6)]
@@ -1536,7 +1536,7 @@ def test_bucketed_state_purge_only_handle(spark, tmp_path):
         )
     )
 
-    blind = BucketedStateTable.open_for_purge(spark, path, seq_col="seq")
+    blind = StateTable.open_for_purge(spark, path, seq_col="seq")
     assert blind.read().count() == 4  # live rows, key-agnostic
     blind.purge_tombstones(before_seq=5)  # drops (key=0, seq=2) only
     # live buckets are the symlinks; non-link bucket-* entries are
@@ -1583,9 +1583,216 @@ def test_bucketed_state_purge_only_handle(spark, tmp_path):
         )
     # the purge-only open did not corrupt the sidecar: the real spec
     # still reopens and a drifted one still refuses
-    BucketedStateTable(spark, path, ["key"], "seq", n_buckets=4)
+    StateTable(spark, path, ["key"], "seq", n_buckets=4)
     with pytest.raises(ValueError, match="different bucket spec"):
-        BucketedStateTable(spark, path, ["key"], "seq", n_buckets=8)
+        StateTable(spark, path, ["key"], "seq", n_buckets=8)
+
+
+def test_bucketed_merge_jobs_do_not_grow_with_touched_buckets(spark, tmp_path):
+    """A bucketed merge computes every touched bucket's winners in one
+    pass and writes them in ONE job (partitionBy the bucket), then
+    publishes each bucket by a metadata-only move: a uniform batch
+    touching all 16 hash buckets runs at most one Spark job more than
+    a one-bucket batch, and at most 6 in all. Counted by job group."""
+    from pyspark.sql import functions as F
+
+    from kube_etl_spark.streaming.cdc import StateTable
+
+    path = str(tmp_path / "state")
+    spark.range(4000).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 3).alias("v"),
+        F.lit(1).cast("bigint").alias("seq"),
+        F.lit("upsert").alias("op"),
+    ).write.parquet(str(tmp_path / "seed"))
+    seed = spark.read.parquet(str(tmp_path / "seed"))
+    t = StateTable(spark, path, ["k"], "seq", n_buckets=16)
+    t.merge_batch(seed)
+    sc = spark.sparkContext
+
+    def jobs_for(batch, group):
+        sc.setJobGroup(group, group)
+        try:
+            t.merge_batch(batch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = seed.filter(F.col("k") == 7).withColumn("seq", F.lit(2).cast("bigint"))
+    uniform = seed.filter(F.col("k") % 50 == 0).withColumn(
+        "seq", F.lit(3).cast("bigint")
+    )
+    assert len(t.buckets_for(one)) == 1 and len(t.buckets_for(uniform)) == 16
+    n_one = jobs_for(one, f"bucketed-one-{tmp_path.name}")
+    n_all = jobs_for(uniform, f"bucketed-all-{tmp_path.name}")
+    assert n_all <= n_one + 1 and n_all <= 6, (n_one, n_all)
+    # and the merges landed: 4000 live keys, the batches' seqs on top
+    got = {r["k"]: r["seq"] for r in t.read().collect()}
+    assert len(got) == 4000 and got[7] == 2 and got[50] == 3 and got[51] == 1
+
+
+def test_bucketed_merge_winners_per_bucket_under_value_buckets(spark, tmp_path):
+    """Under a bucket expression over a PAYLOAD column (band_buckets'
+    shape) one key can hold rows in two buckets: a batch that
+    tombstones the key's old row in bucket 1 and upserts its new value
+    into bucket 2 at the same seq must leave exactly the new row live.
+    Winners are decided per (bucket, key): deciding per key alone
+    would let the same-seq delete win both and lose the upsert."""
+    from pyspark.sql import functions as F
+
+    from kube_etl_spark.streaming.cdc import StateTable
+
+    schema = "k long, v long, seq long, op string"
+    t = StateTable(
+        spark, str(tmp_path / "t"), ["k"], "seq", n_buckets=4,
+        bucket_col=F.pmod(F.col("v"), F.lit(4)),
+    )
+    t.merge_batch(spark.createDataFrame([(1, 1, 1, "upsert"), (2, 3, 1, "upsert")], schema))
+    t.merge_batch(
+        spark.createDataFrame([(1, 1, 5, "delete"), (1, 2, 5, "upsert")], schema)
+    )
+    assert sorted(tuple(r) for r in t.read().select("k", "v").collect()) == [
+        (1, 2), (2, 3)
+    ]
+    assert t.read(buckets=[1]).count() == 0  # the old row's tombstone
+
+
+def test_bucketed_merge_lease_lost_mid_publish_converges(spark, tmp_path):
+    """The bucketed crash/fencing contract: the lease check runs inside
+    EACH bucket's publish, so a writer fenced off after the first of
+    several touched-bucket publishes raises LeaseLost and leaves every
+    bucket on a complete old or new version (only the first published
+    bucket moved). The new owner re-acquires, replays the batch, and
+    reads exactly what an uninterrupted merge reads."""
+    import json
+    import os
+    import time
+
+    import pytest
+
+    from kube_etl_spark.streaming.cdc import StateTable
+    from kube_etl_spark.streaming.lease import LeaseLost, WriterLease
+
+    schema = "k long, seq long, v string, op string"
+    seed = spark.createDataFrame(
+        [(k, 1, f"v{k}", "upsert") for k in range(24)], schema
+    )
+    batch = spark.createDataFrame(
+        [(k, 2, f"w{k}", "upsert") for k in range(0, 24, 2)]
+        + [(3, 2, None, "delete")],
+        schema,
+    )
+    ref = StateTable(spark, str(tmp_path / "ref"), ["k"], "seq", n_buckets=4)
+    ref.merge_batch(seed)
+    ref.merge_batch(batch)
+
+    lease_path = str(tmp_path / "state.lease")
+    old = WriterLease(lease_path, owner="old", ttl_s=60)
+    assert old.acquire()
+    path = str(tmp_path / "state")
+    t = StateTable(spark, path, ["k"], "seq", n_buckets=4, lease=old)
+    t.merge_batch(seed)
+    assert len(t.buckets_for(batch)) >= 3
+
+    def per_bucket(table):
+        return {
+            b: sorted(tuple(r) for r in table.read(buckets=[b]).collect())
+            for b in range(4)
+        }
+
+    def links():
+        return {
+            d: os.readlink(os.path.join(path, d))
+            for d in os.listdir(path)
+            if d.startswith("bucket-") and os.path.islink(os.path.join(path, d))
+        }
+
+    before, targets = per_bucket(t), links()
+    real_check, calls = old.assert_held, []
+
+    def takeover_after_first_publish():
+        calls.append(1)
+        if len(calls) == 2:  # a new owner takes over mid-loop
+            rec = json.load(open(lease_path))
+            rec["deadline"] = time.time() - 1
+            with open(lease_path, "w") as f:
+                json.dump(rec, f)
+            assert WriterLease(lease_path, owner="new", ttl_s=60).acquire()
+        real_check()
+
+    old.assert_held = takeover_after_first_publish
+    with pytest.raises(LeaseLost):
+        t.merge_batch(batch)
+    moved = [d for d, tgt in links().items() if tgt != targets[d]]
+    assert len(moved) == 1, moved
+    after, want = per_bucket(t), per_bucket(ref)
+    for b in range(4):
+        assert os.path.exists(os.path.join(path, f"bucket-{b:06d}", "_SUCCESS"))
+        assert after[b] in (before[b], want[b]), b
+    assert sum(after[b] != before[b] for b in range(4)) == 1
+
+    new = WriterLease(lease_path, owner="new", ttl_s=60)
+    assert new.acquire()
+    StateTable(spark, path, ["k"], "seq", n_buckets=4, lease=new).merge_batch(batch)
+    assert per_bucket(t) == want
+    assert sorted(tuple(r) for r in t.read().collect()) == sorted(
+        tuple(r) for r in ref.read().collect()
+    )
+    # the abandoned merge left no garbage behind the replay: no staging
+    # dir, and each bucket back to its current + one grace version
+    names = os.listdir(path)
+    assert not [d for d in names if d.startswith("_staging-")]
+    for b in range(4):
+        assert sum(d.startswith(f"bucket-{b:06d}.v-") for d in names) <= 2
+
+
+def test_bucketed_merge_fenced_writer_keeps_other_staging(spark, tmp_path):
+    """A fenced-off writer deletes nothing it does not own: its merge
+    removes only its own staging dir, and other ``_staging-*`` dirs
+    (a crashed merge's leftovers) are swept only after a publish of
+    that merge passed the lease check. So another owner's in-flight
+    staging dir survives a stale writer's merge, and the rightful
+    owner's next merge sweeps a leftover one."""
+    import json
+    import os
+    import time
+
+    import pytest
+
+    from kube_etl_spark.streaming.cdc import StateTable
+    from kube_etl_spark.streaming.lease import LeaseLost, WriterLease
+
+    schema = "k long, seq long, v string, op string"
+    seed = spark.createDataFrame([(k, 1, f"v{k}", "upsert") for k in range(8)], schema)
+    batch = spark.createDataFrame([(k, 2, f"w{k}", "upsert") for k in range(8)], schema)
+    lease_path = str(tmp_path / "state.lease")
+    old = WriterLease(lease_path, owner="old", ttl_s=60)
+    assert old.acquire()
+    path = str(tmp_path / "state")
+    t = StateTable(spark, path, ["k"], "seq", n_buckets=4, lease=old)
+    t.merge_batch(seed)
+
+    rec = json.load(open(lease_path))
+    rec["deadline"] = time.time() - 1
+    with open(lease_path, "w") as f:
+        json.dump(rec, f)
+    new = WriterLease(lease_path, owner="new", ttl_s=60)
+    assert new.acquire()
+    theirs = os.path.join(path, "_staging-newowner", "__b=1")
+    os.makedirs(theirs)
+    open(os.path.join(theirs, "part-00000.parquet"), "w").close()
+
+    with pytest.raises(LeaseLost):
+        t.merge_batch(batch)
+    assert os.path.exists(os.path.join(theirs, "part-00000.parquet"))
+    assert [d for d in os.listdir(path) if d.startswith("_staging-")] == [
+        "_staging-newowner"
+    ]
+
+    StateTable(spark, path, ["k"], "seq", n_buckets=4, lease=new).merge_batch(batch)
+    assert not [d for d in os.listdir(path) if d.startswith("_staging-")]
+    assert sorted(r["v"] for r in t.read().collect()) == [f"w{k}" for k in range(8)]
 
 
 def test_atomic_overwrite_migrates_plain_directory(spark, tmp_path):

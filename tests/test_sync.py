@@ -18,6 +18,8 @@ from kube_etl_spark.streaming.sync import (
     validate_rules,
 )
 
+from .conftest import JOBS_DIR
+
 OBJ_SCHEMA = (
     "seq long, op string, group string, version string, kind string, "
     "namespace string, name string, labels map<string,string>, "
@@ -551,7 +553,7 @@ def test_field_merge_cli_flag_wires_local_destination(spark, tmp_path):
     import json as _json
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_syncer
 
     rules = [
@@ -632,18 +634,18 @@ def _fm_batches(spark):
 
 
 def test_field_merge_bucketed_matches_flat(spark, tmp_path):
-    """BucketedStateTable(field_merge=…) must be semantically identical
+    """A bucketed StateTable(field_merge=…) must be semantically identical
     to the flat table — both call the shared field_merge_winners, and
     this pins that the per-bucket slicing/union cannot drift: same
     out-of-order chunks with contention and a delete-then-reassert,
     byte-equal live state, internals hidden by read() in both."""
     import json as _json
 
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     flat = StateTable(spark, str(tmp_path / "flat"), KEYS, "seq",
                       field_merge=["spec", "status"])
-    bucketed = BucketedStateTable(
+    bucketed = StateTable(
         spark, str(tmp_path / "bucketed"), KEYS, "seq", n_buckets=4,
         field_merge=["spec", "status"])
     for batch in _fm_batches(spark):
@@ -680,25 +682,25 @@ def test_field_merge_bucketed_sidecar_rejects_semantic_drift(spark, tmp_path):
     fields."""
     import json as _json
 
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     path = str(tmp_path / "state")
-    BucketedStateTable(spark, path, KEYS, "seq", n_buckets=4,
+    StateTable(spark, path, KEYS, "seq", n_buckets=4,
                        field_merge=["spec", "status"])
     # same spec reopens fine
-    BucketedStateTable(spark, path, KEYS, "seq", n_buckets=4,
+    StateTable(spark, path, KEYS, "seq", n_buckets=4,
                        field_merge=["spec", "status"])
     with pytest.raises(ValueError, match="field_merge"):
-        BucketedStateTable(spark, path, KEYS, "seq", n_buckets=4)
+        StateTable(spark, path, KEYS, "seq", n_buckets=4)
     # grandfather: a pre-field-merge sidecar lacks the key; a row-LWW
     # opener matches it, a field-merge opener refuses
     side = tmp_path / "state" / "_layout.json"
     spec = _json.loads(side.read_text())
     del spec["field_merge"]
     side.write_text(_json.dumps(spec))
-    BucketedStateTable(spark, path, KEYS, "seq", n_buckets=4)
+    StateTable(spark, path, KEYS, "seq", n_buckets=4)
     with pytest.raises(ValueError, match="field_merge"):
-        BucketedStateTable(spark, path, KEYS, "seq", n_buckets=4,
+        StateTable(spark, path, KEYS, "seq", n_buckets=4,
                            field_merge=["spec", "status"])
 
 
@@ -752,7 +754,7 @@ def test_read_keeps_user_dunder_columns(spark, tmp_path):
     and __seq_<f> for a payload twin f) — a payload column that
     legitimately starts with '__' belongs to the user and must
     survive the read, in both layouts."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     schema = "k string, seq long, op string, __custom string, spec string"
     batch = spark.createDataFrame([("a", 1, "upsert", "user-data", "sp")], schema)
@@ -763,7 +765,7 @@ def test_read_keeps_user_dunder_columns(spark, tmp_path):
     assert row["__custom"] == "user-data"
     assert "__op" not in row.asDict() and "__seq_spec" not in row.asDict()
 
-    bkt = BucketedStateTable(spark, str(tmp_path / "bkt"), ["k"], "seq",
+    bkt = StateTable(spark, str(tmp_path / "bkt"), ["k"], "seq",
                              n_buckets=2, field_merge=["spec"])
     bkt.merge_batch(batch)
     row = bkt.read().collect()[0]
@@ -905,7 +907,7 @@ def test_owned_merge_sidecar_guards_manager_mode(spark, tmp_path):
     would drop (or fabricate) the __mgr_/__own_/__cf_ audit trail on
     the first compaction — refuse, like the field_merge toggle. The
     bucketed layout shares the guard via its layout sidecar."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     t = _mk_owned(spark, tmp_path, "spec")
     t.merge_batch(spark.createDataFrame(
@@ -916,11 +918,11 @@ def test_owned_merge_sidecar_guards_manager_mode(spark, tmp_path):
     # force_ownership is an APPLY-TIME option, not spec: toggling it
     # must NOT be refused (the reference sets ForceOwnership per apply)
     _mk_owned(spark, tmp_path, "spec", force=True)
-    b = BucketedStateTable(
+    b = StateTable(
         spark, str(tmp_path / "bspec"), KEYS, "seq", n_buckets=2,
         field_merge=["spec"], manager_col="manager")
     with pytest.raises(ValueError, match="manager_col"):
-        BucketedStateTable(spark, str(tmp_path / "bspec"), KEYS, "seq",
+        StateTable(spark, str(tmp_path / "bspec"), KEYS, "seq",
                            n_buckets=2, field_merge=["spec"])
     del b
 
@@ -930,7 +932,7 @@ def test_owned_merge_bucketed_matches_flat(spark, tmp_path):
     conflict rejection, ownership, and state must match the flat table
     on the contended sequence (the layouts-cannot-drift contract the
     unmanaged field merge already carries)."""
-    from kube_etl_spark.streaming.cdc import BucketedStateTable
+    from kube_etl_spark.streaming.cdc import StateTable
 
     ops = [
         _own_row(5, "upsert", "k", "mgr-a", ("a5", "rid"), None),
@@ -939,7 +941,7 @@ def test_owned_merge_bucketed_matches_flat(spark, tmp_path):
         _own_row(11, "upsert", "k", "mgr-a", ("a11", "rid"), None),
     ]
     flat = _mk_owned(spark, tmp_path, "flat")
-    bkt = BucketedStateTable(
+    bkt = StateTable(
         spark, str(tmp_path / "bkt"), KEYS, "seq", n_buckets=4,
         field_merge=["spec", "status"], manager_col="manager")
     for st in (flat, bkt):
@@ -975,7 +977,7 @@ def test_ownership_cli_flag_end_to_end(spark, tmp_path):
     import json as _json
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     import run_syncer
 
     rules = [
