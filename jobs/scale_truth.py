@@ -1,29 +1,30 @@
 #!/usr/bin/env python
-"""Scale-truth experiment (VERDICT r4 #3): re-measure the LSH margin
-and IVF recall constants one order of magnitude above the 500-doc /
-500-vector fixtures they were tuned on.
+"""Scale-truth experiments: re-measure, one order of magnitude above
+the fixtures they were tuned on, the constants and sizing rules the
+engine still ships. Each flag is the reproducer of one measured table
+in docs/architecture.md, and a code comment cites that result:
 
-Both experiments amplify the sf0.1 fixtures deterministically (no RNG:
-all pseudo-randomness is xxhash64 of ids — rerunning reproduces the
-exact corpus, the same amplification trick as bench.py's skew suite):
+  --lsh          q_dedup_fuzzy's banding recall and lsh_estimate_verify's
+                 EST_PRUNE=0.28 margin (queries/llm.py, §"Scale-truthed
+                 constants (round 5)").
+  --ivf          knn_ivf's k≈√n / nprobe sizing: top-1 recall is governed
+                 by nprobe/k, not by an absolute nprobe (same section).
+  --incremental  incremental_screen / screen_postings' df_cap valve:
+                 lossless at cap=100 on a clean corpus (same section).
+  --boilerplate  the capped-vocabulary size recount in screen_postings
+                 and the fixture df_cap=30 (§round 6).
+  --mediasim     media.simhash_screen's 32-bit width, 4×16-bit bands and
+                 Hamming d≤4 threshold (§round 7b).
+  --simprobe     the binary index's band_buckets probe sizing behind
+                 run_neardup --buckets N (§round 8).
+  --semprobe     semdedup's cell_buckets probe curve behind the semantic
+                 --buckets (§round 9).
 
-  LSH  (--lsh):  documents ×R replicas with per-replica consonant
-      rotation (replicas share almost no shingles), plus injected
-      near-dup pairs spanning the exact-Jaccard range AROUND the
-      J=0.5 output boundary (junk-token suffixes of graded length).
-      Measures, per true-J bucket: banding recall (candidate
-      generation), final pipeline recall, and — the margin claim —
-      how many pairs the estimate-prune tier loses ON TOP of banding
-      (EST_PRUNE=0.28 is sized to lose ~none at 2.5sigma).
-  IVF  (--ivf):  embeddings ×R replicas with small deterministic
-      perturbations, k-means at k≈sqrt(n) (the documented scale
-      sizing, vs the fixture cap k≤16), then top-1 recall vs
-      brute-force cosine for a query sample at a sweep of nprobe —
-      the claim under test is that recall is governed by nprobe/k,
-      not by the fixture's absolute nprobe=2.
-
-Results are recorded in docs/architecture.md §"Scale-truthed
-constants"; this script is the reproducer.
+Every corpus is a deterministic amplification of the sf0.1 fixtures
+(no RNG: all pseudo-randomness is xxhash64 of ids, so a rerun
+reproduces the exact corpus). A scale-truth section in
+docs/architecture.md whose flag is not listed here names the commit
+that has its reproducer; tests pin the semantics it measured.
 
     python jobs/scale_truth.py --lsh --ivf [--replicas N] [--json out]
 """
@@ -32,9 +33,7 @@ from __future__ import annotations
 
 import argparse
 import json
-import re
 import math
-import os
 import sys
 import time
 
@@ -65,6 +64,7 @@ def lsh_experiment(spark, sf_dir: str, replicas: int) -> dict:
         _shingles,
         _tokens,
         lsh_bands,
+        lsh_candidates,
         lsh_estimate_verify,
         minhash_signatures,
     )
@@ -143,22 +143,10 @@ def lsh_experiment(spark, sf_dir: str, replicas: int) -> dict:
     )
     truth_rows = {(r["doc_a"], r["doc_b"]): r["true_j"] for r in truth.collect()}
 
-    # the pipeline, exactly as q_dedup_fuzzy composes it
+    # the pipeline q_dedup_fuzzy runs, through its shared stages
     t0 = time.time()
     sig = minhash_signatures(corpus).localCheckpoint(eager=True)
-    bands = lsh_bands(sig)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .localCheckpoint(eager=True)
-    )
+    cand = lsh_candidates(lsh_bands(sig)).localCheckpoint(eager=True)
     n_cand = cand.count()
     final = lsh_estimate_verify(cand, sig)
     final_pairs = {(r["doc_a"], r["doc_b"]) for r in final.collect()}
@@ -727,247 +715,6 @@ def boilerplate_experiment(spark, sf_dir: str, replicas: int) -> dict:
     }
 
 
-def snapdiff_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """Scale-truth for the poll-based CDC layer (streaming/snapdiff.py,
-    round 6): at replicas × |orders| rows per snapshot, measure what
-    snapshot differencing BUYS a downstream consumer per poll cycle —
-    the delta path (diff + state merge + delta-sized MaterializedAgg
-    maintenance) vs the naive path a non-CDC consumer runs (re-aggregate
-    the full dump). Churn per poll is deterministic: 1% of keys
-    repriced, 0.5% deleted, 0.5% of previously-deleted keys re-added —
-    no RNG, reruns reproduce the sequence exactly.
-
-    Honest regime note: the DIFF itself reads both full snapshots (an
-    O(snapshot) join — unavoidable, that's the input), so the delta
-    path's diff+merge wall is O(snapshot) too; the measured win is the
-    DOWNSTREAM term — maintenance work and every further consumer see
-    |delta| rows, not |snapshot|. At fixture scale the full reagg is
-    cheap, so the wall ratio understates the 100 TB gap where the
-    downstream is many consumers deep; the delta-size ratio is the
-    scale-invariant number."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.streaming.cdc import StateTable
-    from kube_etl_spark.streaming.matview import MaterializedAgg
-    from kube_etl_spark.streaming.snapdiff import SnapshotDiffSource
-
-    base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    snap0 = (
-        base.withColumn("__r", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
-        .select(
-            (F.col("o_orderkey") * replicas + F.col("__r")).alias("k"),
-            F.col("o_orderpriority").alias("g"),
-            F.col("o_totalprice").alias("x"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    n0 = snap0.count()
-    root = tempfile.mkdtemp(prefix="snapdiff-truth-")
-    try:
-        src = SnapshotDiffSource(StateTable(spark, f"{root}/snap", ["k"], "seq"))
-        ma = MaterializedAgg(
-            StateTable(spark, f"{root}/fact", ["k"], "seq"),
-            StateTable(spark, f"{root}/view", ["g"], "seq"),
-            fact_key="k",
-            group_col="g",
-            value_col="x",
-        )
-        t0 = time.time()
-        d0 = src.apply(snap0, seq=1)
-        ma.apply_fact_batch(d0, 1)
-        bootstrap_wall = round(time.time() - t0, 2)
-
-        polls = []
-        cur = snap0
-        for p in (1, 2, 3):
-            repriced = (F.col("k") % 100) == p            # 1%
-            dropped = (F.col("k") % 200) == (100 + p)     # 0.5%
-            prev_drop = (F.col("k") % 200) == (100 + p - 1)
-            nxt = (
-                cur.filter(~dropped)
-                .select(
-                    "k",
-                    "g",
-                    F.when(repriced, F.col("x") + 1.0).otherwise(F.col("x")).alias("x"),
-                )
-                .unionByName(snap0.filter(prev_drop) if p > 1 else cur.limit(0))
-                .localCheckpoint(eager=True)
-            )
-            t0 = time.time()
-            delta = src.apply(nxt, seq=p + 1)
-            ma.apply_fact_batch(delta, p + 1)
-            delta_wall = round(time.time() - t0, 2)
-            t0 = time.time()
-            nxt.groupBy("g").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("x").cast("decimal(20,2)")).alias("s"),
-            ).write.format("noop").mode("overwrite").save()
-            naive_wall = round(time.time() - t0, 2)
-            polls.append(
-                {
-                    "delta_rows": delta.count(),
-                    "delta_path_wall_s": delta_wall,
-                    "naive_full_reagg_wall_s": naive_wall,
-                }
-            )
-            cur = nxt
-        # correctness anchor: maintained view ≡ direct agg of final snapshot
-        view = {
-            (r["g"], r["n_rows"], str(r["total"]))
-            for r in ma.read().select("g", "n_rows", "total").collect()
-        }
-        direct = {
-            (r["g"], r["n"], str(r["s"]))
-            for r in cur.groupBy("g")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("x").cast("decimal(20,2)")).alias("s"),
-            )
-            .collect()
-        }
-        return {
-            "snapshot_rows": n0,
-            "bootstrap_wall_s": bootstrap_wall,
-            "polls": polls,
-            "delta_share": round(
-                sum(q["delta_rows"] for q in polls) / (3 * n0), 5
-            ),
-            "view_matches_recompute": view == direct,
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def snapdiff_skew_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """Scale-truth for the snapshot-sync state REGIME choice (VERDICT
-    r6 #4): the r6 --snapdiff run honestly reported flat-state O(state)
-    rewrites losing to naive re-agg at 1.5M rows under UNIFORM churn;
-    this run measures the OTHER regime — recent-key-skewed churn (the
-    common CDC trickle: appends plus edits near the head of the key
-    space) merged into a RANGE-bucketed state vs the flat table, on the
-    SAME snapshot sequence. Expected and measured: the bucketed table
-    rewrites only the hot tail bucket(s), so its per-poll merge wall is
-    O(bucket), while the flat table rewrites all state every poll.
-
-    Churn per poll is deterministic (no RNG): every poll appends 0.2%
-    NEW keys above the current max and reprices 1% of the keys in the
-    TOP 2% of the key range; nothing below the hot range ever changes.
-
-    The DIFF is computed once per poll and timed separately: it is an
-    O(snapshot) full-outer join either way (that's the input format),
-    so folding it into the timed path would drown the merge-regime
-    difference the experiment exists to measure — the first run of
-    this experiment did exactly that (apply-wall flat ≈ bucketed at
-    1.5M rows) and taught the isolation.
-
-    Correctness anchor: after all polls, flat state ≡ bucketed state ≡
-    the final snapshot (exact row-set equality)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.streaming.cdc import StateTable
-    from kube_etl_spark.streaming.snapdiff import snapshot_delta
-
-    base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    snap0 = (
-        base.withColumn("__r", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
-        .select(
-            (F.col("o_orderkey") * replicas + F.col("__r")).alias("k"),
-            F.col("o_orderpriority").alias("g"),
-            F.col("o_totalprice").alias("x"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    n0 = snap0.count()
-    maxk = snap0.agg(F.max("k")).collect()[0][0]
-    # RANGE buckets sized over the key domain + append headroom: the
-    # hot tail (top 2% + appends) lands in the last bucket(s) only
-    width = (maxk + maxk // 10) // 16 + 1
-    root = tempfile.mkdtemp(prefix="snapdiff-skew-")
-    try:
-        flat = StateTable(spark, f"{root}/flat", ["k"], "seq")
-        bucketed = StateTable(
-            spark,
-            f"{root}/bucketed",
-            ["k"],
-            "seq",
-            n_buckets=16,
-            bucket_col=(F.col("k") / F.lit(width)).cast("bigint"),
-        )
-        boot = snap0.withColumn("op", F.lit("upsert")).withColumn(
-            "seq", F.lit(1).cast("bigint")
-        )
-        flat.merge_batch(boot)
-        bucketed.merge_batch(boot)
-
-        polls = []
-        cur = snap0
-        cur_max = maxk
-        for p in (1, 2, 3):
-            hot_lo = int(cur_max * 0.98)
-            repriced = (F.col("k") >= hot_lo) & ((F.col("k") % 100) == p)
-            n_new = n0 // 500  # 0.2% appends per poll
-            appends = spark.range(cur_max + 1, cur_max + 1 + n_new).select(
-                F.col("id").alias("k"),
-                F.lit("5-LOW").alias("g"),
-                (F.col("id") % 9000 + 1000).cast("double").alias("x"),
-            )
-            nxt = (
-                cur.select(
-                    "k",
-                    "g",
-                    F.when(repriced, F.col("x") + 1.0).otherwise(F.col("x")).alias("x"),
-                )
-                .unionByName(appends)
-                .localCheckpoint(eager=True)
-            )
-            cur_max += n_new
-            # ONE diff per poll, same delta merged into BOTH regimes —
-            # the merge is the only timed variable
-            t0 = time.time()
-            delta = snapshot_delta(cur, nxt, ["k"]).localCheckpoint(eager=True)
-            n_delta = delta.count()
-            diff_wall = round(time.time() - t0, 2)
-            seqd = delta.withColumn("seq", F.lit(p + 1).cast("bigint"))
-            t0 = time.time()
-            flat.merge_batch(seqd)
-            flat_wall = round(time.time() - t0, 2)
-            t0 = time.time()
-            bucketed.merge_batch(seqd)
-            bucketed_wall = round(time.time() - t0, 2)
-            polls.append(
-                {
-                    "delta_rows": n_delta,
-                    "diff_wall_s": diff_wall,
-                    "flat_merge_wall_s": flat_wall,
-                    "bucketed_merge_wall_s": bucketed_wall,
-                }
-            )
-            cur = nxt
-        fs = {tuple(r) for r in flat.read().drop("seq").collect()}
-        bs = {tuple(r) for r in bucketed.read().drop("seq").collect()}
-        snap = {tuple(r) for r in cur.collect()}
-        return {
-            "snapshot_rows": n0,
-            "range_bucket_width": width,
-            "polls": polls,
-            "states_match": fs == bs == snap,
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def mediasim_experiment(spark, sf_dir: str, replicas: int) -> dict:
     """Scale-truth for the binary-payload SimHash screen (media.
     simhash_screen, round 7 — shared with q_media_neardup so these
@@ -1069,6 +816,19 @@ def mediasim_experiment(spark, sf_dir: str, replicas: int) -> dict:
         "verified_same_source": ver_same,
         "verified_cross_source": n_ver - ver_planted - ver_same,
     }
+
+
+def _layout_pairs(flat, pruned) -> tuple[int, bool]:
+    """(pair count, flat ≡ pruned pair sets) for a probe experiment's
+    two layouts. Equality at zero pairs proves nothing about the probe
+    swap, so an empty pair set fails the run instead of reporting it."""
+    got = {tuple(r) for r in flat.pairs_df().collect()}
+    if not got:
+        raise AssertionError(
+            "vacuous run: the flat layout detected no pairs, so layout "
+            "equality is trivially true — raise --replicas"
+        )
+    return len(got), got == {tuple(r) for r in pruned.pairs_df().collect()}
 
 
 def simprobe_experiment(
@@ -1182,9 +942,7 @@ def simprobe_experiment(
     finally:
         StateTable.read = orig_read
 
-    pairs_equal = {tuple(r) for r in flat.pairs_df().collect()} == {
-        tuple(r) for r in pruned.pairs_df().collect()
-    }
+    pairs, pairs_equal = _layout_pairs(flat, pruned)
     return {
         "corpus_payloads": payloads.count() - len(held),
         "band_index_rows": index_rows,
@@ -1192,6 +950,7 @@ def simprobe_experiment(
         "seed_ingest_flat_s": seed_flat_s,
         "seed_ingest_pruned_s": seed_pruned_s,
         "trickle": rows,
+        "pairs": pairs,
         "pairs_equal": pairs_equal,
     }
 
@@ -1340,9 +1099,7 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
     finally:
         StateTable.read = orig_read
 
-    pairs_equal = {tuple(r) for r in flat.pairs_df().collect()} == {
-        tuple(r) for r in pruned.pairs_df().collect()
-    }
+    pairs, pairs_equal = _layout_pairs(flat, pruned)
     return {
         "corpus_vecs": n,
         "cells_k": k,
@@ -1350,1181 +1107,28 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
         "seed_ingest_flat_s": seed_flat_s,
         "seed_ingest_pruned_s": seed_pruned_s,
         "trickle": rows,
-        "pairs": flat.pairs_df().count(),
+        "pairs": pairs,
         "pairs_equal": pairs_equal,
     }
 
 
-def grank_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """Measure the distributed exact global rank (queries/scale.py
-    global_row_number: range exchange + partition-local sort +
-    broadcast offsets, behind an eager layout checkpoint) against the
-    single-task global Window it replaces, on replicated orders keys at
-    three sizes — the crossover evidence for the r9 rank-family swap.
-
-    Honest accounting: the distributed wall INCLUDES the eager
-    checkpoint's materialization (it runs at construction) plus the
-    ranked write; the single-task wall is the window write alone.
-    Equality is an order-independent checksum over every (okey, rn)
-    pair, both forms recomputed once for the check."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.queries.scale import global_row_number
-
-    base = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_totalprice").cast("decimal(14,2)").alias("p"),
-    )
-    tiers = []
-    for mult in (1, replicas, 4 * replicas):
-        df = (
-            base.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))
-            .select(
-                (
-                    F.col("okey") + F.col("rep").cast("long") * F.lit(10**9)
-                ).alias("okey"),
-                (F.col("p") + F.col("rep")).alias("p"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n = df.count()
-
-        def _noop(frame):
-            frame.write.format("noop").mode("overwrite").save()
-
-        w = Window.orderBy("p", "okey")
-        single = df.select("okey", F.row_number().over(w).cast("long").alias("rn"))
-        t0 = time.perf_counter()
-        _noop(single)
-        t_single = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        dist = global_row_number(df, ["p", "okey"], out_col="rn").select("okey", "rn")
-        _noop(dist)
-        t_dist = round(time.perf_counter() - t0, 2)
-
-        def _chk(frame):
-            # bit_xor: order-independent, no ANSI long-overflow (a SUM
-            # of 64-bit hashes overflows at millions of rows). Row count
-            # rides along (harness sweep r12): xor alone lets a
-            # duplicated-plus-dropped pair cancel out.
-            r = frame.agg(
-                F.expr("bit_xor(xxhash64(okey, rn))").alias("c"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            return (r["c"], r["n"])
-
-        tiers.append(
-            {
-                "rows": n,
-                "wall_single_task_s": t_single,
-                "wall_distributed_s": t_dist,
-                "equal_checksum": bool(_chk(single) == _chk(dist)),
-            }
-        )
-        df.unpersist()
-    return {"tiers": tiers}
-
-
-def imerge_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """Measure global_interval_merge (queries/scale.py: ONE frozen
-    range layout, strict-prefix-max + span-flag prefix sums as
-    broadcast offsets) against the textbook single-task Window form it
-    replaces, on replicated error-event incident windows at three
-    sizes — the same crossover protocol as grank_experiment.
-
-    Replicas shift in TIME by 35 days (past the fixture's 30-day span)
-    so every replica keeps the real span structure instead of
-    collapsing into one giant span; interval ids stay unique per
-    replica. Honest accounting: the distributed wall INCLUDES the
-    eager layout checkpoint; equality is an order-independent checksum
-    over every (id, span_id) pair."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.queries.scale import global_interval_merge
-
-    base = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "error")
-        .select(
-            "event_id",
-            F.expr("ts - INTERVAL 15 MINUTES").alias("t0"),
-            F.expr("ts + INTERVAL 15 MINUTES").alias("t1"),
-        )
-    )
-    tiers = []
-    for mult in (1, replicas, 4 * replicas):
-        df = (
-            base.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))
-            .select(
-                (
-                    F.col("event_id") + F.col("rep").cast("long") * F.lit(10**9)
-                ).alias("id"),
-                (
-                    F.col("t0")
-                    + F.col("rep") * F.expr("INTERVAL 35 DAYS")
-                ).alias("t0"),
-                (
-                    F.col("t1")
-                    + F.col("rep") * F.expr("INTERVAL 35 DAYS")
-                ).alias("t1"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n = df.count()
-
-        def _noop(frame):
-            frame.write.format("noop").mode("overwrite").save()
-
-        order = [F.col("t0"), F.col("t1"), F.col("id")]
-        w_strict = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
-        w_run = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-        prev_end = F.max("t1").over(w_strict)
-        flag = F.when(prev_end.isNull() | (F.col("t0") > prev_end), 1).otherwise(0)
-        single = df.select("id", F.sum(flag).over(w_run).alias("span_id"))
-        t0c = time.perf_counter()
-        _noop(single)
-        t_single = round(time.perf_counter() - t0c, 2)
-        t0c = time.perf_counter()
-        dist = global_interval_merge(df, "t0", "t1", tiebreak_cols=["id"]).select(
-            "id", "span_id"
-        )
-        _noop(dist)
-        t_dist = round(time.perf_counter() - t0c, 2)
-
-        def _chk(frame):
-            # count rides along — see grank_experiment._chk (r12 sweep)
-            r = frame.agg(
-                F.expr("bit_xor(xxhash64(id, span_id))").alias("c"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            return (r["c"], r["n"])
-
-        tiers.append(
-            {
-                "rows": n,
-                "wall_single_task_s": t_single,
-                "wall_distributed_s": t_dist,
-                "equal_checksum": bool(_chk(single) == _chk(dist)),
-            }
-        )
-        df.unpersist()
-    return {"tiers": tiers}
-
-
-def syncer_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """Scale-truth for the FULL run_syncer control+data path (VERDICT
-    r9 #6): a ~replicas×100k-row op-log landed as JSON chunks, driven
-    through run_syncer --once twice with a RULE HOT-RELOAD between the
-    invocations (one syncer suspended, one added — the cron-style
-    deployment's generation change), status write-back on throughout;
-    the accumulated local state is then checked against a one-shot
-    batch oracle (compile_sync per generation + independent
-    last-writer-wins in plain DataFrame ops), and the status table's
-    high-water carry-forward across the generation boundary is
-    asserted. This re-proves the r9 status-publish + intent-sidecar
-    changes at data size, not fixture size.
-
-    Part two: the WriterLease takeover mid-publish at the same state
-    size — the r9 fencing fix validated the lease AFTER the version
-    write and immediately before the pointer rename, closing the
-    O(write-duration) split-brain window; at ~1M rows that window is
-    SECONDS wide, so this is where the fix earns its keep. The takeover
-    is injected deterministically from the validate hook (the
-    test_lease.py shape, at scale): the stale writer's multi-second
-    version write completes, the hook observes the takeover, the
-    publish abandons with the pointer untouched, and the new owner's
-    full-size merge lands on intact state."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.streaming.sync import compile_sync
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import run_syncer
-
-    catalog_rows = [
-        ("e2e.gkelabs.io", "v1", "TestCRD"),
-        ("kcc.cnrm.cloud.google.com", "v1beta1", "KCCResource"),
-        ("kcc.cnrm.cloud.google.com", "v1beta2", "KCCResource"),
-        ("sql.cnrm.cloud.google.com", "v1beta1", "SQLInstance"),
-        ("cnrm.cloud.google.com", "v1", "Apex"),
-        ("apps", "v1", "Deployment"),
-        ("batch", "v1", "Job"),
-    ]
-    # pull syncers deliberately partition the GVK space: the local
-    # destination is one shared table, so two pull syncers matching the
-    # same key with different sync_fields would race on content at
-    # equal seq — a fixture property, not an engine one
-    base_rules = [
-        {"syncer_name": "s_exact", "syncer_namespace": "default", "suspend": False,
-         "mode": "pull", "rule_group": "e2e.gkelabs.io", "rule_version": "v1",
-         "rule_kind": "TestCRD", "namespaces": [], "sync_fields": ["spec", "status"]},
-        {"syncer_name": "s_kcc_push", "syncer_namespace": "default", "suspend": False,
-         "mode": "push", "rule_group": "kcc.cnrm.cloud.google.com",
-         "rule_version": "*", "rule_kind": "*", "namespaces": [],
-         "sync_fields": ["spec", "status"], "remote_secret": "kc-1"},
-        {"syncer_name": "s_fleet", "syncer_namespace": "default", "suspend": False,
-         "mode": "pull", "rule_group": "*.cnrm.cloud.google.com",
-         "rule_version": "*", "rule_kind": "*", "namespaces": ["prod"],
-         "sync_fields": ["spec"]},
-        {"syncer_name": "s_apps", "syncer_namespace": "default", "suspend": False,
-         "mode": "pull", "rule_group": "apps", "rule_version": "v1",
-         "rule_kind": "Deployment", "namespaces": ["dev"],
-         "sync_fields": ["spec", "status"]},
-    ]
-    gen2_rules = [
-        {**r, "suspend": True} if r["syncer_name"] == "s_fleet" else dict(r)
-        for r in base_rules
-    ] + [
-        {"syncer_name": "s_batch", "syncer_namespace": "default", "suspend": False,
-         "mode": "pull", "rule_group": "batch", "rule_version": "v1",
-         "rule_kind": "Job", "namespaces": [], "sync_fields": ["status"]},
-    ]
-
-    def oplog_frame(rep_lo: int, rep_hi: int):
-        cat = spark.createDataFrame(
-            [(i, *r) for i, r in enumerate(catalog_rows)],
-            "idx long, group string, version string, kind string",
-        )
-        seq = (F.col("event_id") * replicas + F.col("rep")).cast("long")
-        return (
-            load_table(spark, sf_dir, "events")
-            .select("event_id")
-            .withColumn(
-                "rep", F.explode(F.sequence(F.lit(rep_lo), F.lit(rep_hi - 1)))
-            )
-            .select(seq.alias("seq"), "event_id", "rep")
-            .join(F.broadcast(cat), F.pmod(F.col("seq"), F.lit(7)) == F.col("idx"))
-            .select(
-                "seq",
-                F.when(F.col("seq") % 11 == 0, "delete").otherwise("upsert").alias("op"),
-                "group", "version", "kind",
-                F.when(F.col("seq") % 3 == 0, F.lit("prod"))
-                .otherwise(F.lit("dev")).alias("namespace"),
-                F.concat(F.lit("obj-"), F.pmod(F.col("seq"), F.lit(40000))).alias("name"),
-                F.create_map(
-                    F.lit("team"),
-                    F.concat(F.lit("t"), (F.col("seq") % 5).cast("string")),
-                ).alias("labels"),
-                F.create_map().cast("map<string,string>").alias("annotations"),
-                F.struct(
-                    F.concat(F.lit("foo-"), F.col("seq")).alias("foo"),
-                    F.concat(F.lit("rid-"), F.pmod(F.col("seq"), F.lit(40000))).alias("resourceID"),
-                ).alias("spec"),
-                F.struct(F.concat(F.lit("bar-"), F.col("seq")).alias("bar")).alias("status"),
-            )
-        )
-
-    def land_chunk(frame, oplog_dir: str, tag: str) -> None:
-        staging = tempfile.mkdtemp(prefix=f"syncer-chunk-{tag}-")
-        try:
-            frame.coalesce(8).write.mode("overwrite").json(staging)
-            n = 0
-            for f in sorted(os.listdir(staging)):
-                if f.startswith("part-") and f.endswith(".json"):
-                    shutil.move(
-                        os.path.join(staging, f),
-                        os.path.join(oplog_dir, f"{tag}-{n:03d}.json"),
-                    )
-                    n += 1
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-
-    split = max(1, (replicas * 3) // 5)
-    root = tempfile.mkdtemp(prefix="syncer-truth-")
-    out: dict = {}
-    try:
-        oplog_dir = os.path.join(root, "oplog")
-        os.makedirs(oplog_dir)
-        chunk1 = oplog_frame(0, split).localCheckpoint(eager=True)
-        chunk2 = oplog_frame(split, replicas).localCheckpoint(eager=True)
-        out["oplog_rows"] = chunk1.count() + chunk2.count()
-        land_chunk(chunk1, oplog_dir, "c1")
-
-        rules_path = os.path.join(root, "rules.json")
-        with open(rules_path, "w") as f:
-            _json.dump(base_rules, f)
-        secrets_path = os.path.join(root, "secrets.json")
-        with open(secrets_path, "w") as f:
-            _json.dump({"default/kc-1": "cred"}, f)
-        cat_path = os.path.join(root, "catalog.json")
-        with open(cat_path, "w") as f:
-            _json.dump(
-                [{"group": g, "version": v, "kind": k} for g, v, k in catalog_rows], f
-            )
-        args = [
-            "--rules", rules_path, "--oplog", oplog_dir,
-            "--state", os.path.join(root, "state"),
-            "--checkpoint", os.path.join(root, "ckpt"),
-            "--secrets", secrets_path, "--catalog", cat_path, "--once",
-        ]
-        t0 = time.time()
-        run_syncer.main(args)
-        out["run1_wall_s"] = round(time.time() - t0, 2)
-        status1 = {
-            r["syncer_name"]: (r["condition"], r["last_sync_seq"])
-            for r in spark.read.parquet(os.path.join(root, "state", "status")).collect()
-        }
-
-        # generation change between cron invocations: suspend s_fleet,
-        # add s_batch; land the second chunk; same checkpoint resumes
-        with open(rules_path, "w") as f:
-            _json.dump(gen2_rules, f)
-        land_chunk(chunk2, oplog_dir, "c2")
-        t0 = time.time()
-        run_syncer.main(args)
-        out["run2_wall_s"] = round(time.time() - t0, 2)
-        status2 = {
-            r["syncer_name"]: (r["condition"], r["last_sync_seq"])
-            for r in spark.read.parquet(os.path.join(root, "state", "status")).collect()
-        }
-        out["status_gen1"] = {k: list(v) for k, v in sorted(status1.items())}
-        out["status_gen2"] = {k: list(v) for k, v in sorted(status2.items())}
-        # carry-forward across the generation boundary: the suspended
-        # syncer keeps its gen1 high-water; nobody's mark regresses
-        out["suspended_keeps_high_water"] = bool(
-            status2["s_fleet"][0] == "Suspended"
-            and status2["s_fleet"][1] == status1["s_fleet"][1]
-        )
-        out["no_mark_regressed"] = all(
-            status2[s][1] >= status1[s][1] for s in status1 if s in status2
-        )
-
-        # batch oracle for the LOCAL destination: compile each chunk
-        # under its rule generation (the same engine path the golden
-        # tests pin), then an INDEPENDENT last-writer-wins in plain
-        # DataFrame ops replaces the streaming StateTable machinery —
-        # what this harness actually scale-truths
-        def rules_df(rows):
-            return spark.createDataFrame(
-                [tuple(r.get(c) for c in (
-                    "syncer_name syncer_namespace suspend mode rule_group "
-                    "rule_version rule_kind namespaces sync_fields remote_secret"
-                ).split()) for r in rows],
-                "syncer_name string, syncer_namespace string, suspend boolean,"
-                " mode string, rule_group string, rule_version string,"
-                " rule_kind string, namespaces array<string>,"
-                " sync_fields array<string>, remote_secret string",
-            )
-
-        pull1 = compile_sync(chunk1, rules_df(base_rules)).filter(
-            F.col("mode") == "pull"
-        )
-        pull2 = compile_sync(chunk2, rules_df(gen2_rules)).filter(
-            F.col("mode") == "pull"
-        )
-        all_changes = pull1.unionByName(pull2).select(
-            "group", "version", "kind", "namespace", "name", "seq", "op",
-            F.to_json("spec").alias("spec_j"), F.to_json("status").alias("status_j"),
-        )
-        from pyspark.sql import Window as W
-
-        key = ["group", "version", "kind", "namespace", "name"]
-        w = W.partitionBy(*key).orderBy(F.col("seq").desc())
-        lww = (
-            all_changes.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("op") != "delete"))
-            .drop("rn", "op")
-        )
-        # read through the state API — a raw parquet read would include
-        # the delete TOMBSTONE rows StateTable.read() hides (736 of
-        # them at the smoke tier; caught by this harness's first run)
-        from kube_etl_spark.streaming.cdc import StateTable as _ST
-
-        got = _ST(
-            spark, os.path.join(root, "state", "local"),
-            ["group", "version", "kind", "namespace", "name"], "seq",
-        ).read().select(
-            "group", "version", "kind", "namespace", "name", "seq",
-            F.to_json("spec").alias("spec_j"), F.to_json("status").alias("status_j"),
-        )
-
-        def chk(frame):
-            return frame.agg(
-                F.expr(
-                    "bit_xor(xxhash64(group, version, kind, namespace, name, seq,"
-                    " coalesce(spec_j, '∅'), coalesce(status_j, '∅')))"
-                ).alias("c"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-
-        g, o = chk(got), chk(lww)
-        out["local_state_rows"] = g["n"]
-        out["local_state_matches_batch_oracle"] = bool(
-            g["n"] == o["n"] and g["c"] == o["c"]
-        )
-        if not out["local_state_matches_batch_oracle"]:
-            out["oracle_rows"] = o["n"]
-            cols = [*key, "seq", "spec_j", "status_j"]
-            out["only_in_state"] = [
-                [str(x) for x in r] for r in got.select(*cols)
-                .exceptAll(lww.select(*cols)).limit(5).collect()
-            ]
-            out["only_in_oracle"] = [
-                [str(x) for x in r] for r in lww.select(*cols)
-                .exceptAll(got.select(*cols)).limit(5).collect()
-            ]
-
-        # ---- part two: lease takeover mid-publish at state size ----
-        from kube_etl_spark.streaming.cdc import StateTable, atomic_overwrite
-        from kube_etl_spark.streaming.lease import LeaseLost, WriterLease
-
-        lease_path = os.path.join(root, "big.lease")
-        old = WriterLease(lease_path, owner="old", ttl_s=600)
-        assert old.acquire()
-        big_path = os.path.join(root, "big-state")
-        t_old = StateTable(spark, big_path, ["k"], "seq", lease=old)
-        big = chunk1.select(
-            F.col("seq").alias("k"), F.col("seq").alias("seq"),
-            F.col("name").alias("v"), F.lit("upsert").alias("op"),
-        )
-        t0 = time.time()
-        t_old.merge_batch(big)
-        out["takeover_initial_merge_wall_s"] = round(time.time() - t0, 2)
-
-        def takeover_then_check():
-            rec = _json.load(open(lease_path))
-            rec["deadline"] = time.time() - 1
-            with open(lease_path, "w") as f:
-                _json.dump(rec, f)
-            assert WriterLease(lease_path, owner="new", ttl_s=600).acquire()
-            old.assert_held()
-
-        import os as _os
-
-        target_before = _os.readlink(big_path)
-        stale = big.withColumn("v", F.lit("stale")).withColumn(
-            "seq", F.col("seq") + 1
-        )
-        t0 = time.time()
-        fenced = False
-        try:
-            atomic_overwrite(stale, big_path, validate=takeover_then_check)
-        except LeaseLost:
-            fenced = True
-        out["stale_publish_fenced"] = fenced
-        out["fenced_write_wall_s"] = round(time.time() - t0, 2)
-        out["pointer_untouched"] = bool(_os.readlink(big_path) == target_before)
-        new = WriterLease(lease_path, owner="new", ttl_s=600)
-        assert new.acquire()
-        t_new = StateTable(spark, big_path, ["k"], "seq", lease=new)
-        upd = big.withColumn("v", F.lit("v2")).withColumn("seq", F.col("seq") + 2)
-        t0 = time.time()
-        t_new.merge_batch(upd)
-        out["new_owner_merge_wall_s"] = round(time.time() - t0, 2)
-        final = t_new.read().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("v") == "v2").cast("long")).alias("n_v2"),
-            F.sum((F.col("v") == "stale").cast("long")).alias("n_stale"),
-        ).collect()[0]
-        out["takeover_state_rows"] = final["n"]
-        out["takeover_state_clean"] = bool(
-            final["n_stale"] == 0 and final["n_v2"] == final["n"]
-        )
-        return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def bridge_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """Scale-truth for the watch-bridge 410-relist composition (VERDICT
-    r10 #6): bookmark expiry mid-stream → relist → delta emission →
-    syncer state ≡ LWW oracle, at the syncer harness's ~1M-row op-log
-    scale. The offline audit (q_watch_gap_relist) and the fake-server
-    e2e (tests/test_kubeapi.py) prove the semantics small; this proves
-    the ONLINE composition at data size, including the two hard edges:
-
-      * keys LANDED but not yet MERGED when the 410 fires, then deleted
-        inside the compacted gap — the believed-live union (merged
-        state ∪ landing zone) must still tombstone them;
-      * GVK isolation — the relist is per-target, so gap-deletes of a
-        NON-relisted GVK must remain (that target's own relist recovers
-        them later), and no spurious deletes may leak across GVKs.
-
-    Three event phases over shared key space (names mod 40k, 2 GVKs):
-      phase1  (~replicas×|events| rows) landed + merged   = pre-gap
-      phase1b (2 reps)                  landed, UNMERGED  = in-flight
-      phase2  (2 reps, delete-heavy)    never seen        = the gap
-    The 'apiserver truth' is an independent LWW over all three phases;
-    the relist for the target GVK is its live keys collected driver-
-    side (state-sized — the same boundary the bridge documents), fed
-    through the REAL relist_delta_rows, landed, and merged by
-    run_syncer --once. Oracle equality is exceptAll in both directions
-    over the full payload projection."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.streaming.kubeapi import _land_rows, relist_delta_rows
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import run_syncer
-
-    gvks = [
-        ("e2e.gkelabs.io", "v1", "TestCRD"),       # the relisted target
-        ("apps", "v1", "Deployment"),              # the isolation control
-    ]
-    target = {"group": "e2e.gkelabs.io", "version": "v1",
-              "kind": "TestCRD", "plural": "testcrds"}
-    rules = [
-        {"syncer_name": "s_target", "syncer_namespace": "default",
-         "suspend": False, "mode": "pull", "rule_group": "e2e.gkelabs.io",
-         "rule_version": "v1", "rule_kind": "TestCRD", "namespaces": [],
-         "sync_fields": ["spec", "status"]},
-        {"syncer_name": "s_apps", "syncer_namespace": "default",
-         "suspend": False, "mode": "pull", "rule_group": "apps",
-         "rule_version": "v1", "rule_kind": "Deployment", "namespaces": [],
-         "sync_fields": ["spec", "status"]},
-    ]
-
-    cat = spark.createDataFrame(
-        [(i, *r) for i, r in enumerate(gvks)],
-        "idx long, group string, version string, kind string",
-    )
-
-    def gen(base: int, reps: int, del_mod: int):
-        seq = (
-            F.lit(base) + F.col("event_id") * reps + F.col("rep")
-        ).cast("long")
-        return (
-            load_table(spark, sf_dir, "events")
-            .select("event_id")
-            .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(reps - 1))))
-            .select(seq.alias("seq"))
-            .join(F.broadcast(cat), F.pmod(F.col("seq"), F.lit(2)) == F.col("idx"))
-            .select(
-                "seq",
-                F.when(F.col("seq") % del_mod == 0, "delete")
-                .otherwise("upsert").alias("op"),
-                "group", "version", "kind",
-                F.when(F.col("seq") % 3 == 0, F.lit("prod"))
-                .otherwise(F.lit("dev")).alias("namespace"),
-                F.concat(F.lit("obj-"), F.pmod(F.col("seq"), F.lit(40000))).alias("name"),
-                F.create_map(
-                    F.lit("team"),
-                    F.concat(F.lit("t"), (F.col("seq") % 5).cast("string")),
-                ).alias("labels"),
-                F.create_map().cast("map<string,string>").alias("annotations"),
-                F.struct(
-                    F.concat(F.lit("foo-"), F.col("seq")).alias("foo"),
-                    F.concat(F.lit("rid-"), F.pmod(F.col("seq"), F.lit(40000))).alias("resourceID"),
-                ).alias("spec"),
-                F.struct(F.concat(F.lit("bar-"), F.col("seq")).alias("bar")).alias("status"),
-            )
-        )
-
-    def land_chunk(frame, oplog_dir: str, tag: str) -> None:
-        staging = tempfile.mkdtemp(prefix=f"bridge-chunk-{tag}-")
-        try:
-            frame.coalesce(8).write.mode("overwrite").json(staging)
-            n = 0
-            for f in sorted(os.listdir(staging)):
-                if f.startswith("part-") and f.endswith(".json"):
-                    shutil.move(
-                        os.path.join(staging, f),
-                        os.path.join(oplog_dir, f"{tag}-{n:03d}.json"),
-                    )
-                    n += 1
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-
-    def lww_live(frame):
-        w = Window.partitionBy(
-            "group", "version", "kind", "namespace", "name"
-        ).orderBy(
-            F.col("seq").desc(), (F.col("op") == "delete").cast("int").desc()
-        )
-        return (
-            frame.withColumn("__rn", F.row_number().over(w))
-            .filter("__rn = 1").drop("__rn")
-            .filter(F.col("op") != "delete").drop("op")
-        )
-
-    def canon(frame):
-        return frame.select(
-            "group", "version", "kind", "namespace", "name", "seq",
-            F.col("spec.foo").alias("foo"),
-            F.col("spec.resourceID").alias("rid"),
-            F.col("status.bar").alias("bar"),
-            F.col("labels")["team"].alias("team"),
-        )
-
-    root = tempfile.mkdtemp(prefix="bridge-truth-")
-    out: dict = {}
-    try:
-        oplog_dir = os.path.join(root, "oplog")
-        os.makedirs(oplog_dir)
-        state = os.path.join(root, "state")
-        n_events = load_table(spark, sf_dir, "events").count()
-        base1b = n_events * replicas
-        base2 = base1b + n_events * 2
-        phase1 = gen(0, replicas, 7).localCheckpoint(eager=True)
-        phase1b = gen(base1b, 2, 7).localCheckpoint(eager=True)
-        phase2 = gen(base2, 2, 5).localCheckpoint(eager=True)  # delete-heavy gap
-        out["oplog_rows"] = phase1.count()
-        out["inflight_rows"] = phase1b.count()
-        out["gap_rows"] = phase2.count()
-
-        rules_path = os.path.join(root, "rules.json")
-        with open(rules_path, "w") as f:
-            _json.dump(rules, f)
-        args = [
-            "--rules", rules_path, "--oplog", oplog_dir,
-            "--state", state,
-            "--checkpoint", os.path.join(root, "ckpt"), "--once",
-        ]
-
-        # pre-gap: phase1 lands and merges
-        land_chunk(phase1, oplog_dir, "c1")
-        t0 = time.time()
-        run_syncer.main(args)
-        out["merge1_wall_s"] = round(time.time() - t0, 2)
-
-        # in-flight: phase1b lands but the 410 fires before it merges
-        land_chunk(phase1b, oplog_dir, "c2")
-
-        # apiserver truth at list time = LWW over EVERYTHING the server
-        # saw, including the compacted gap
-        truth_all = lww_live(
-            phase1.unionByName(phase1b).unionByName(phase2)
-        ).localCheckpoint(eager=True)
-        t_truth = truth_all.filter(F.col("group") == target["group"])
-        relist_rows = t_truth.collect()  # state-sized, the documented boundary
-        out["relist_objects"] = len(relist_rows)
-        objects = [
-            {
-                "apiVersion": f"{target['group']}/{target['version']}",
-                "kind": target["kind"],
-                "metadata": {
-                    "namespace": r["namespace"], "name": r["name"],
-                    "resourceVersion": str(r["seq"]),
-                    "labels": dict(r["labels"]),
-                },
-                "spec": r["spec"].asDict(),
-                "status": r["status"].asDict(),
-            }
-            for r in relist_rows
-        ]
-        list_rv = str(
-            phase2.agg(F.max("seq")).collect()[0][0] + 1
-        )
-
-        t0 = time.time()
-        rows, n_deletes = relist_delta_rows(
-            spark, target, objects, list_rv, state, landing_dir=oplog_dir
-        )
-        out["delta_wall_s"] = round(time.time() - t0, 2)
-        out["delta_rows"] = len(rows)
-        out["delta_deletes"] = n_deletes
-        _land_rows(rows, oplog_dir)
-
-        # the syncer drains everything still pending: phase1b + delta
-        t0 = time.time()
-        run_syncer.main(args)
-        out["merge2_wall_s"] = round(time.time() - t0, 2)
-
-        live = spark.read.parquet(os.path.join(state, "local"))
-        live = live.filter(F.col("__op") != "delete").drop(
-            *[c for c in live.columns if c.startswith("__")]
-        )
-        got_t = canon(live.filter(F.col("group") == target["group"]))
-        want_t = canon(t_truth)
-        out["target_state_rows"] = got_t.count()
-        out["target_truth_rows"] = want_t.count()
-        out["target_matches_truth"] = (
-            got_t.exceptAll(want_t).count() == 0
-            and want_t.exceptAll(got_t).count() == 0
-        )
-
-        # isolation: the apps GVK saw no relist, so its state is the
-        # LWW of what actually LANDED (phase1 ∪ phase1b) — gap events
-        # absent, and no cross-GVK deletes leaked
-        want_a = canon(lww_live(phase1.unionByName(phase1b)).filter(
-            F.col("group") == "apps"
-        ))
-        got_a = canon(live.filter(F.col("group") == "apps"))
-        out["apps_state_rows"] = got_a.count()
-        out["apps_matches_landed_lww"] = (
-            got_a.exceptAll(want_a).count() == 0
-            and want_a.exceptAll(got_a).count() == 0
-        )
-        return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _fieldmerge_oplog(spark, sf_dir: str, replicas: int):
-    """The contended two-writer op-log of the field-merge experiment:
-    even seqs assert ONLY spec, odd seqs ONLY status over an
-    ODD key modulus (so every key's stream alternates classes), ~11%
-    interleaved deletes. Eagerly checkpointed — chunk filters re-read
-    it."""
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.catalog import load_table
-
-    k_names = 40001  # ODD: an even modulus would pin each name to one parity
-    seq = (F.col("event_id") * replicas + F.col("rep")).cast("long") + 1
-    is_up = F.col("op") != "delete"
-    return (
-        load_table(spark, sf_dir, "events")
-        .select("event_id")
-        .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
-        .select(seq.alias("seq"))
-        .select(
-            "seq",
-            F.when(F.col("seq") % 9 == 0, "delete").otherwise("upsert").alias("op"),
-            F.lit("e2e.gkelabs.io").alias("group"),
-            F.lit("v1").alias("version"),
-            F.lit("TestCRD").alias("kind"),
-            F.when(F.col("seq") % 3 == 0, "prod").otherwise("dev").alias("namespace"),
-            F.concat(F.lit("obj-"), F.pmod(F.col("seq"), F.lit(k_names))).alias("name"),
-        )
-        .select(
-            "*",
-            F.when(
-                is_up,
-                F.when(F.col("seq") % 2 == 0, "writer-spec").otherwise("writer-status"),
-            ).alias("origin"),
-            F.when(
-                is_up & (F.col("seq") % 2 == 0),
-                F.struct(F.concat(F.lit("foo-"), F.col("seq")).alias("foo")),
-            ).alias("spec"),
-            F.when(
-                is_up & (F.col("seq") % 2 == 1),
-                F.struct(F.concat(F.lit("bar-"), F.col("seq")).alias("bar")),
-            ).alias("status"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def _ownership_oplog(spark, sf_dir: str, replicas: int):
-    """Three-manager contended op-log for the ownership scale-truth:
-    manager by seq mod 3 — m-alpha asserts ONLY spec, m-beta ONLY
-    status, m-gamma BOTH (contending with alpha on spec and beta on
-    status), over an ODD key modulus coprime to 3 so every key sees all
-    three classes; ~11% deletes reset ownership epochs. The modulus
-    adapts to corpus size (~25 ops/key) so contention materializes at
-    smoke scale too — a fixed 40001 left a 2k-row smoke run with zero
-    key collisions and a vacuous conflict count."""
-    from pyspark.sql import functions as F
-
-    from kube_etl_spark.catalog import load_table
-
-    n_rows = load_table(spark, sf_dir, "events").count() * replicas
-    k_names = max(67, n_rows // 25) | 1  # odd
-    if k_names % 3 == 0:
-        k_names += 2  # keep classes cycling per key (coprime to 3)
-    seq = (F.col("event_id") * replicas + F.col("rep")).cast("long") + 1
-    return (
-        load_table(spark, sf_dir, "events")
-        .select("event_id")
-        .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))))
-        .select(seq.alias("seq"))
-        .select(
-            "seq",
-            F.when(F.col("seq") % 9 == 0, "delete").otherwise("upsert").alias("op"),
-            F.lit("e2e.gkelabs.io").alias("group"),
-            F.lit("v1").alias("version"),
-            F.lit("TestCRD").alias("kind"),
-            # namespace modulus COPRIME to the class modulus: seq%3
-            # would make namespace ≡ manager class, splitting every
-            # would-be contention across two keys (alpha's spec asserts
-            # all in prod, gamma's all in dev — cs identically zero;
-            # caught by this experiment's own vacuity guard)
-            F.when(F.col("seq") % 5 == 0, "prod").otherwise("dev").alias("namespace"),
-            F.concat(F.lit("obj-"), F.pmod(F.col("seq"), F.lit(k_names))).alias("name"),
-            F.when(F.pmod(F.col("seq"), F.lit(3)) == 0, "m-alpha")
-            .when(F.pmod(F.col("seq"), F.lit(3)) == 1, "m-beta")
-            .otherwise("m-gamma")
-            .alias("manager"),
-        )
-        .select(
-            "*",
-            F.when(
-                (F.col("op") != "delete") & F.pmod(F.col("seq"), F.lit(3)).isin(0, 2),
-                F.struct(F.concat(F.lit("foo-"), F.col("seq")).alias("foo")),
-            ).alias("spec"),
-            F.when(
-                (F.col("op") != "delete") & F.pmod(F.col("seq"), F.lit(3)).isin(1, 2),
-                F.struct(F.concat(F.lit("bar-"), F.col("seq")).alias("bar")),
-            ).alias("status"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def ownership_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """Scale-truth for the manager-aware ownership merge (r12,
-    cdc.owned_field_merge_winners — the managedFields analog): the
-    golden suite pins the semantics at tens of rows; this proves them,
-    and prices the three-window stack, at ~1M contended rows through
-    the REAL StateTable(manager_col=...), merged in four out-of-order
-    chunks.
-
-    Delivery model (the boundary this experiment ALSO establishes):
-    chunks arrive in seq order — the per-key ordering a watch stream
-    guarantees (a key's delete is delivered before any later event of
-    that key; relist deltas only append deletes ABOVE everything
-    landed). Under that contract the incremental merge is exact.
-    At-least-once REDELIVERY of already-merged chunks (including
-    arbitrarily late low-seq ones) must be a no-op — checked. What the
-    contract excludes — merging assertions ABOVE a delete before the
-    delete itself arrives — is genuinely unresolvable from compacted
-    state (the non-owners' post-delete assertions were already
-    rejected and discarded), and a shuffled-chunk dry run of this
-    harness confirmed the divergence; documented in
-    owned_field_merge_winners.
-
-    Checks:
-      * non-forced state ≡ an INDEPENDENTLY formulated ownership oracle
-        (row_number windows + joins over the full op-log: per (key,
-        field), epoch = last delete; owner = FIRST asserter post-epoch,
-        mgr-name tie-break; value = owner's LAST assertion — a
-        different mechanism from the engine's min/max_by window
-        aggregates, so they cannot share a bug), exceptAll both ways;
-      * FORCED state values ≡ plain field_merge's values on the same
-        chunks (forced ownership is per-field LWW plus ownership
-        metadata — the cross-implementation identity that pins both);
-      * replay idempotence: re-merging chunks 1 and 3 (and the very
-        first chunk, the late-low-seq case) leaves state bit-equal;
-      * vacuity: rejected-conflict counts > 0 in the final state, and
-        keys where forced and non-forced values DIVERGE > 0;
-      * cost: merge wall for non-forced/forced vs plain field_merge
-        (the price of the ownership windows) and vs row-LWW."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from kube_etl_spark.streaming.cdc import StateTable
-
-    key_cols = ["group", "version", "kind", "namespace", "name"]
-    oplog = _ownership_oplog(spark, sf_dir, replicas)
-    n_rows = oplog.count()
-    bounds = [(i * n_rows) // 4 for i in range(5)]
-    chunks = [
-        oplog.filter((F.col("seq") > bounds[i]) & (F.col("seq") <= bounds[i + 1]))
-        for i in range(4)
-    ]
-    # IN-ORDER chunk delivery — the watch contract (see docstring);
-    # the shuffled order the sibling experiments use would cross delete
-    # epochs backwards, which compacted ownership state cannot resolve
-    order = [0, 1, 2, 3]
-
-    def canon(df):
-        return df.select(
-            *key_cols,
-            F.col("spec.foo").alias("foo"),
-            F.col("status.bar").alias("bar"),
-        )
-
-    def ownership_oracle():
-        # independent mechanism: row_number windows + joins
-        tagged = oplog.withColumn("__d", (F.col("op") == "delete").cast("int"))
-        wk = Window.partitionBy(*key_cols)
-        epo = tagged.withColumn(
-            "epoch", F.max(F.when(F.col("__d") == 1, F.col("seq"))).over(wk)
-        )
-        post = F.col("epoch").isNull() | (F.col("seq") > F.col("epoch"))
-        wrow = Window.partitionBy(*key_cols).orderBy(
-            F.col("seq").desc(), F.col("__d").desc()
-        )
-        base = (
-            epo.withColumn("rn", F.row_number().over(wrow))
-            .filter("rn = 1")
-            .filter(F.col("op") != "delete")
-            .select(*key_cols)
-        )
-        out = base
-        for f in ("spec", "status"):
-            asserting = epo.filter(F.col(f).isNotNull() & post)
-            wfirst = Window.partitionBy(*key_cols).orderBy(
-                F.col("seq").asc(), F.col("manager").asc()
-            )
-            first = (
-                asserting.withColumn("rn", F.row_number().over(wfirst))
-                .filter("rn = 1")
-                .select(*key_cols, F.col("manager").alias(f"owner_{f}"))
-            )
-            wlast = Window.partitionBy(*key_cols, "manager").orderBy(
-                F.col("seq").desc()
-            )
-            last_by_mgr = (
-                asserting.withColumn("rn", F.row_number().over(wlast))
-                .filter("rn = 1")
-                .select(*key_cols, "manager", f)
-            )
-            winner = last_by_mgr.join(
-                first,
-                [*key_cols],
-            ).filter(F.col("manager") == F.col(f"owner_{f}")).select(*key_cols, f)
-            out = out.join(winner, key_cols, "left")
-        return canon(out.withColumn("spec", F.col("spec")).withColumn("status", F.col("status")))
-
-    root = tempfile.mkdtemp(prefix="ownership-truth-")
-    out: dict = {"oplog_rows": n_rows, "chunk_order": order}
-    try:
-        tables = {}
-        walls = {}
-        variants = {
-            "owned": dict(field_merge=["spec", "status"], manager_col="manager"),
-            "forced": dict(field_merge=["spec", "status"], manager_col="manager",
-                           force_ownership=True),
-            "plain_fm": dict(field_merge=["spec", "status"]),
-            "row_lww": {},
-        }
-        for name, kw in variants.items():
-            st = StateTable(spark, os.path.join(root, name), key_cols, "seq", **kw)
-            t0 = time.time()
-            for i in order:
-                batch = chunks[i]
-                if not kw.get("manager_col"):
-                    batch = batch.drop("manager")
-                st.merge_batch(batch)
-            walls[name] = round(time.time() - t0, 2)
-            tables[name] = st
-        out["merge_wall_s"] = walls
-
-        # at-least-once replay: redeliver a mid chunk, the last chunk,
-        # and the very FIRST chunk (arbitrarily late low-seq redelivery)
-        # — state must be bit-equal afterwards
-        before = canon(tables["owned"].read()).localCheckpoint(eager=True)
-        for i in (1, 3, 0):
-            tables["owned"].merge_batch(chunks[i])
-        after = canon(tables["owned"].read())
-        out["replay_idempotent"] = (
-            before.exceptAll(after).count() == 0
-            and after.exceptAll(before).count() == 0
-        )
-        out["owned_over_plain_fm"] = round(walls["owned"] / walls["plain_fm"], 3)
-        out["owned_over_row_lww"] = round(walls["owned"] / walls["row_lww"], 3)
-
-        got = canon(tables["owned"].read()).localCheckpoint(eager=True)
-        want = ownership_oracle().localCheckpoint(eager=True)
-        out["live_keys"] = got.count()
-        out["matches_ownership_oracle"] = (
-            got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-        )
-
-        forced = canon(tables["forced"].read()).localCheckpoint(eager=True)
-        plain = canon(tables["plain_fm"].read())
-        out["forced_values_match_plain_field_merge"] = (
-            forced.exceptAll(plain).count() == 0
-            and plain.exceptAll(forced).count() == 0
-        )
-
-        # vacuity: conflicts were rejected, and the modes diverge
-        raw = tables["owned"]._read_raw()
-        conf = raw.agg(
-            F.sum(F.coalesce(F.col("__cf_spec"), F.lit(0))).alias("cs"),
-            F.sum(F.coalesce(F.col("__cf_status"), F.lit(0))).alias("ct"),
-        ).collect()[0]
-        out["rejected_conflicts_spec"] = int(conf["cs"])
-        out["rejected_conflicts_status"] = int(conf["ct"])
-        assert conf["cs"] > 0 and conf["ct"] > 0, "vacuous: no conflicts rejected"
-        div = (
-            got.alias("s")
-            .join(forced.alias("h"), key_cols)
-            .filter(
-                ~F.col("s.foo").eqNullSafe(F.col("h.foo"))
-                | ~F.col("s.bar").eqNullSafe(F.col("h.bar"))
-            )
-            .count()
-        )
-        out["keys_forced_diverges_from_owned"] = div
-        assert div > 0, "vacuous: forced ≡ non-forced — contention missing"
-        return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def fieldmerge_experiment(spark, sf_dir: str, replicas: int) -> dict:
-    """Scale-truth for the per-field SSA merge (VERDICT r10 missing #3,
-    SURVEY §15.6): the golden/hypothesis suite pins the semantics at
-    hundreds of rows; this proves them — and the "same single-shuffle
-    shape as row LWW" cost claim — at the syncer harness's ~1M-row
-    scale, through the REAL StateTable(field_merge=["spec","status"]).
-
-    Corpus: two writer classes contend on a shared key space — even
-    seqs assert ONLY spec, odd seqs assert ONLY status (the disjoint
-    sync_fields hazard q_sync_conflict_audit audits; the key modulus is
-    ODD so every key's seq stream alternates classes), with ~11%
-    interleaved deletes (a delete asserts every field to null, so
-    delete-then-single-field-reassert keys must surface with the OTHER
-    field null). Merges run in four seq-range chunks delivered OUT of
-    order (2,0,3,1) — per-field assertion seqs, not arrival order, must
-    decide every contest.
-
-    Checks:
-      * final field-merged state ≡ an INDEPENDENTLY formulated SSA
-        oracle (row_number windows over the full op-log: row winner for
-        liveness/base cols; per field, the latest asserting row) —
-        exceptAll both ways;
-      * contention materialized: keys where whole-payload LWW loses a
-        field that field merge preserves (counted vs a row-LWW
-        StateTable fed the same chunks), and live keys with exactly one
-        field null — both must be nonzero or the run is vacuous;
-      * cost: total merge wall, field-merge vs row-LWW, same chunks —
-        the single-aggregate claim as a measured ratio — plus the
-        BUCKETED field-merged layout on the same chunks (uniform
-        batches touch every bucket, the documented worst regime for
-        hash bucketing — this prices it for THIS state family) with
-        its live state asserted identical to the flat table's."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from kube_etl_spark.catalog import load_table
-    from kube_etl_spark.streaming.cdc import StateTable
-
-    key_cols = ["group", "version", "kind", "namespace", "name"]
-    n_events = load_table(spark, sf_dir, "events").count()
-    n_rows = n_events * replicas
-
-    oplog = _fieldmerge_oplog(spark, sf_dir, replicas)
-
-    def ssa_oracle(frame):
-        # deliberately a DIFFERENT mechanism from field_merge_winners'
-        # max_by aggregate: row_number windows + joins, so the oracle
-        # cannot share a bug with the implementation
-        tagged = frame.withColumn("__d", (F.col("op") == "delete").cast("int"))
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col("seq").desc(), F.col("__d").desc()
-        )
-        base = tagged.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1")
-        out = base.filter(F.col("op") != "delete").select(*key_cols, "seq", "origin")
-        for fld in ("spec", "status"):
-            asserting = tagged.filter(F.col(fld).isNotNull() | (F.col("__d") == 1))
-            fw = asserting.withColumn("__rn", F.row_number().over(w)).filter(
-                "__rn = 1"
-            )
-            out = out.join(
-                fw.select(
-                    *key_cols, F.when(F.col("__d") == 0, F.col(fld)).alias(fld)
-                ),
-                key_cols,
-                "left",
-            )
-        return out
-
-    def canon(frame):
-        return frame.select(
-            *key_cols, "seq", "origin",
-            F.col("spec.foo").alias("foo"),
-            F.col("status.bar").alias("bar"),
-        )
-
-    bounds = [(i * n_rows) // 4 for i in range(5)]
-    chunks = [
-        oplog.filter(
-            (F.col("seq") > bounds[i]) & (F.col("seq") <= bounds[i + 1])
-        )
-        for i in range(4)
-    ]
-    order = [2, 0, 3, 1]
-
-    root = tempfile.mkdtemp(prefix="fieldmerge-truth-")
-    out: dict = {"oplog_rows": oplog.count(), "chunk_order": order}
-    try:
-        st_field = StateTable(
-            spark, os.path.join(root, "field"), key_cols, "seq",
-            field_merge=["spec", "status"],
-        )
-        st_row = StateTable(spark, os.path.join(root, "row"), key_cols, "seq")
-        st_bucketed = StateTable(
-            spark, os.path.join(root, "bucketed"), key_cols, "seq",
-            n_buckets=32, field_merge=["spec", "status"],
-        )
-        walls = {"field": 0.0, "row": 0.0, "bucketed": 0.0}
-        for name, st in (
-            ("field", st_field), ("row", st_row), ("bucketed", st_bucketed)
-        ):
-            for i in order:
-                t0 = time.time()
-                st.merge_batch(chunks[i])
-                walls[name] += time.time() - t0
-        out["merge_wall_field_s"] = round(walls["field"], 2)
-        out["merge_wall_row_s"] = round(walls["row"], 2)
-        out["field_over_row_wall"] = round(walls["field"] / walls["row"], 3)
-        out["merge_wall_bucketed_field_s"] = round(walls["bucketed"], 2)
-
-        got = canon(st_field.read()).localCheckpoint(eager=True)
-        want = canon(ssa_oracle(oplog))
-        out["live_keys"] = got.count()
-        out["matches_ssa_oracle"] = (
-            got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-        )
-        got_b = canon(st_bucketed.read())
-        out["bucketed_matches_flat"] = (
-            got_b.exceptAll(got).count() == 0
-            and got.exceptAll(got_b).count() == 0
-        )
-
-        # vacuity guards: the contested shapes must actually occur
-        out["one_field_null_keys"] = got.filter(
-            (F.col("foo").isNull() & F.col("bar").isNotNull())
-            | (F.col("foo").isNotNull() & F.col("bar").isNull())
-        ).count()
-        r_ = canon(st_row.read()).select(
-            *key_cols,
-            F.col("foo").alias("r_foo"), F.col("bar").alias("r_bar"),
-        )
-        out["lww_divergent_keys"] = (
-            got.join(r_, key_cols)
-            .filter(
-                (~F.col("foo").eqNullSafe(F.col("r_foo")))
-                | (~F.col("bar").eqNullSafe(F.col("r_bar")))
-            )
-            .count()
-        )
-        if not (out["one_field_null_keys"] and out["lww_divergent_keys"]):
-            raise AssertionError(
-                f"vacuous run: the contested shapes never materialized "
-                f"({out}) — raise replicas until keys see multiple writers"
-            )
-        return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def main(argv: list[str]) -> None:
+def _parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--lsh", action="store_true")
     ap.add_argument("--ivf", action="store_true")
     ap.add_argument("--incremental", action="store_true")
     ap.add_argument("--boilerplate", action="store_true")
-    ap.add_argument("--snapdiff", action="store_true")
-    ap.add_argument("--snapdiff-skew", action="store_true")
     ap.add_argument("--mediasim", action="store_true")
     ap.add_argument("--simprobe", action="store_true")
     ap.add_argument("--semprobe", action="store_true")
-    ap.add_argument("--grank", action="store_true")
-    ap.add_argument("--imerge", action="store_true")
-    ap.add_argument("--syncer", action="store_true")
-    ap.add_argument("--bridge", action="store_true")
-    ap.add_argument("--fieldmerge", action="store_true")
-    ap.add_argument("--ownership", action="store_true")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--replicas", type=int, default=10)
     ap.add_argument("--json", default=None)
-    args = ap.parse_args(argv)
+    return ap
+
+
+def main(argv: list[str]) -> None:
+    args = _parser().parse_args(argv)
     spark = _spark()
     out: dict = {"sf_dir": args.sf_dir, "replicas": args.replicas}
     if args.lsh:
@@ -2535,12 +1139,6 @@ def main(argv: list[str]) -> None:
         out["incremental"] = incremental_experiment(spark, args.sf_dir, args.replicas)
     if args.boilerplate:
         out["boilerplate"] = boilerplate_experiment(spark, args.sf_dir, args.replicas)
-    if args.snapdiff:
-        out["snapdiff"] = snapdiff_experiment(spark, args.sf_dir, args.replicas)
-    if args.snapdiff_skew:
-        out["snapdiff_skew"] = snapdiff_skew_experiment(
-            spark, args.sf_dir, args.replicas
-        )
     if args.mediasim:
         out["mediasim"] = mediasim_experiment(spark, args.sf_dir, args.replicas)
     if args.simprobe:
@@ -2549,18 +1147,6 @@ def main(argv: list[str]) -> None:
         out["semprobe"] = semprobe_experiment(
             spark, args.sf_dir, min(args.replicas, 4)
         )
-    if args.grank:
-        out["grank"] = grank_experiment(spark, args.sf_dir, args.replicas)
-    if args.imerge:
-        out["imerge"] = imerge_experiment(spark, args.sf_dir, args.replicas)
-    if args.syncer:
-        out["syncer"] = syncer_experiment(spark, args.sf_dir, args.replicas)
-    if args.bridge:
-        out["bridge"] = bridge_experiment(spark, args.sf_dir, args.replicas)
-    if args.fieldmerge:
-        out["fieldmerge"] = fieldmerge_experiment(spark, args.sf_dir, args.replicas)
-    if args.ownership:
-        out["ownership"] = ownership_experiment(spark, args.sf_dir, args.replicas)
     line = json.dumps(out)
     print(line)
     if args.json:

@@ -290,10 +290,20 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Only (doc_id, band, bucket) rides the band shuffle — exploding the
     # shingle arrays 8× would make the "cheap" band shuffles carry the
     # whole corpus 8 times over at the 100 TB target.
-    bands = lsh_bands(sig)
+    cand = lsh_candidates(lsh_bands(sig))
+    return lsh_estimate_verify(cand, sig).orderBy("doc_a", "doc_b")
+
+
+def lsh_candidates(bands: DataFrame) -> DataFrame:
+    """The candidate stage of batch LSH dedup — ONE implementation
+    shared by q_dedup_fuzzy and the scale-truth harness (jobs/
+    scale_truth.py --lsh), so the measured banding recall describes
+    the code the query runs. bands: lsh_bands output (doc_id, band,
+    bucket). Returns distinct (doc_a, doc_b) pairs, doc_a < doc_b,
+    that share a bucket in at least one band."""
     a = bands.alias("a")
     b = bands.alias("b")
-    cand = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -303,7 +313,6 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    return lsh_estimate_verify(cand, sig).orderBy("doc_a", "doc_b")
 
 
 def lsh_estimate_verify(cand: DataFrame, sig_state: DataFrame) -> DataFrame:

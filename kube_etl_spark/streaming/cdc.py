@@ -201,8 +201,9 @@ def owned_field_merge_winners(
         too: without it, an at-least-once REDELIVERY of pre-delete
         assertions after the key went live again would pass the
         epoch filter, flip ownership back to a pre-delete asserter,
-        and resurrect its value (caught by the --ownership
-        scale-truth's replay leg).
+        and resurrect its value (caught by the replay leg of the 1M-row
+        ownership scale-truth, docs/architecture.md §"Manager-aware
+        field ownership"; its reproducer is at commit df131c6).
 
     Delivery contract: chunks must respect PER-KEY seq order for ALL
     ops — a watch delivers each key's events in order, and relist

@@ -2045,3 +2045,65 @@ def test_plan_audit_dump_needs_dump_dir(capsys):
         plan_audit.main(["--dump", "q_agg_groupby"])
     assert exc.value.code == 2
     assert "--dump needs --dump-dir" in capsys.readouterr().err
+
+
+@pytest.mark.slow
+def test_scale_truth_smoke_every_flag(tmp_path):
+    """One run of jobs/scale_truth.py with every experiment flag its
+    parser defines, at smoke scale. The argv comes from the parser, so
+    a flag cannot ship without this run covering it. --replicas 2: at
+    1 the semantic probe finds no pairs. Every flag must leave its
+    section, every boolean check in the JSON must hold, and every pair
+    count must be nonzero (an equality over zero pairs proves
+    nothing)."""
+    import argparse
+    import os
+    import subprocess
+
+    sys.path.insert(0, JOBS_DIR)
+    import scale_truth
+
+    flags = [
+        a
+        for a in scale_truth._parser()._actions
+        if isinstance(a, argparse._StoreTrueAction)
+    ]
+    assert flags
+    out = tmp_path / "scale_truth.json"
+    root = os.path.dirname(JOBS_DIR)
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(JOBS_DIR, "scale_truth.py"),
+            *(a.option_strings[0] for a in flags),
+            "--sf-dir", SMOKE_SF,
+            "--replicas", "2",
+            "--json", str(out),
+        ],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(out.read_text())
+    assert {a.dest for a in flags} <= set(got)
+
+    def walk(node, path):
+        if isinstance(node, dict):
+            for k, v in node.items():
+                if k == "pairs":
+                    assert v > 0, f"{path}.{k} == 0"
+                walk(v, f"{path}.{k}")
+        elif isinstance(node, list):
+            for i, v in enumerate(node):
+                walk(v, f"{path}[{i}]")
+        elif isinstance(node, bool):
+            assert node, f"{path} is false"
+
+    walk(got, "$")

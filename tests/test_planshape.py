@@ -1264,16 +1264,17 @@ def test_purge_horizon_audit_single_aggregate(spark):
 def test_field_merge_winners_single_exchange(spark):
     """The ENGINE's field_merge_winners itself: ONE key exchange with a
     map-side partial aggregate in front of it — the row-LWW-equal
-    shuffle shape the 1M scale-truth (architecture.md §r11b) prices at
-    a 1.68× constant factor. A refactor that reintroduced per-field
-    windows or joins would turn every StateTable (flat or bucketed)
-    merge into a multi-exchange plan; this pins the shape at the
-    function boundary. (Simple mode: formatted mode lists each node
-    twice — tree + details — so counting there is wrong, the r11
-    audit-query lesson.) The aggregate is physically a SortAggregate:
-    max_by's struct-typed buffer is ineligible for hash aggregation,
-    so each merge pays two per-partition sorts — a known, measured
-    constant, not a shape bug."""
+    shuffle shape the 1M scale-truth (architecture.md §r11b; reproducer
+    at commit df131c6) prices at a 1.68× constant factor. A refactor
+    that reintroduced per-field windows or joins would turn every
+    StateTable (flat or bucketed) merge into a multi-exchange plan;
+    this pins the shape at the function boundary. (Simple mode:
+    formatted mode lists each node twice — tree + details — so
+    counting there is wrong, the r11 audit-query lesson.) The
+    aggregate is physically a SortAggregate: max_by's struct-typed
+    buffer is ineligible for hash aggregation, so each merge pays two
+    per-partition sorts — a known, measured constant, not a shape
+    bug."""
     from pyspark.sql import functions as F
 
     from kube_etl_spark.streaming.cdc import field_merge_winners

@@ -620,8 +620,9 @@ def test_field_merge_purge_tombstones_compacts_safely(spark, tmp_path):
 def _fm_batches(spark):
     """Contended keys spread across buckets, delivered OUT of seq order,
     with a delete-then-single-field-reassert interleaved — the shapes
-    the 1M scale-truth run exercises (jobs/scale_truth.py --fieldmerge),
-    small enough for an exact flat-vs-bucketed comparison."""
+    the 1M scale-truth run exercised (docs/architecture.md §round 11b;
+    its `--fieldmerge` reproducer is at commit df131c6), small enough
+    for an exact flat-vs-bucketed comparison."""
     rows_by_chunk = [
         [_crd_row(7, "upsert", f"k{i}", None, (f"t7-{i}",)) for i in range(8)]
         + [_crd_row(8, "delete", "k3", None, None)],
@@ -1038,7 +1039,9 @@ def test_ownership_cli_flag_end_to_end(spark, tmp_path):
 
 
 def test_owned_merge_replayed_predelete_batch_cannot_resurrect(spark, tmp_path):
-    """The --ownership scale-truth's replay-leg catch, as a golden: a
+    """The ownership scale-truth's replay-leg catch (docs/architecture.md
+    §"Manager-aware field ownership"; its `--ownership` reproducer is at
+    commit df131c6), as a golden: a
     LIVE key's compacted row must carry its delete epoch (__epoch), or
     an at-least-once REDELIVERY of pre-delete assertions — after the
     key went live again under a new owner — passes the epoch filter,
