@@ -48,7 +48,9 @@ def main(argv: list[str]) -> None:
     if args.zip:
         tree = args.output.rstrip("/") + ".tree"
         n = materialize_tree(
-            spark.read.json(args.output).select("path", "payload"),
+            spark.read.schema("path string, payload string")
+            .json(args.output)
+            .select("path", "payload"),
             tree,
             archive=True,
         )

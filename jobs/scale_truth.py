@@ -425,12 +425,15 @@ def ivf_experiment(spark, sf_dir: str, replicas: int) -> dict:
 
     # query sample: 200 deterministic vectors; ground truth by brute
     # force (cosine == dot on the normalized column)
-    # pure-id selection: the predicate alone admits slightly more than
-    # 200 ids, and the orderBy pins WHICH 200 survive regardless of
-    # partition layout or defaultParallelism — a bare .limit(200) on a
-    # distributed frame returns whichever partitions answer first and
-    # broke the module's "reruns reproduce the exact corpus" claim
-    # (ADVICE r5)
+    # pure-id selection: how many ids the predicate admits depends on
+    # n — 28 at sf0.001 with --replicas 2 (4,000 vectors), 55 there at
+    # the default --replicas 10 (8,000), 228 at sf0.1 (32,000) — so the
+    # limit binds only at sf0.1 and smaller runs measure recall over
+    # n_queries < 200 queries. The orderBy pins WHICH 200 survive
+    # regardless of partition layout or defaultParallelism — a bare
+    # .limit(200) on a distributed frame returns whichever partitions
+    # answer first and broke the module's "reruns reproduce the exact
+    # corpus" claim (ADVICE r5)
     q = (
         corpus.filter(F.col("vec_id") % (n // 200 * 7 + 1) % 157 == 3)
         .orderBy("vec_id")
@@ -845,9 +848,9 @@ def simprobe_experiment(
     Measured per trickle batch: buckets touched, band-index rows the
     pruned probe actually read (post-hoc re-read of the recorded bucket
     list — IO, not wall, is the scale quantity; local per-dir overhead
-    dominates wall at this dir count), the flat probe's constant
-    corpus-sized row count, and pair-set equality between the two
-    layouts (the swap must be output-invisible).
+    dominates wall at this dir count), the flat probe's corpus-sized
+    row count read at the same point, and pair-set equality between
+    the two layouts (the swap must be output-invisible).
 
     Expectation: pruned probe rows ∝ min(4·batch, band_buckets)/
     band_buckets of the index — i.e. ∝ batch for small batches — while
@@ -902,7 +905,6 @@ def simprobe_experiment(
     t0 = time.time()
     pruned.ingest_batch(seed, 1)
     seed_pruned_s = round(time.time() - t0, 2)
-    index_rows = flat.bands.read().count()
 
     probe_log: list = []
     orig_read = StateTable.read
@@ -920,6 +922,9 @@ def simprobe_experiment(
             t0 = time.time()
             flat.ingest_batch(b, 2 + i)
             w_flat = round(time.time() - t0, 2)
+            # the whole index after this batch's merge: the same point
+            # the pruned buckets are re-read at below
+            index_rows = flat.bands.read().count()
             probe_log.clear()
             t0 = time.time()
             pruned.ingest_batch(b, 2 + i)
@@ -928,6 +933,7 @@ def simprobe_experiment(
             probe_rows = (
                 orig_read(pruned.bands, probe_buckets).count() if probe_buckets else 0
             )
+            assert probe_rows <= index_rows, (probe_rows, index_rows)
             rows.append(
                 {
                     "batch_payloads": len(ids),
@@ -971,9 +977,9 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
     the pruned probe actually read (post-hoc re-read of the recorded
     bucket lists — IO, not wall, is the scale quantity; local per-dir
     overhead dominates wall at this dir count, same caveat as
-    --simprobe), the flat probe's constant corpus-sized member count,
-    and pair-set equality between the layouts (the swap must be
-    output-invisible).
+    --simprobe), the flat probe's corpus-sized member count read at
+    the same point, and pair-set equality between the layouts (the
+    swap must be output-invisible).
 
     Expectation: pruned probe rows ∝ the batch's touched cells (top-2
     fan-out ⇒ ≤ 2·batch cells of ~2n/k members each), while the flat
@@ -1049,7 +1055,6 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
     t0 = time.time()
     pruned.ingest_batch(seed, 1)
     seed_pruned_s = round(time.time() - t0, 2)
-    member_rows = flat.members.read().count()
 
     member_log: list = []
     vec_log: list = []
@@ -1070,6 +1075,9 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
             t0 = time.time()
             flat.ingest_batch(b, 2 + i)
             w_flat = round(time.time() - t0, 2)
+            # the whole member table after this batch's merge: the same
+            # point the pruned cells are re-read at below
+            member_rows = flat.members.read().count()
             member_log.clear()
             vec_log.clear()
             t0 = time.time()
@@ -1079,6 +1087,7 @@ def semprobe_experiment(spark, sf_dir: str, replicas: int) -> dict:
             probe_rows = (
                 orig_read(pruned.members, cells).count() if cells else 0
             )
+            assert probe_rows <= member_rows, (probe_rows, member_rows)
             vbuckets = vec_log[0] if vec_log else []
             vec_rows = (
                 orig_read(pruned.vectors, vbuckets).count() if vbuckets else 0

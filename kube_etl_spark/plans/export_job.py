@@ -23,8 +23,11 @@ without the filesystem blowup).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..catalog import TABLES, load_table
 
@@ -212,25 +215,40 @@ def run_export(
 ) -> dict[str, int]:
     """The full export job: scan every catalog table, derive paths,
     write one partitioned JSON dataset (partition column = table_name,
-    the zip-directory analog). Returns per-table row counts. Errors are
-    accumulated per-table and raised joined at the end, matching
-    errors.Join in export.go:99-167."""
-    counts: dict[str, int] = {}
-    errs: list[str] = []
-    frames = []
-    for t in tables:
+    the zip-directory analog). Returns per-table row counts; a table
+    with no rows is absent. Errors are accumulated per-table and raised
+    joined at the end, matching errors.Join in export.go:99-167.
+
+    The reference lists its types one after another (export.go:111-163).
+    Here each table's frame is planned on a thread pool, because
+    planning a Parquet scan runs a schema-inference job of its own; the
+    threads inherit the caller's job group and local properties. The
+    counts are observed on the write itself, so the output is never
+    read back."""
+
+    @inheritable_thread_target(spark)
+    def plan(t: str):
         try:
-            frames.append(export_table(spark, sf_dir, t, serialization=serialization))
+            return export_table(spark, sf_dir, t, serialization=serialization), None
         except Exception as ex:  # tolerate per-type failure, keep going
-            errs.append(f"{t}: {ex}")
+            return None, f"{t}: {ex}"
+
+    workers = max(1, min(len(tables), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        planned = list(pool.map(plan, tables))
+    frames = [(t, f) for t, (f, _) in zip(tables, planned) if f is not None]
+    errs = [e for _, e in planned if e is not None]
+    counts: dict[str, int] = {}
     if frames:
-        out = frames[0]
-        for f in frames[1:]:
+        out = frames[0][1]
+        for _, f in frames[1:]:
             out = out.unionByName(f)
+        obs = Observation()
+        out = out.observe(
+            obs, *[F.count_if(F.col("table_name") == t).alias(t) for t, _ in frames]
+        )
         out.write.mode("overwrite").partitionBy("table_name").json(out_dir)
-        back = spark.read.json(out_dir)
-        for row in back.groupBy("table_name").count().collect():
-            counts[row["table_name"]] = row["count"]
+        counts = {t: n for t, n in obs.get.items() if n}
     if errs:
         raise RuntimeError("; ".join(errs))
     return counts

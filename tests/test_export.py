@@ -4,6 +4,7 @@ zip, assert the golden path exists)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kube_etl_spark.catalog import TABLES, load_table
@@ -19,6 +20,10 @@ def test_export_roundtrip(spark, tmp_path):
     for t in TABLES:
         assert counts[t] == load_table(spark, SMOKE_SF, t).count(), t
     back = spark.read.json(out)
+    # the counts observed on the write are what the output holds
+    assert counts == {
+        r["table_name"]: r["count"] for r in back.groupBy("table_name").count().collect()
+    }
     # golden-path check (export_test.go's `_cluster/core/Namespace/...`
     # analog): region AFRICA has regionkey 0 → path AFRICA/core/region/0.json
     golden = back.filter(
@@ -34,6 +39,54 @@ def test_export_roundtrip(spark, tmp_path):
         spark.read.json(out + "/table_name=nation").count()
         == load_table(spark, SMOKE_SF, "nation").count()
     )
+
+
+def test_export_failed_table_keeps_the_rest(spark, tmp_path):
+    """A table that fails to plan is reported in the one joined error,
+    and every other table is still written with its full count."""
+    out = str(tmp_path / "export")
+    with pytest.raises(RuntimeError) as ei:
+        run_export(spark, SMOKE_SF, out, tables=("region", "no_such_table", "nation"))
+    msg = str(ei.value)
+    assert "no_such_table" in msg
+    assert "region" not in msg and "nation" not in msg
+    back = spark.read.json(out)
+    assert {
+        r["table_name"]: r["count"] for r in back.groupBy("table_name").count().collect()
+    } == {t: load_table(spark, SMOKE_SF, t).count() for t in ("region", "nation")}
+
+
+def test_export_empty_table_absent_from_counts(spark, tmp_path):
+    src = str(tmp_path / "sf")
+    for t in ("region", "nation"):
+        df = load_table(spark, SMOKE_SF, t)
+        (df.limit(0) if t == "region" else df).write.parquet(f"{src}/{t}.parquet")
+    counts = run_export(spark, src, str(tmp_path / "export"), tables=("region", "nation"))
+    assert counts == {"nation": load_table(spark, SMOKE_SF, "nation").count()}
+
+
+def test_export_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The per-table frames are planned on pool threads; each of their
+    jobs (one schema inference per table) must land in the caller's job
+    group, so a group cancel or a per-op job ledger sees the whole
+    export. A fresh copy of the tables keeps the catalog's schema cache
+    from hiding those jobs."""
+    import shutil
+
+    src = str(tmp_path / "sf")
+    shutil.copytree(SMOKE_SF, src)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "export-job-group-test"
+    sc.setJobGroup(group, group)
+    try:
+        run_export(spark, src, str(tmp_path / "export"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert len(tracker.getJobIdsForGroup(group)) >= len(TABLES)
 
 
 def test_export_paths_stable_across_reexports(spark, tmp_path):

@@ -2099,6 +2099,8 @@ def test_scale_truth_smoke_every_flag(tmp_path):
             for k, v in node.items():
                 if k == "pairs":
                     assert v > 0, f"{path}.{k} == 0"
+                if k == "probe_share":
+                    assert v <= 1, f"{path}.{k} == {v}"
                 walk(v, f"{path}.{k}")
         elif isinstance(node, list):
             for i, v in enumerate(node):
@@ -2107,3 +2109,5 @@ def test_scale_truth_smoke_every_flag(tmp_path):
             assert node, f"{path} is false"
 
     walk(got, "$")
+    # the query-sample yield ivf_experiment's comment states for this scale
+    assert got["ivf"]["n_queries"] == 28
