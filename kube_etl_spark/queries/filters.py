@@ -282,27 +282,20 @@ def q_validate_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8: rule validation — exact validateRule semantics
     (krmsyncer_controller.go:105-116): '*' anywhere makes a glob rule;
     legal only when group is KCC-family (literal *.cnrm glob, dotted
-    suffix, or apex) AND version and kind are both '*'."""
+    suffix, or apex) AND version and kind are both '*'. The engine's
+    validate_rules judges each row; with no sync_fields, only the glob
+    branch can reject."""
+    from ..streaming.sync import validate_rules
+
     rules = spark.createDataFrame(
-        _RULE_ROWS, "rule_name string, grp string, version string, kind string"
+        _RULE_ROWS,
+        "rule_name string, rule_group string, rule_version string, rule_kind string",
+    ).withColumn("sync_fields", F.array().cast("array<string>"))
+    return (
+        validate_rules(rules)
+        .select("rule_name", F.col("valid").cast("int").alias("valid"))
+        .orderBy("rule_name")
     )
-    has_glob = (
-        F.col("grp").contains("*")
-        | F.col("version").contains("*")
-        | F.col("kind").contains("*")
-    )
-    kcc_glob = (
-        (
-            (F.col("grp") == "*.cnrm.cloud.google.com")
-            | F.col("grp").endswith(".cnrm.cloud.google.com")
-            | (F.col("grp") == "cnrm.cloud.google.com")
-        )
-        & (F.col("version") == "*")
-        & (F.col("kind") == "*")
-    )
-    return rules.select(
-        "rule_name", (~has_glob | kcc_glob).cast("int").alias("valid")
-    ).orderBy("rule_name")
 
 
 # ---------------------------------------------------------------------------
@@ -444,14 +437,9 @@ def q_syncer_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     count from discovery expansion, and last applied op-log seq —
     mirroring Reconcile's Status().Update
     (krmsyncer_controller.go:77-100, 238-246)."""
-    from ..streaming.sync import syncer_status
+    from ..streaming.sync import RULE_SCHEMA, syncer_status
 
-    rules = spark.createDataFrame(
-        _SYNCER_RULE_ROWS,
-        "syncer_name string, suspend boolean, mode string, rule_group string,"
-        " rule_version string, rule_kind string, namespaces array<string>,"
-        " sync_fields array<string>",
-    )
+    rules = spark.createDataFrame(_SYNCER_RULE_ROWS, RULE_SCHEMA)
     catalog = spark.createDataFrame(
         _SYNCER_CATALOG_ROWS, "group string, version string, kind string"
     )
@@ -559,24 +547,15 @@ def q_rule_change_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_rules_fanout exercise. Scale: rule tables are config-sized and
     broadcast; the catalog join is discovery-sized; no data-sized input
     at all."""
-    from ..streaming.sync import (
-        normalize_rules,
-        rule_match_condition,
-        validate_rules,
-    )
+    from ..streaming.sync import RULE_SCHEMA, active_rules, rule_match_condition
 
-    schema = (
-        "syncer_name string, suspend boolean, mode string, rule_group string,"
-        " rule_version string, rule_kind string, namespaces array<string>,"
-        " sync_fields array<string>"
-    )
     catalog = spark.createDataFrame(
         _SYNCER_CATALOG_ROWS, "group string, version string, kind string"
     )
 
-    # Both generations travel through ONE validate + ONE catalog join,
-    # distinguished by a gen prefix on the syncer name (normalize_rules
-    # projects its fixed column set, so a side column would not
+    # Both generations travel through ONE rule gate + ONE catalog join,
+    # distinguished by a gen prefix on the syncer name (active_rules
+    # projects the fixed rule columns, so a side column would not
     # survive). The single-path plan is deliberate: the first cut ran
     # the same catalog join twice (once per generation) and unioned —
     # same-schema twin broadcast subplans — and the FIRST execution of
@@ -588,16 +567,8 @@ def q_rule_change_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         for gen, rs in (("old", _SYNCER_RULE_ROWS), ("new", _SYNCER_RULE_ROWS_GEN2))
         for r in rs
     ]
-    rules = spark.createDataFrame(rows, schema)
-    val = validate_rules(normalize_rules(rules))
-    # a syncer with any invalid or suspended rule is wholly inactive
-    # (per generation — names are gen-prefixed here)
-    bad = (
-        val.filter(~F.col("valid") | F.col("suspend"))
-        .select("syncer_name")
-        .distinct()
-    )
-    active = val.join(F.broadcast(bad), "syncer_name", "left_anti")
+    # the gate poisons a syncer per generation: names are gen-prefixed
+    active = active_rules(spark.createDataFrame(rows, RULE_SCHEMA))
     both = (
         catalog.join(
             F.broadcast(active),
@@ -705,25 +676,10 @@ def q_syncer_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side to per-syncer aggregates. No shuffle carries event rows
     except the distinct."""
     from ..catalog import load_table
-    from ..streaming.sync import (
-        normalize_rules,
-        rule_match_condition,
-        validate_rules,
-    )
+    from ..streaming.sync import RULE_SCHEMA, active_rules, rule_match_condition
 
-    schema = (
-        "syncer_name string, suspend boolean, mode string, rule_group string,"
-        " rule_version string, rule_kind string, namespaces array<string>,"
-        " sync_fields array<string>"
-    )
-    rules = spark.createDataFrame(_SYNCER_RULE_ROWS, schema)
-    val = validate_rules(normalize_rules(rules))
-    bad = (
-        val.filter(~F.col("valid") | F.col("suspend"))
-        .select("syncer_name")
-        .distinct()
-    )
-    active = val.join(F.broadcast(bad), "syncer_name", "left_anti")
+    rules = spark.createDataFrame(_SYNCER_RULE_ROWS, RULE_SCHEMA)
+    active = active_rules(rules)
     cat = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(_SYNCER_CATALOG_ROWS)],
         "idx long, group string, version string, kind string",
@@ -855,25 +811,10 @@ def q_watch_gap_relist(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural unit of order — the same per-stream contract the real
     consumer has); the rollup is syncer-sized."""
     from ..catalog import load_table
-    from ..streaming.sync import (
-        normalize_rules,
-        rule_match_condition,
-        validate_rules,
-    )
+    from ..streaming.sync import RULE_SCHEMA, active_rules, rule_match_condition
 
-    schema = (
-        "syncer_name string, suspend boolean, mode string, rule_group string,"
-        " rule_version string, rule_kind string, namespaces array<string>,"
-        " sync_fields array<string>"
-    )
-    rules = spark.createDataFrame(_SYNCER_RULE_ROWS, schema)
-    val = validate_rules(normalize_rules(rules))
-    bad = (
-        val.filter(~F.col("valid") | F.col("suspend"))
-        .select("syncer_name")
-        .distinct()
-    )
-    active = val.join(F.broadcast(bad), "syncer_name", "left_anti")
+    rules = spark.createDataFrame(_SYNCER_RULE_ROWS, RULE_SCHEMA)
+    active = active_rules(rules)
     cat = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(_SYNCER_CATALOG_ROWS)],
         "idx long, group string, version string, kind string",
@@ -1003,25 +944,10 @@ def q_discovery_expansion_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: catalogs and rules are both config-sized; the plan is one
     broadcast join plus a syncer-sized rollup — nothing data-sized
     anywhere."""
-    from ..streaming.sync import (
-        normalize_rules,
-        rule_match_condition,
-        validate_rules,
-    )
+    from ..streaming.sync import RULE_SCHEMA, active_rules, rule_match_condition
 
-    schema = (
-        "syncer_name string, suspend boolean, mode string, rule_group string,"
-        " rule_version string, rule_kind string, namespaces array<string>,"
-        " sync_fields array<string>"
-    )
-    rules = spark.createDataFrame(_SYNCER_RULE_ROWS, schema)
-    val = validate_rules(normalize_rules(rules))
-    bad = (
-        val.filter(~F.col("valid") | F.col("suspend"))
-        .select("syncer_name")
-        .distinct()
-    )
-    active = val.join(F.broadcast(bad), "syncer_name", "left_anti")
+    rules = spark.createDataFrame(_SYNCER_RULE_ROWS, RULE_SCHEMA)
+    active = active_rules(rules)
     cat_schema = "group string, version string, kind string"
     cats = (
         spark.createDataFrame(_SYNCER_CATALOG_ROWS, cat_schema)
@@ -1160,25 +1086,10 @@ def q_fanout_amplification(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. ROUND(·,6) on an integer-ratio display column follows
     the q_watch_gap_relist precedent."""
     from ..catalog import load_table
-    from ..streaming.sync import (
-        normalize_rules,
-        rule_match_condition,
-        validate_rules,
-    )
+    from ..streaming.sync import RULE_SCHEMA, active_rules, rule_match_condition
 
-    schema = (
-        "syncer_name string, suspend boolean, mode string, rule_group string,"
-        " rule_version string, rule_kind string, namespaces array<string>,"
-        " sync_fields array<string>"
-    )
-    rules = spark.createDataFrame(_FANOUT_RULE_ROWS, schema)
-    val = validate_rules(normalize_rules(rules))
-    bad = (
-        val.filter(~F.col("valid") | F.col("suspend"))
-        .select("syncer_name")
-        .distinct()
-    )
-    active = val.join(F.broadcast(bad), "syncer_name", "left_anti").withColumn(
+    rules = spark.createDataFrame(_FANOUT_RULE_ROWS, RULE_SCHEMA)
+    active = active_rules(rules).withColumn(
         "patches",
         (F.lit(1) + F.array_contains("sync_fields", "status").cast("int")).cast(
             "bigint"
@@ -1417,25 +1328,10 @@ def q_sync_conflict_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out join output carries only key + syncer columns, never
     payloads."""
     from ..catalog import load_table
-    from ..streaming.sync import (
-        normalize_rules,
-        rule_match_condition,
-        validate_rules,
-    )
+    from ..streaming.sync import RULE_SCHEMA, active_rules, rule_match_condition
 
-    schema = (
-        "syncer_name string, suspend boolean, mode string, rule_group string,"
-        " rule_version string, rule_kind string, namespaces array<string>,"
-        " sync_fields array<string>"
-    )
-    rules = spark.createDataFrame(_CONFLICT_RULE_ROWS, schema)
-    val = validate_rules(normalize_rules(rules))
-    bad = (
-        val.filter(~F.col("valid") | F.col("suspend"))
-        .select("syncer_name")
-        .distinct()
-    )
-    active = val.join(F.broadcast(bad), "syncer_name", "left_anti")
+    rules = spark.createDataFrame(_CONFLICT_RULE_ROWS, RULE_SCHEMA)
+    active = active_rules(rules)
     cat = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(_SYNCER_CATALOG_ROWS)],
         "idx long, group string, version string, kind string",

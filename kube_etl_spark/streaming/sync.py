@@ -44,15 +44,33 @@ ALWAYS_KEPT = ("group", "version", "kind", "namespace", "name", "labels", "annot
 VALID_SYNC_FIELDS = ("spec", "status", "spec.resourceID")
 
 
+# The rule table's columns, in order (krmsyncer_types.go:24-84 flattened
+# to one row per rule).
+RULE_SCHEMA = (
+    "syncer_name string, suspend boolean, mode string, rule_group string, "
+    "rule_version string, rule_kind string, namespaces array<string>, "
+    "sync_fields array<string>"
+)
+INVALID_GLOB_MSG = (
+    "glob only legal for version/kind when group is KCC "
+    "(e.g. *.cnrm.cloud.google.com)"
+)
+
+
+def _mode_or_pull() -> F.Column:
+    """The mode column with its CRD default: empty ⇒ pull (types.go:77)."""
+    return F.when(F.col("mode").isNull() | (F.col("mode") == ""), "pull").otherwise(
+        F.col("mode")
+    )
+
+
 def normalize_rules(rules: DataFrame) -> DataFrame:
     """Apply the CRD defaults (types.go:33-39, 77): empty mode ⇒ pull,
     empty sync_fields ⇒ ["status"], null namespaces ⇒ [] (= all)."""
     return rules.select(
         "syncer_name",
         F.coalesce("suspend", F.lit(False)).alias("suspend"),
-        F.when(F.col("mode").isNull() | (F.col("mode") == ""), "pull")
-        .otherwise(F.col("mode"))
-        .alias("mode"),
+        _mode_or_pull().alias("mode"),
         "rule_group",
         "rule_version",
         "rule_kind",
@@ -98,14 +116,28 @@ def validate_rules(rules: DataFrame) -> DataFrame:
     )
     reason = (
         F.when(bad_fields, "invalid sync_fields entry")
-        .when(
-            has_glob & ~legal_glob,
-            "glob only legal for version/kind when group is KCC (e.g. *.cnrm.cloud.google.com)",
-        )
+        .when(has_glob & ~legal_glob, INVALID_GLOB_MSG)
         .otherwise(F.lit(None).cast("string"))
     )
     return rules.withColumn("reject_reason", reason).withColumn(
         "valid", F.col("reject_reason").isNull()
+    )
+
+
+def active_rules(rules: DataFrame) -> DataFrame:
+    """The one rule gate: the normalized rules that run. A syncer with
+    ANY invalid or suspended rule runs none of them — the reference
+    returns before starting watchers on suspend (krmsyncer_controller.go:
+    83-93) and aborts the whole reconcile on a rule-expansion failure
+    (:238-246), which syncer_status publishes as Suspended/InvalidRule.
+    The poisoned syncers are a broadcast left-anti join on syncer_name;
+    their names are not deduplicated, since the anti-join does not need
+    it and a distinct costs one more Spark job. The result has the
+    RULE_SCHEMA columns."""
+    val = validate_rules(normalize_rules(rules))
+    bad = val.filter(~F.col("valid") | F.col("suspend")).select("syncer_name")
+    return val.join(F.broadcast(bad), "syncer_name", "left_anti").drop(
+        "reject_reason", "valid"
     )
 
 
@@ -195,21 +227,12 @@ def compile_sync(oplog: DataFrame, rules: DataFrame) -> DataFrame:
     the synced-change DataFrame: one output row per (event × matching
     active rule), projected and normalized. Works identically on a
     readStream op-log (the broadcast join and projection are
-    stream-compatible); deletes pass through with null payload."""
-    active = normalize_rules(rules)
-    active = validate_rules(active).filter("valid").filter(~F.col("suspend"))
-    active = active.select(
-        "syncer_name", "mode", "rule_group", "rule_version", "rule_kind",
-        "namespaces", "sync_fields",
-    )
+    stream-compatible); deletes pass through with null payload. Only
+    `active_rules` run: a syncer with any invalid or suspended rule
+    emits nothing, as its syncer_status condition reports."""
+    active = active_rules(rules)
     matched = oplog.join(F.broadcast(active), rule_match_condition(oplog, active))
     return project_sync_fields(matched)
-
-
-INVALID_GLOB_MSG = (
-    "glob only legal for version/kind when group is KCC "
-    "(e.g. *.cnrm.cloud.google.com)"
-)
 
 
 def syncer_status(
@@ -237,12 +260,8 @@ def syncer_status(
         F.sum((~F.col("valid")).cast("int")).cast("bigint").alias("n_invalid"),
         F.min(F.when(~F.col("valid"), F.col("reject_reason"))).alias("first_reject"),
     )
-    # A syncer with ANY invalid rule syncs nothing: the reference
-    # returns the expansion error before starting watchers (:238-246).
-    healthy = per.filter((F.col("suspended") == 0) & (F.col("n_invalid") == 0)).select(
-        "syncer_name"
-    )
-    active = val.join(F.broadcast(healthy), "syncer_name")
+    # matched GVKs and seqs come from the same gate compile_sync runs
+    active = active_rules(rules)
     gvks = (
         catalog.join(
             F.broadcast(active), rule_match_condition(catalog, active, check_namespace=False)
@@ -337,14 +356,10 @@ def syncer_routes(rules: DataFrame) -> dict[str, tuple[str, str, str | None]]:
         F.col("remote_secret") if "remote_secret" in cols
         else F.lit(None).cast("string")
     )
-    mode = (
-        F.when(F.col("mode").isNull() | (F.col("mode") == ""), "pull")
-        .otherwise(F.col("mode"))
-    )
     return {
         r["syncer_name"]: (r["m"], r["ns"], r["sec"])
         for r in rules.select(
-            "syncer_name", mode.alias("m"), ns.alias("ns"), secret.alias("sec")
+            "syncer_name", _mode_or_pull().alias("m"), ns.alias("ns"), secret.alias("sec")
         )
         .distinct()
         .collect()

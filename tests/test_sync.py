@@ -12,9 +12,13 @@ from pyspark.sql import functions as F
 
 from kube_etl_spark.streaming.cdc import StateTable
 from kube_etl_spark.streaming.sync import (
+    RULE_SCHEMA,
+    DestinationRegistry,
     compile_sync,
     normalize_rules,
+    sync_to_destinations,
     sync_to_state,
+    syncer_status,
     validate_rules,
 )
 
@@ -25,12 +29,6 @@ OBJ_SCHEMA = (
     "namespace string, name string, labels map<string,string>, "
     "annotations map<string,string>, "
     "spec struct<foo:string,resourceID:string>, status struct<bar:string>"
-)
-
-RULE_SCHEMA = (
-    "syncer_name string, suspend boolean, mode string, rule_group string, "
-    "rule_version string, rule_kind string, namespaces array<string>, "
-    "sync_fields array<string>"
 )
 
 
@@ -155,9 +153,51 @@ def test_case_pull_glob(spark, tmp_path):
 
 def test_case_suspend(spark, tmp_path):
     """cases/suspend: suspended syncer produces nothing (expected.yaml
-    is empty; krmsyncer_controller.go:83-93)."""
+    is empty; krmsyncer_controller.go:83-93). The gate is per syncer,
+    as syncer_status reports it: one suspended row suspends the whole
+    syncer, and one invalid rule aborts its whole reconcile (:238-246),
+    so neither writes anything through either write path while an
+    ordinary pull syncer beside them still syncs."""
     rule = ("ss", True, "push", "e2e.gkelabs.io", "v1alpha1", "TestCRD", None, None)
     assert _final_state(spark, tmp_path, [rule]) == {}
+
+    ok = ("ok", False, "pull", "e2e.gkelabs.io", "v1alpha1", "TestCRD", None, None)
+    gated = [
+        # the valid TestCRD rule would match obj1 on its own
+        ("bad", False, "push", "apps", "*", "Deployment", None, None),
+        ("bad", False, "push", "e2e.gkelabs.io", "v1alpha1", "TestCRD", None, None),
+        # the unsuspended glob row would match obj2 and obj3 on its own
+        ("half", True, "pull", "e2e.gkelabs.io", "v1alpha1", "TestCRD", None, None),
+        ("half", False, "pull", "*.cnrm.cloud.google.com", "*", "*", None, None),
+    ]
+    rules = _rules(spark, [ok, *gated])
+    changes = compile_sync(_oplog(spark), rules)
+    assert {r["syncer_name"] for r in changes.collect()} == {"ok"}
+    assert set(_final_state(spark, tmp_path, [ok, *gated])) == {"ok"}
+
+    local = StateTable(spark, str(tmp_path / "local"), KEYS, "seq")
+    remote = lambda cred: StateTable(spark, str(tmp_path / "remote"), KEYS, "seq")  # noqa: E731
+    written, skipped = sync_to_destinations(
+        changes, rules, local, DestinationRegistry(remote)
+    )
+    assert (set(written), skipped) == ({"ok"}, {})
+    assert {r["name"] for r in local.read().collect()} == {"obj1"}
+
+    catalog = spark.createDataFrame(
+        [("e2e.gkelabs.io", "v1alpha1", "TestCRD"),
+         ("kcc.cnrm.cloud.google.com", "v1beta1", "KCCResource")],
+        "group string, version string, kind string",
+    )
+    oplog = _oplog(spark).select("group", "version", "kind", "namespace", "seq")
+    status = {
+        r["syncer_name"]: (r["condition"], r["last_sync_seq"])
+        for r in syncer_status(rules, catalog, oplog).collect()
+    }
+    assert status == {
+        "ok": ("Active", 6),
+        "bad": ("InvalidRule", -1),
+        "half": ("Suspended", -1),
+    }
 
 
 def test_namespace_inlist(spark, tmp_path):
@@ -292,8 +332,6 @@ def test_syncer_status_conditions(spark):
     whole syncer (reconcile aborts before watchers start); matched-GVK
     count comes from discovery expansion; last_sync_seq honors the
     namespace in-list."""
-    from kube_etl_spark.streaming.sync import syncer_status
-
     rules = _rules(spark, [
         ("ok", False, "push", "e2e.gkelabs.io", "v1alpha1", "TestCRD", None, None),
         ("ok", False, "push", "*.cnrm.cloud.google.com", "*", "*", ["prod"], None),
@@ -330,8 +368,6 @@ def test_destination_registry_caches_per_namespace_secret(spark, tmp_path):
     are reused on every later lookup (getOrCreateRemoteCluster's cache,
     krmsyncer_controller.go:327-375); resolution failures are not cached
     so the next reconcile retries."""
-    from kube_etl_spark.streaming.sync import DestinationRegistry
-
     built = []
 
     def factory(cred):
@@ -369,11 +405,6 @@ def test_mode_routing_distinct_destinations(spark, tmp_path):
     pull-mode changes land in the LOCAL destination, and a push syncer
     whose secret can't resolve is skipped-and-reported, not fatal
     (:479-484). Two modes ⇒ two different state tables."""
-    from kube_etl_spark.streaming.sync import (
-        DestinationRegistry,
-        sync_to_destinations,
-    )
-
     rule_schema = RULE_SCHEMA + ", syncer_namespace string, remote_secret string"
     rules = spark.createDataFrame(
         [
@@ -518,8 +549,6 @@ def test_field_merge_end_to_end_disjoint_sync_fields(spark, tmp_path):
     shared local destination. With --field-merge semantics the local
     state carries BOTH projections; with default LWW one is lost
     (asserted, as the documented contrast)."""
-    from kube_etl_spark.streaming.sync import DestinationRegistry, sync_to_destinations
-
     rules = _rules(spark, [
         ("spec_writer", False, "pull", "e2e.gkelabs.io", "v1alpha1",
          "TestCRD", None, ["spec"]),
