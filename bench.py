@@ -145,6 +145,21 @@ def _timed(fn, runs: int = 3) -> float:
     return round(statistics.median(ts), 4)
 
 
+def _median_pass(apply, n_passes: int = 3) -> float:
+    """The median wall of ``apply(i)`` over passes ``i = 0..n_passes-1``,
+    each timed on its own. A streaming bench's passes each apply a
+    different batch to the state the earlier ones left. The median
+    keeps one noisy pass from deciding the number: timed as one block
+    of 3 batches, the flat IVM maintenance read 2.81-4.35 s across 8
+    runs of unchanged code (sf0.1, 4 cores)."""
+    ts = []
+    for i in range(n_passes):
+        t0 = time.perf_counter()
+        apply(i)
+        ts.append(time.perf_counter() - t0)
+    return round(statistics.median(ts), 4)
+
+
 # Checkpoint-heavy headliners (eager/lazy localCheckpoint in their
 # plan): their in-bench median carries first-run checkpoint-write cost
 # that can triple on the host's slow mode while the steady-state plan
@@ -369,7 +384,8 @@ def _neardup_bench(spark, sf_dir: str) -> dict[str, float]:
     """Streaming near-dup economics: an established index (the full
     corpus minus the synthesized copies) absorbs 3 trickle batches of
     newly-arriving high-id documents, flat state vs RANGE-bucketed
-    state, equal pair counts asserted.
+    state, equal pair counts asserted. Each batch is timed on its own
+    and a variant reports the median (``_median_pass``).
 
     Honest regime note (measured): at fixture scale the bucketed
     variant ties or trails the flat one (sf0.1 on 4 cores, medians of
@@ -411,12 +427,10 @@ def _neardup_bench(spark, sf_dir: str) -> dict[str, float]:
         ]:
             idx = NearDupIndex(spark, f"{root}/{name}", **kwargs)
             idx.ingest_batch(base, 0)
-            t0 = time.perf_counter()
-            for i in range(3):
-                batch = trickle.filter(F.col("doc_id") % 3 == i)
-                idx.ingest_batch(batch, 1 + i)
-            out[f"ingest_per_batch_{name}"] = round(
-                (time.perf_counter() - t0) / 3, 4
+            out[f"ingest_per_batch_{name}"] = _median_pass(
+                lambda i: idx.ingest_batch(
+                    trickle.filter(F.col("doc_id") % 3 == i), 1 + i
+                )
             )
             pair_counts[name] = idx.pairs_df().count()
         assert pair_counts["flat"] == pair_counts["bucketed"], pair_counts
@@ -438,7 +452,8 @@ def _ivm_bench(spark, sf_dir: str) -> dict[str, float]:
     recomputing the join from the state tables. Maintenance is
     dominated by the fact-state rewrite (O(state) parquet churn — the
     lakehouse-format upgrade path); the serve gap is the reason the
-    view exists."""
+    view exists. Each variant times 3 update batches one by one and
+    reports the median (``_median_pass``)."""
     import shutil
     import tempfile
 
@@ -467,17 +482,19 @@ def _ivm_bench(spark, sf_dir: str) -> dict[str, float]:
         mv.apply_dim_batch(cust.withColumn("op", F.lit("upsert")), 1)
         mv.apply_fact_batch(orders.withColumn("op", F.lit("upsert")), 2)
         # steady state: small fact update batches (~1% of orders each)
-        t0 = time.perf_counter()
-        n_batches = 3
-        for i in range(n_batches):
-            delta = orders.filter(F.col("o_orderkey") % 97 == i).select(
+        def bumped(delta):
+            return delta.select(
                 "o_orderkey",
                 "o_custkey",
                 (F.col("o_totalprice") * 1.01).alias("o_totalprice"),
                 F.lit("upsert").alias("op"),
             )
-            mv.apply_fact_batch(delta, 3 + i)
-        maintain_s = round((time.perf_counter() - t0) / n_batches, 4)
+
+        maintain_s = _median_pass(
+            lambda i: mv.apply_fact_batch(
+                bumped(orders.filter(F.col("o_orderkey") % 97 == i)), 3 + i
+            )
+        )
 
         # same maintenance with RANGE-bucketed state and a recent-keys
         # delta (the CDC-trickle shape): the batch lands in one bucket,
@@ -497,19 +514,16 @@ def _ivm_bench(spark, sf_dir: str) -> dict[str, float]:
         )
         mvb.apply_dim_batch(cust.withColumn("op", F.lit("upsert")), 1)
         mvb.apply_fact_batch(orders.withColumn("op", F.lit("upsert")), 2)
-        t0 = time.perf_counter()
-        for i in range(n_batches):
+
+        def recent(i):
             lo = int(max_key) - (i + 1) * 1500
-            delta = orders.filter(
+            return orders.filter(
                 (F.col("o_orderkey") > lo) & (F.col("o_orderkey") <= lo + 1500)
-            ).select(
-                "o_orderkey",
-                "o_custkey",
-                (F.col("o_totalprice") * 1.01).alias("o_totalprice"),
-                F.lit("upsert").alias("op"),
             )
-            mvb.apply_fact_batch(delta, 3 + i)
-        maintain_bucketed_s = round((time.perf_counter() - t0) / n_batches, 4)
+
+        maintain_bucketed_s = _median_pass(
+            lambda i: mvb.apply_fact_batch(bumped(recent(i)), 3 + i)
+        )
 
         serve_view = _timed(lambda: _materialize(mv.read()), runs=2)
         f, d = mv.fact.read(), mv.dim.read()

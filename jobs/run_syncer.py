@@ -40,7 +40,12 @@ OBJ_SCHEMA = (
 
 
 def load_rules(spark, path: str):
-    """Rules from YAML (if available) or JSON — config-as-data."""
+    """Rules from YAML (if available) or JSON — config-as-data. The
+    frame is JVM-local (``session.local_frame``), so the sync engine's
+    scans of it start no Python worker; each call is a new rules
+    generation."""
+    from kube_etl_spark.session import local_frame
+
     with open(path) as f:
         text = f.read()
     try:
@@ -60,7 +65,7 @@ def load_rules(spark, path: str):
         "rule_kind string, namespaces array<string>, "
         "sync_fields array<string>, remote_secret string"
     )
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)
 
 
 def main(argv: list[str]) -> None:
@@ -118,7 +123,7 @@ def main(argv: list[str]) -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from kube_etl_spark.session import configure
+    from kube_etl_spark.session import configure, local_frame
     from kube_etl_spark.streaming.cdc import (
         StateTable,
         atomic_overwrite,
@@ -260,7 +265,8 @@ def main(argv: list[str]) -> None:
 
     def _publish_status(rules, batch):
         cat = (
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(c["group"], c["version"], c["kind"]) for c in catalog_rows],
                 "group string, version string, kind string",
             )
@@ -318,7 +324,8 @@ def main(argv: list[str]) -> None:
                 )
                 return
             if prev_rows:
-                prev = spark.createDataFrame(
+                prev = local_frame(
+                    spark,
                     [(r["syncer_name"], r["last_sync_seq"]) for r in prev_rows],
                     "syncer_name string, __prev long",
                 )

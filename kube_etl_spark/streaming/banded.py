@@ -37,6 +37,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .cdc import StateTable, changed_ids, retract_pairs
 
 
@@ -201,8 +202,8 @@ class BandedPairIndex:
         a, b, v = self.pair_cols
         cur = self.pairs.read()
         if cur is None:
-            return self.spark.createDataFrame(
-                [], f"{a} bigint, {b} bigint, {v} {self.value_type}"
+            return local_frame(
+                self.spark, [], f"{a} bigint, {b} bigint, {v} {self.value_type}"
             )
         # the cast normalizes LEGACY simdup state dirs whose hamming
         # was written as double by earlier builds (merge unions widen

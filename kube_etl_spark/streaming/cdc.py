@@ -24,11 +24,14 @@ Spark design:
 Scale notes: the compaction is one hash shuffle of (old ∪ batch) on the
 key. A flat table's old side is the whole state; a bucketed one
 (``n_buckets``) reads and rewrites only the buckets the batch maps to,
-all in one write job.
+all in one write job. Every published version dir records the schema of
+its rows (``_schema.json``), so opening the state reads with it instead
+of running a Parquet schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -36,6 +39,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def atomic_write_json(path: str, obj: dict) -> None:
@@ -44,8 +48,6 @@ def atomic_write_json(path: str, obj: dict) -> None:
     one shared copy of the pattern — health.json, the writer lease,
     and any future control-plane artifact publish through here so the
     discipline can't drift between copies."""
-    import json
-
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(obj, f)
@@ -401,6 +403,52 @@ def owned_field_merge_winners(
     )
 
 
+# Beside the Parquet files of every published version dir: the schema
+# of its rows. Spark's file listing skips ``_``-prefixed names, so
+# readers that do not know the file never see it.
+SCHEMA_FILE = "_schema.json"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable —
+    the schema Spark's Parquet inference reports for the same files."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def write_schema(version: str, schema: StructType) -> None:
+    """Record the all-nullable ``schema`` of the rows in ``version``.
+    Called after the version's files are complete and before its
+    pointer swap. Nullable because a later merge may hold a null
+    (a tombstone, a column the batch lacks) where this batch declared
+    none, and the schema must describe every version a read unions."""
+    atomic_write_json(os.path.join(version, SCHEMA_FILE), _nullable(schema).jsonValue())
+
+
+def read_state_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    """Read version dirs with their recorded schema when every dir has
+    one and all agree; otherwise (dirs written before the schema was
+    recorded, or buckets whose schemas differ) infer it from the files
+    as Spark does, which costs one job."""
+    stored = []
+    for d in dirs:
+        try:
+            with open(os.path.join(d, SCHEMA_FILE)) as f:
+                stored.append(json.load(f))
+        except FileNotFoundError:
+            break
+    if len(stored) == len(dirs) and all(s == stored[0] for s in stored):
+        return spark.read.schema(StructType.fromJson(stored[0])).parquet(*dirs)
+    return spark.read.parquet(*dirs)
+
+
 def _layout_on_disk(path: str) -> bool | None:
     """The layout already at ``path``: False for the flat symlink
     publish, True for a bucketed directory (``bucket-*`` pointers or
@@ -547,8 +595,6 @@ class StateTable:
         (older sidecars) ≡ off; a sidecar-less state is stamped with
         the opener's spec (a one-time grandfather). Read-only handles
         never compact or route, so they skip the guard."""
-        import json
-
         spec: dict = {"version": 1}
         if self.bucketed:
             side = os.path.join(self.path, self._SIDECAR)
@@ -666,9 +712,12 @@ class StateTable:
         ]
 
     def _read_raw(self, buckets: list[int] | None = None) -> DataFrame | None:
-        """Persisted state INCLUDING delete tombstones (internal)."""
-        paths = self._live_paths(buckets)
-        return self.spark.read.parquet(*paths) if paths else None
+        """Persisted state INCLUDING delete tombstones (internal). The
+        live pointers are resolved once, so the recorded schema and the
+        files read come from the same version dirs even if a publish
+        swaps a pointer meanwhile."""
+        paths = [os.path.realpath(p) for p in self._live_paths(buckets)]
+        return read_state_dirs(self.spark, paths) if paths else None
 
     def read(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Live rows only — delete tombstones and per-field merge seqs
@@ -762,13 +811,17 @@ class StateTable:
                 ).cast("bigint"),
             )
         staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex[:8]}")
-        self._winners(
+        winners = self._winners(
             old, tagged, ["__b", *self.key_cols], op_col, delete_value
-        ).write.partitionBy("__b").parquet(staging)
+        )
+        winners.write.partitionBy("__b").parquet(staging)
+        # the partition column lives in the dir name, not in the files
+        schema = StructType([f for f in winners.schema.fields if f.name != "__b"])
         versions = []
         for b in touched:
             version = f"{self._bucket_path(b)}.v-{uuid.uuid4().hex[:8]}"
             os.rename(os.path.join(staging, f"__b={b}"), version)
+            write_schema(version, schema)
             open(os.path.join(version, "_SUCCESS"), "w").close()
             versions.append((version, self._bucket_path(b)))
         shutil.rmtree(staging, ignore_errors=True)  # only markers left
@@ -866,7 +919,7 @@ class StateTable:
             F.col(self.seq_cols[0]) < F.lit(int(before_seq))
         )
         for p in self._live_paths():
-            raw = self.spark.read.parquet(p)
+            raw = read_state_dirs(self.spark, [os.path.realpath(p)])
             if "__op" in raw.columns and raw.filter(dead_old).head(1):
                 atomic_overwrite(raw.filter(~dead_old), p, validate=self._fence())
 
@@ -916,6 +969,7 @@ def atomic_overwrite(df: DataFrame, path: str, validate=None) -> None:
             os.symlink(os.path.basename(orphans[-1]), path)
     version = f"{path}.v-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(version)
+    write_schema(version, df.schema)
     publish(version, path, validate)
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.sketches import CMS_W, cms_cells, cms_estimate
+from ..session import local_frame
 from .cdc import StateTable
 
 _BASELINE_BID = -1  # compact() folds history into this reserved row
@@ -110,7 +111,7 @@ class CountMinIndex:
         """The served d×w matrix: per-cell sum over batch deltas."""
         cur = self.cells.read()
         if cur is None:
-            return self.spark.createDataFrame([], "i int, bucket bigint, n bigint")
+            return local_frame(self.spark, [], "i int, bucket bigint, n bigint")
         return cur.groupBy("i", "bucket").agg(F.sum("n").alias("n"))
 
     def estimate(self, keys: DataFrame) -> DataFrame:

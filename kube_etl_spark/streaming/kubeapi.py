@@ -555,6 +555,7 @@ def relist_delta_rows(
     O(unmerged backlog)."""
     from pyspark.sql import functions as F
 
+    from ..session import local_frame
     from .cdc import StateTable, latest_op
 
     key_cols = ["group", "version", "kind", "namespace", "name"]
@@ -596,7 +597,8 @@ def relist_delta_rows(
         )
         .select(*key_cols)
     )
-    relisted = spark.createDataFrame(
+    relisted = local_frame(
+        spark,
         [
             (
                 target["group"], target["version"], target["kind"],
@@ -668,13 +670,15 @@ def cluster_export(
     control-plane-sized, so rows land via the driver into a DataFrame
     and the existing materialize_tree sink; the 100 TB path remains the
     partitioned-dataset run_export."""
+    from ..session import local_frame
+
     resources, errors = client.discover()
     rows = list(snapshot_rows(client, resources, page_size=page_size))
     schema = (
         "group string, version string, kind string, namespace string,"
         " name string, path string, payload string"
     )
-    df = spark.createDataFrame(rows, schema) if rows else None
+    df = local_frame(spark, rows, schema) if rows else None
     n_files = 0
     if df is not None:
         if serialization == "yaml":

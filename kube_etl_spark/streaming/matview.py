@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .cdc import StateTable
 
 
@@ -232,7 +233,7 @@ class MaterializedAgg:
         if not touched:
             return
         spark = batch.sparkSession
-        tg = spark.createDataFrame([(g,) for g in touched], group_schema)
+        tg = local_frame(spark, [(g,) for g in touched], group_schema)
         after = self.fact.read()
         present = (
             self._contrib(after.join(tg, self.group_col, "left_semi"))

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..queries.llm import _tokens
+from ..session import local_frame
 from .cdc import StateTable
 
 W = 10  # q_dedup_substring's window
@@ -210,7 +211,7 @@ class SubstringDupIndex:
         span_tokens) across everything ingested so far."""
         cur = self.spans.read()
         if cur is None:
-            return self.spark.createDataFrame(
-                [], "doc_id bigint, span_start bigint, span_tokens bigint"
+            return local_frame(
+                self.spark, [], "doc_id bigint, span_start bigint, span_tokens bigint"
             )
         return cur.select("doc_id", "span_start", "span_tokens")

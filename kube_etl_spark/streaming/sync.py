@@ -30,12 +30,20 @@ the whole pipeline is the per-destination MERGE compaction keyed on the
 object key. Glob expansion happens at plan time in the reference
 (discovery expansion); here the glob predicate is evaluated inside the
 broadcast join — same result, and Catalyst folds the rule constants.
+The rules are config, not data: `compile_sync`, `syncer_routes` and
+`syncer_status` read the caller's rules frame through
+`session.config_frame`, which collects it once per frame object into a
+JVM-local relation. Every later scan of that rules generation (the gate,
+the routes, the status rollups) then runs in the JVM, where a scan of a
+`createDataFrame(list)` frame would start Python workers each time.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import config_frame
 
 # Leading dot required: '*.evilcnrm.cloud.google.com' must NOT validate
 # (krmsyncer_controller.go:105-116 matches the '.cnrm.…' dotted family).
@@ -230,7 +238,7 @@ def compile_sync(oplog: DataFrame, rules: DataFrame) -> DataFrame:
     stream-compatible); deletes pass through with null payload. Only
     `active_rules` run: a syncer with any invalid or suspended rule
     emits nothing, as its syncer_status condition reports."""
-    active = active_rules(rules)
+    active = active_rules(config_frame(rules))
     matched = oplog.join(F.broadcast(active), rule_match_condition(oplog, active))
     return project_sync_fields(matched)
 
@@ -253,6 +261,7 @@ def syncer_status(
     sides broadcast; the only data-sized input is the op-log, reduced
     map-side to MAX(seq) per syncer.
     """
+    rules = config_frame(rules)
     val = validate_rules(normalize_rules(rules))
     per = val.groupBy("syncer_name").agg(
         F.max(F.col("suspend").cast("int")).alias("suspended"),
@@ -345,7 +354,10 @@ def syncer_routes(rules: DataFrame) -> dict[str, tuple[str, str, str | None]]:
     sit in the CR's own namespace (getRemoteClient,
     krmsyncer_controller.go:540-545). Driver-side collect is correct
     here: the rule table is the tiny config relation the reference
-    re-Lists on every event."""
+    re-Lists on every event. The collect runs on the JVM-local copy
+    (``config_frame``); duplicate rows of one syncer collapse in the
+    dict, so no distinct job is needed."""
+    rules = config_frame(rules)
     cols = rules.columns
     ns = (
         F.coalesce(F.col("syncer_namespace"), F.lit("default"))
@@ -360,9 +372,7 @@ def syncer_routes(rules: DataFrame) -> dict[str, tuple[str, str, str | None]]:
         r["syncer_name"]: (r["m"], r["ns"], r["sec"])
         for r in rules.select(
             "syncer_name", _mode_or_pull().alias("m"), ns.alias("ns"), secret.alias("sec")
-        )
-        .distinct()
-        .collect()
+        ).collect()
     }
 
 

@@ -350,3 +350,52 @@ def test_partition_dependent_expressions_stay_fenced():
     )
     # the fence itself must still exist where we think it does
     assert any("queries/scale.py" in h for h in hits), hits
+
+
+def test_streaming_driver_frames_are_local_relations():
+    """Source-level fence for Python-fed scans on the streaming path: a
+    ``spark.createDataFrame(<list>)`` frame plans as a scan that Python
+    workers feed, so every job over it starts them (0.25-0.35 s a scan
+    warm on 4 cores, against about 0.01 s for a JVM-local relation).
+    Small frames built on the driver under ``kube_etl_spark/streaming/``
+    and in ``jobs/run_syncer.py`` go through ``session.local_frame``.
+    It and ``session.config_frame`` (which rebuilds collected JVM rows
+    with the JVM session's ``createDataFrame``) hold the only sanctioned
+    calls. Calls are found in the syntax tree, so docstrings and
+    comments that name the API pass."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [
+        *sorted((root / "kube_etl_spark" / "streaming").rglob("*.py")),
+        root / "jobs" / "run_syncer.py",
+        root / "kube_etl_spark" / "session.py",
+    ]
+    hits = []
+    for py in files:
+        rel = py.relative_to(root).as_posix()
+        tree = ast.parse(py.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner.setdefault(node, fn.name)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                hits.append((rel, owner.get(node), node.lineno))
+    fence = {
+        ("kube_etl_spark/session.py", "local_frame"),
+        ("kube_etl_spark/session.py", "config_frame"),
+    }
+    bad = [h for h in hits if h[:2] not in fence]
+    assert not bad, (
+        "createDataFrame outside session.local_frame on the streaming "
+        f"path (build the frame with local_frame): {bad}"
+    )
+    # the fence itself must still exist where we think it does
+    assert {h[:2] for h in hits} == fence, hits

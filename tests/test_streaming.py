@@ -2251,3 +2251,159 @@ def test_snapshot_diff_source_rejects_schema_drift(spark, tmp_path):
     retyped = spark.createDataFrame([(1, 9)], "k long, v long")
     with pytest.raises(ValueError, match=r"retyped=.*'v', 'string', 'bigint'"):
         src.apply(retyped, seq=2)
+
+
+# -- recorded state schemas: each version dir carries _schema.json ------
+
+_SCHEMA_ROWS = "k long, a string, b struct<x:string,y:array<long>>, mgr string, seq long, op string"
+
+
+def _schema_batches(spark):
+    first = [
+        (k, f"a{k}", (f"x{k}", [k, None]), "m1", 1, "upsert") for k in range(30)
+    ]
+    second = [
+        (3, None, None, "m1", 2, "delete"),
+        (5, "a5'", None, "m1", 2, "upsert"),
+        (41, None, (None, []), "m2", 2, "upsert"),
+    ]
+    return [spark.createDataFrame(rows, _SCHEMA_ROWS) for rows in (first, second)]
+
+
+def _jobs_run(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "layout", ["flat", "hash", "range", "field_merge", "manager_col"]
+)
+def test_state_read_schema_matches_parquet_inference(spark, tmp_path, layout):
+    """Every published version dir records its schema, and opening the
+    state reads with it: the schema ``read()`` and the tombstone-keeping
+    raw read return equals what Spark's Parquet inference reports for
+    the same dirs, in every layout and merge mode, and building either
+    frame runs no Spark job (inference costs one)."""
+    kw = {
+        "flat": {},
+        "hash": {"n_buckets": 4},
+        "range": {"n_buckets": 8, "bucket_col": F.floor(F.col("k") / 10)},
+        "field_merge": {"field_merge": ["a", "b"]},
+        "manager_col": {"field_merge": ["a", "b"], "manager_col": "mgr"},
+    }[layout]
+    t = StateTable(spark, str(tmp_path / "t"), ["k"], "seq", **kw)
+    for batch in _schema_batches(spark):
+        t.merge_batch(batch)
+    dirs = [os.path.realpath(p) for p in t._live_paths()]
+    assert dirs and all(os.path.exists(os.path.join(d, "_schema.json")) for d in dirs)
+    inferred = spark.read.parquet(*dirs)
+
+    group = f"schema-read-{layout}-{tmp_path.name}"
+    (raw, live), jobs = _jobs_run(spark, group, lambda: (t._read_raw(), t.read()))
+    assert jobs == 0
+    assert raw.schema == inferred.schema
+    assert live.schema == inferred.drop(
+        *[c for c in inferred.columns if c not in live.columns]
+    ).schema
+    assert sorted(map(repr, raw.collect())) == sorted(
+        map(repr, inferred.select(*raw.columns).collect())
+    )
+    got = {r["k"]: r for r in live.collect()}
+    assert 3 not in got and got[5]["a"] == "a5'" and 41 in got and len(got) == 30
+
+
+@pytest.mark.parametrize("layout", [{}, {"n_buckets": 4}])
+def test_state_schema_file_is_all_nullable(spark, tmp_path, layout):
+    """The recorded schema is all-nullable even where the batch declares
+    columns, struct fields and array elements non-nullable: a later
+    merge's tombstone holds nulls there (a delete batch carries no
+    payload), and one schema has to describe every version a read
+    unions. The tombstone's null payload reads back as null."""
+    import json
+
+    from pyspark.sql.types import (
+        ArrayType, LongType, StringType, StructField, StructType,
+    )
+
+    strict = StructType([
+        StructField("k", LongType(), False),
+        StructField("v", StringType(), False),
+        StructField("s", StructType([StructField("x", StringType(), False)]), False),
+        StructField("tags", ArrayType(StringType(), False), False),
+        StructField("seq", LongType(), False),
+        StructField("op", StringType(), False),
+    ])
+    t = StateTable(spark, str(tmp_path / "t"), ["k"], "seq", **layout)
+    t.merge_batch(spark.createDataFrame(
+        [(k, f"v{k}", (f"x{k}",), ["t"], 1, "upsert") for k in range(1, 9)], strict
+    ))
+    t.merge_batch(spark.createDataFrame([(1, 2, "delete")], "k long, seq long, op string"))
+
+    def all_nullable(t) -> bool:
+        kind = t["type"] if isinstance(t, dict) else None
+        if kind == "struct":
+            return all(f["nullable"] and all_nullable(f["type"]) for f in t["fields"])
+        if kind == "array":
+            return t["containsNull"] and all_nullable(t["elementType"])
+        if kind == "map":
+            return t["valueContainsNull"] and all_nullable(t["valueType"])
+        return True
+
+    stored = []
+    for d in t._live_paths():
+        with open(os.path.join(d, "_schema.json")) as f:
+            stored.append(json.load(f))
+    assert all(all_nullable(s) for s in stored), stored
+    # buckets written by the strict batch and by the delete agree, so
+    # the read uses the recorded schema rather than inferring
+    assert all(s == stored[0] for s in stored)
+    raw = {r["k"]: r for r in t._read_raw().collect()}
+    assert raw[1]["__op"] == "delete"
+    assert raw[1]["v"] is None and raw[1]["s"] is None and raw[1]["tags"] is None
+    assert raw[2]["s"]["x"] == "x2" and raw[2]["tags"] == ["t"]
+    assert sorted(r["k"] for r in t.read().collect()) == list(range(2, 9))
+
+
+@pytest.mark.parametrize("layout", [{}, {"n_buckets": 4}])
+def test_state_without_schema_files_opens_merges_and_gains_them(spark, tmp_path, layout):
+    """A state dir written before version dirs recorded their schema
+    (no ``_schema.json`` anywhere) opens by inference, merges to the
+    same rows as a state that had the files all along, and every dir
+    that merge publishes gains the file. A bucketed state then holds
+    dirs with and without it, and the read infers across both."""
+    first, second = _schema_batches(spark)
+    ref = StateTable(spark, str(tmp_path / "ref" / "t"), ["k"], "seq", **layout)
+    ref.merge_batch(first)
+    legacy_root = tmp_path / "legacy"
+    StateTable(spark, str(legacy_root / "t"), ["k"], "seq", **layout).merge_batch(first)
+    for root, _dirs, files in os.walk(legacy_root):
+        if "_schema.json" in files:
+            os.remove(os.path.join(root, "_schema.json"))
+
+    legacy = StateTable(spark, str(legacy_root / "t"), ["k"], "seq", **layout)
+
+    def rows(t):
+        return sorted(map(repr, t._read_raw().select(*ref._read_raw().columns).collect()))
+
+    assert rows(legacy) == rows(ref)
+    legacy.merge_batch(second)
+    ref.merge_batch(second)
+    assert rows(legacy) == rows(ref)
+    assert sorted(map(repr, legacy.read().collect())) == sorted(map(repr, ref.read().collect()))
+    has = {
+        os.path.basename(p): os.path.exists(os.path.join(p, "_schema.json"))
+        for p in legacy._live_paths()
+    }
+    touched = (
+        {os.path.basename(legacy.path)}
+        if not layout
+        else {f"bucket-{b:06d}" for b in legacy.buckets_for(second)}
+    )
+    assert {p for p, h in has.items() if h} == touched

@@ -1113,3 +1113,99 @@ def test_owned_merge_null_manager_cannot_null_a_field(spark, tmp_path):
     own = {r["field"]: r for r in t.ownership().collect()}
     assert own["spec"]["owner"] == "mgr-a"
     assert own["spec"]["conflicts"] == 0  # not a contest at all
+
+
+def test_rules_frame_read_once_per_frame(spark, tmp_path):
+    """The rules are config: one compile_sync → sync_to_destinations →
+    syncer_status round scans a caller's rules frame ONCE (into the
+    JVM-local copy every later step reads), not once per gate, route
+    and status rollup. A new frame object is a new rules generation and
+    is read anew. The frame is fed by a Python RDD whose accumulator
+    counts every row a scan pulls through a Python worker."""
+    from kube_etl_spark.session import config_frame
+
+    sc = spark.sparkContext
+    pulled = sc.accumulator(0)
+
+    def tick(row):
+        pulled.add(1)
+        return row
+
+    rows = [
+        ("ok", False, "pull", "e2e.gkelabs.io", "v1alpha1", "TestCRD", None, ["spec"]),
+        ("glob", False, "pull", "*.cnrm.cloud.google.com", "*", "*", ["prod"], None),
+        ("off", True, "pull", "e2e.gkelabs.io", "v1alpha1", "TestCRD", None, None),
+    ]
+
+    def generation():
+        return spark.createDataFrame(sc.parallelize(rows, 1).map(tick), RULE_SCHEMA)
+
+    catalog = spark.createDataFrame(
+        [("e2e.gkelabs.io", "v1alpha1", "TestCRD")], "group string, version string, kind string"
+    )
+    oplog = _oplog(spark)
+    key_cols = ["group", "version", "kind", "namespace", "name"]
+    local = StateTable(spark, str(tmp_path / "local"), key_cols, "seq")
+
+    def one_batch(rules):
+        changes = compile_sync(oplog, rules)
+        written, skipped = sync_to_destinations(
+            changes, rules, local, DestinationRegistry(lambda cred: None)
+        )
+        status = syncer_status(rules, catalog, oplog).collect()
+        return written, skipped, {r["syncer_name"]: r["condition"] for r in status}
+
+    rules = generation()
+    written, skipped, status = one_batch(rules)
+    assert pulled.value == len(rows)
+    assert set(written) == {"ok", "glob"} and not skipped
+    assert status == {"ok": "Active", "glob": "Active", "off": "Suspended"}
+    one_batch(rules)  # the same generation again: no rescan
+    assert pulled.value == len(rows)
+    one_batch(generation())  # a hot reload builds a new frame
+    assert pulled.value == 2 * len(rows)
+    # the copy every step scans is a LocalRelation holding the same rows
+    copy = config_frame(rules)
+    assert copy is config_frame(rules)
+    plan = copy._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert copy.schema == rules.schema
+    assert sorted(copy.collect()) == sorted(spark.createDataFrame(rows, RULE_SCHEMA).collect())
+    assert pulled.value == 2 * len(rows)
+    # the state is what the ok/glob syncers projected
+    assert {r["name"] for r in local.read().collect()} == {"obj1", "obj2"}
+
+
+def test_local_frame_round_trips_nulls_and_plans_locally(spark):
+    """``session.local_frame`` keeps driver rows in the JVM plan (a
+    LocalRelation, no Python-fed scan) whether Arrow execution is on or
+    off, and round-trips null scalars, null arrays vs arrays holding a
+    null, structs, maps and an empty row list."""
+    from kube_etl_spark.session import local_frame
+
+    schema = (
+        "a string, b boolean, ns array<string>, m map<string,string>, "
+        "st struct<x:string,y:bigint>"
+    )
+    rows = [
+        ("x", None, None, {"k": "v"}, ("p", 1)),
+        (None, True, [None], None, None),
+        ("z", False, [], {}, (None, 2)),
+    ]
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            df = local_frame(spark, rows, schema)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.startswith("LocalRelation"), plan
+            got = [
+                (r.a, r.b, r.ns, r.m, None if r.st is None else tuple(r.st))
+                for r in df.collect()
+            ]
+            assert got == rows
+            empty = local_frame(spark, [], schema)
+            assert empty.collect() == [] and empty.schema == df.schema
+    finally:
+        spark.conf.set(key, prev)
